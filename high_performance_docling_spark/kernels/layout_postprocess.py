@@ -61,6 +61,7 @@ from ..geometry import pairwise_overlap_mask, union_find_groups
 from .spatial_index import GRID_CUTOVER as _GRID_CUTOVER
 
 _MAXIDX = sys.maxsize
+BASE_THRESHOLD = 0.3  # detector base threshold (layout_predictor_gpu.py)
 
 
 def _box(c: dict[str, Any]) -> tuple[float, float, float, float]:
@@ -142,7 +143,7 @@ def postfilter_detections(
     dets: list[dict],
     page_w: float,
     page_h: float,
-    base_threshold: float = 0.3,
+    base_threshold: float = BASE_THRESHOLD,
     blacklist: frozenset[str] = frozenset(),
 ) -> list[dict]:
     """Raw-detector output filter (layout_predictor_gpu.py:303-312, the
@@ -494,17 +495,17 @@ def postprocess_page(
     id, label, l, t, r, b, confidence, cells (sorted by index) and
     children (list of child clusters, same shape, empty below one level).
     """
-    # predictor-side postfilter (base threshold + blacklist + page clamp,
-    # layout_predictor_gpu.py:303-312) fused into the cluster build —
-    # one dict per surviving detection instead of postfilter's
-    # intermediate copy plus a second construction; same filter,
-    # identical clamp arithmetic (postfilter_detections itself stays the
-    # standalone kernel for the staged/detect path and its tests)
+    # predictor-side postfilter (layout_predictor_gpu.py:303-312) fused
+    # into the cluster build — one dict per surviving detection instead of
+    # postfilter's intermediate copy. Same filter as postfilter_detections
+    # at its defaults (BASE_THRESHOLD, empty blacklist), identical clamp
+    # arithmetic; only tests call postfilter_detections, pinning the two.
     regular: list[dict] = []
     special: list[dict] = []
     max_input_id = 0
+    base_threshold = BASE_THRESHOLD
     for c in raw_clusters:
-        if c["confidence"] < 0.3:
+        if c["confidence"] < base_threshold:
             continue
         l = float(c["l"])
         t = float(c["t"])

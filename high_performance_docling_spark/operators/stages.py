@@ -1,22 +1,27 @@
 """Pipeline stages as vectorized Arrow UDF DataFrame transforms.
 
-Stage DAG (SURVEY.md §7):
+Two execution modes (pipeline.extract_spans) over one page-batch core
+(kernels/convert.process_page_batch):
 
-  S0 docs      (doc_id, spans[])                      input corpus
-  S1 parse     docs → pages (cells + detections)      mapInPandas, 1→N rows
-  S2+S3+S6     pages → page elements                  mapInPandas, 1→1 rows
-  S7 assemble  elements → (doc_id, spans_out[])       groupBy(doc_id).applyInPandas
+  fused (default)  docs → ordered spans         doc_fused_stage, ONE
+                                                mapInPandas, zero shuffles
+  checkpointed     each boundary materialized to parquet, resumable:
+    S1 parse       docs → pages (cells + typeset elements)   mapInPandas, 1→N rows
+    S2 detect      pages → pages + raw detections            mapInArrow (model harness)
+    S3+S5+S6       pages → page elements                     mapInPandas, 1→1 rows
+    S7 assemble    elements → (doc_id, spans_out[])          repartition(doc_id) + mapInPandas
 
 Scale design:
-  - S1 explodes documents to page grain immediately, so a 400-page
-    mega-doc becomes 400 independent rows — skew from long documents is
-    handled by repartitioning the page table, not by bigger tasks
-    (reference analogue: batch splitter, lambda_preprocessor.py:47-58).
-  - S2/S3/S6 are narrow (no shuffle): Catalyst pipelines the chained
-    mapInPandas stages into one pass over each partition.
-  - The ONLY shuffle in the whole pipeline is the final groupBy(doc_id);
-    elements are text-sized (images/cells already dropped), so the
-    shuffled payload is small.
+  - Fused: a document is self-contained, so every kernel runs doc-locally
+    and the stage scales with cores; a mega-document is one task.
+  - Checkpointed: S1 explodes documents to page grain, so a 400-page
+    mega-doc becomes 400 independent rows for the model and layout
+    stages (reference analogue: batch splitter,
+    lambda_preprocessor.py:47-58). Each stage is its own job over the
+    previous stage's parquet, so no two Python stages chain in one task.
+  - The only shuffle is S7's repartition(doc_id); elements are
+    text-sized (images/cells already dropped), so the shuffled payload
+    is small.
   - Inside each stage the work is batched NumPy/Python over Arrow record
     batches — no per-row Python UDFs (input_hint requirement).
 """
@@ -32,26 +37,29 @@ from typing import Any
 
 import pandas as pd
 
-_OFFSET_KEY = itemgetter("offset")
-
 from ..corpus import (
     GenConfig,
     TypesetPage,
     element_from_dict,
     element_to_dict,
-    synth_detections,
     typeset,
 )
+from ..kernels import spatial_index
 from ..kernels.assemble import assemble_page_elements
-from ..kernels.convert import process_page_batch, process_parsed_batch
-from ..kernels.reading_order import assemble_spans
+from ..kernels.convert import layout_detector, process_page_batch
+from ..oracle import assemble_doc_spans, extract_doc_result
 from ..schemas import (
+    ELEMENTS_CONF_SCHEMA,
     ELEMENTS_SCHEMA,
     PAGES_SCHEMA,
     PARSED_PAGES_SCHEMA,
+    SPANS_CONF_SCHEMA,
     SPANS_OUT_SCHEMA,
 )
-from .model_harness import ModelSpec, arrow_model_stage
+from .model_harness import arrow_model_stage
+
+_OFFSET_KEY = itemgetter("offset")
+_ELEMENT_KEYS = ("label", "l", "t", "r", "b", "text", "media_ref", "children")
 
 
 def _write_lineage_ms(
@@ -69,384 +77,85 @@ def _write_lineage_ms(
     except Exception:
         pid = -1
     os.makedirs(lineage_dir, exist_ok=True)
-    row = {
-        "stage": stage,
-        "partition_id": pid,
-        "input_rows": n_in,
-        "output_rows": n_out,
-        "wall_ms": wall_ms,
-    }
+    row = {"stage": stage, "partition_id": pid, "input_rows": n_in,
+           "output_rows": n_out, "wall_ms": wall_ms}
     fname = f"{stage.replace('/', '.')}-{pid}-{os.getpid()}.jsonl"
     with open(os.path.join(lineage_dir, fname), "a") as f:
         f.write(json.dumps(row) + "\n")
 
 
-def _write_lineage(lineage_dir: str | None, stage: str, n_in: int, n_out: int, t0: float) -> None:
-    _write_lineage_ms(
-        lineage_dir, stage, n_in, n_out, (time.monotonic() - t0) * 1000.0
-    )
+class _TaskLineage:
+    """One Python task's lineage epilogue, created when the task starts:
+    ``finish`` writes the stage row, one row per timed phase (the
+    reference's stage-timer dump, gpu_processor.py:333-363) and, when a
+    page went past GRID_CUTOVER, a ``<stage>/grid_pages`` evidence row.
+    ``timers`` is None without a lineage dir, so untimed runs pay
+    nothing."""
+
+    def __init__(self, lineage_dir: str | None, stage: str):
+        self.lineage_dir = lineage_dir
+        self.stage = stage
+        self.t0 = time.monotonic()
+        self.grid0 = spatial_index.GRID_CALLS
+        self.timers: dict[str, float] | None = {} if lineage_dir else None
+
+    def finish(self, n_in: int, n_out: int) -> None:
+        if not self.lineage_dir:
+            return
+        wall_ms = (time.monotonic() - self.t0) * 1000.0
+        _write_lineage_ms(self.lineage_dir, self.stage, n_in, n_out, wall_ms)
+        for phase, ms in sorted(self.timers.items()):
+            _write_lineage_ms(self.lineage_dir, f"{self.stage}/{phase}",
+                              n_in, n_out, ms)
+        grid = spatial_index.GRID_CALLS - self.grid0
+        if grid:
+            _write_lineage_ms(self.lineage_dir, f"{self.stage}/grid_pages",
+                              grid, grid, 0.0)
 
 
 # --------------------------------------------------------------------------
-# S1: parse — docs → pages (the synthetic "PDF backend" scan)
-# --------------------------------------------------------------------------
-
-def parse_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
-                with_detections: bool = True):
-    """(doc_id, spans[]) → one row per page.
-
-    with_detections=True (legacy single-stage form): cells + raw
-    detections, the synthetic detector invoked inline.
-    with_detections=False (staged model path): cells + typeset `elements`
-    (this corpus's stand-in for the rendered page image); detection runs
-    in the separate :func:`detect_stage` model stage.
-
-    Reference analogue: per-page load/parse (lambda_preprocessor.py:15-44);
-    the detect stage mirrors layout_predictor_gpu.py:253-315.
-    """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t0 = time.monotonic()
-        n_in = n_out = 0
-        cols = ["doc_id", "page_no", "width", "height", "cells",
-                "detections" if with_detections else "elements"]
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                n_in += 1
-                span_list = [dict(s) for s in spans]
-                span_list.sort(key=lambda s: s["offset"])
-                pages = typeset(doc_id, span_list, cfg)
-                for page in pages:
-                    row = {
-                        "doc_id": doc_id,
-                        "page_no": page.page_no,
-                        "width": page.width,
-                        "height": page.height,
-                        "cells": page.cells,
-                    }
-                    if with_detections:
-                        row["detections"] = synth_detections(doc_id, page, cfg)
-                    else:
-                        row["elements"] = [element_to_dict(e) for e in page.elements]
-                    rows.append(row)
-            n_out += len(rows)
-            yield pd.DataFrame(rows, columns=cols)
-        _write_lineage(lineage_dir, "parse", n_in, n_out, t0)
-
-    return docs_df.mapInPandas(
-        fn, PAGES_SCHEMA if with_detections else PARSED_PAGES_SCHEMA
-    )
-
-
-# --------------------------------------------------------------------------
-# S2: layout detection — a batched model stage through the generic harness
-# --------------------------------------------------------------------------
-
-class SynthLayoutDetector:
-    """Executor-local singleton 'model'. A real deployment replaces this
-    class with the RT-DETR load (weights, processor, warm-up —
-    layout_predictor_gpu.py:92-137) and predict_batch with one batched
-    forward; the Spark stage around it does not change."""
-
-    def __init__(self, cfg: GenConfig):
-        self.cfg = cfg
-        self.n_forward_calls = 0
-
-    def predict_batch(self, items: list[tuple[str, TypesetPage]]) -> list[list[dict]]:
-        # ONE batched forward pass per call (the GPU-inference slot)
-        self.n_forward_calls += 1
-        return [synth_detections(doc_id, page, self.cfg) for doc_id, page in items]
-
-
-def detect_stage(parsed_df, cfg: GenConfig, lineage_dir: str | None = None,
-                 batch_size: int = 32):
-    """Parsed pages (with typeset `elements`) → pages with detections.
-
-    Runs through the generic model harness: executor-local lazy singleton
-    detector, pages accumulated across Arrow record batches into
-    fixed-size ``batch_size`` model calls, tail padded by repeating the
-    last page (layout_predictor_gpu.py:267-275 semantics).
-
-    ``cfg.detector`` selects the model behind the UNCHANGED harness:
-    "synth" replays ground-truth boxes + recoverable noise; "conv" runs
-    the real-math conv detector — each page renders to a float32 CHW
-    raster in item_fn, pad-by-repeat repeats actual image tensors, and
-    one NCHW batch flows through a genuine convolution forward per
-    ⌈N/batch_size⌉ calls (kernels/toy_models.ConvLayoutDetector)."""
-    if cfg.detector == "conv":
-        from ..kernels.toy_models import ConvLayoutDetector
-
-        spec = ModelSpec(
-            name="conv-layout-detector",
-            loader=ConvLayoutDetector,
-            batch_size=batch_size,
-            pad_by_repeat=True,
-        )
-
-        def item_fn(row: dict):
-            from ..kernels.toy_models import render_detect_input
-
-            return render_detect_input(
-                float(row["width"]), float(row["height"]), row["elements"]
-            )
-
-        def forward(model, items: list) -> list:
-            return model.predict_batch(items)
-    else:
-        spec = ModelSpec(
-            name=f"synth-layout-detector:{cfg!r}",  # full cfg: any field changes detector behavior
-            loader=lambda: SynthLayoutDetector(cfg),
-            batch_size=batch_size,
-            pad_by_repeat=True,  # a CUDA-graph model needs static batch shape
-        )
-
-        def item_fn(row: dict) -> tuple[str, TypesetPage]:
-            page = TypesetPage(
-                page_no=int(row["page_no"]),
-                width=float(row["width"]),
-                height=float(row["height"]),
-                # the detector reads cell geometry for the marker-only
-                # split noise case — must match the inline path exactly
-                cells=[dict(c) for c in row["cells"]],
-                elements=[element_from_dict(d, int(row["page_no"]))
-                          for d in row["elements"]],
-            )
-            return (row["doc_id"], page)
-
-        def forward(model: SynthLayoutDetector, items: list) -> list:
-            return model.predict_batch(items)
-
-    def result_fn(row: dict, dets: list[dict]) -> dict:
-        return {
-            "doc_id": row["doc_id"],
-            "page_no": row["page_no"],
-            "width": row["width"],
-            "height": row["height"],
-            "cells": row["cells"],
-            "detections": dets,
-        }
-
-    t0 = time.monotonic()
-
-    def on_complete(n_rows: int, n_forwards: int) -> None:
-        _write_lineage(lineage_dir, "detect", n_rows, n_rows, t0)
-
-    return arrow_model_stage(parsed_df, spec, item_fn, forward, result_fn,
-                             PAGES_SCHEMA, on_complete=on_complete)
-
-
-# --------------------------------------------------------------------------
-# S2+S3+S6: layout postprocess + page assembly — pages → page elements
-# --------------------------------------------------------------------------
-
-def layout_stage(pages_df, cfg: GenConfig, lineage_dir: str | None = None,
-                 with_confidence: bool = False):
-    """One row per page in, one row per page out: layout post-processing
-    (layout_postprocessor.py port), table-structure decoding batched
-    ACROSS the pages of each Arrow batch (mirrors the reference's ≤128
-    cross-page table batches, tablemodel04_rs.py:186-202), then page
-    assembly (page_assemble_model.py port). Narrow — no shuffle.
-    ``with_confidence`` adds the per-page PageConfidenceScores struct
-    (see convert_stage) — it rides the elements checkpoint too."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import spatial_index as _si
-
-        t0 = time.monotonic()
-        n = 0
-        grid0 = _si.GRID_CALLS
-        for pdf in batches:
-            rows = []
-            for doc_id, page_no, width, height, cells, dets in zip(
-                pdf["doc_id"], pdf["page_no"], pdf["width"], pdf["height"],
-                pdf["cells"], pdf["detections"],
-            ):
-                n += 1
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "page_no": int(page_no),
-                        "width": float(width),
-                        "height": float(height),
-                        "cells": [dict(c) for c in cells],
-                        "detections": [dict(d) for d in dets],
-                    }
-                )
-            page_clusters = process_parsed_batch(rows, cfg)
-            out_elements = []
-            out_conf = []
-            for row, clusters in zip(rows, page_clusters):
-                doc_id, page_no = row["doc_id"], row["page_no"]
-                els = assemble_page_elements(doc_id, page_no, clusters)
-                out_elements.append(
-                    [
-                        {
-                            "label": e["label"],
-                            "l": e["l"], "t": e["t"], "r": e["r"], "b": e["b"],
-                            "text": e["text"],
-                            "media_ref": e["media_ref"],
-                            "children": e["children"],
-                        }
-                        for e in els
-                    ]
-                )
-                if with_confidence:
-                    from ..kernels.confidence import page_confidence
-
-                    out_conf.append(page_confidence(page_no, clusters))
-            data = {
-                "doc_id": pdf["doc_id"],
-                "page_no": pdf["page_no"],
-                "elements": out_elements,
-            }
-            if with_confidence:
-                data["page_confidence"] = out_conf
-            yield pd.DataFrame(data)
-        _write_lineage(lineage_dir, "layout", n, n, t0)
-        if _si.GRID_CALLS > grid0:
-            # evidence row: this partition had page(s) past GRID_CUTOVER
-            _write_lineage_ms(lineage_dir, "layout/grid_pages",
-                              _si.GRID_CALLS - grid0,
-                              _si.GRID_CALLS - grid0, 0.0)
-
-    from ..schemas import ELEMENTS_CONF_SCHEMA
-
-    return pages_df.mapInPandas(
-        fn, ELEMENTS_CONF_SCHEMA if with_confidence else ELEMENTS_SCHEMA
-    )
-
-
-# --------------------------------------------------------------------------
-# fused S1+S2+S3+S6: docs → page elements in ONE Python stage
-# --------------------------------------------------------------------------
-
-def convert_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
-                  with_confidence: bool = False):
-    """Parse + layout + tables + page assembly fused into a single
-    mapInPandas stage (docs in, page-element rows out).
-
-    ``with_confidence`` computes PageConfidenceScores HERE — the page
-    grain, where the post-processed clusters still exist — and ships one
-    struct per page row (a partial aggregation); doc assembly folds them
-    into the ConfidenceReport. This is how the staged path carries
-    confidence without re-deriving clusters after the shuffle.
-
-    Why fused: chaining two mapInPandas transforms runs TWO Python workers
-    per task slot (the JVM pipes batches through both), which at local[C]
-    oversubscribes the machine ~3× and *inverts* scaling. One worker per
-    slot keeps the stage CPU-bound at exactly the configured parallelism,
-    and skips one full Arrow round-trip of the (heavy) cells column. The
-    unfused stages remain for the checkpointed/resumable path, where they
-    materialize to parquet anyway.
-    """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import spatial_index as _si
-
-        t0 = time.monotonic()
-        n_in = n_out = 0
-        grid0 = _si.GRID_CALLS
-        for pdf in batches:
-            items: list[tuple[str, object]] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                n_in += 1
-                span_list = [dict(s) for s in spans]
-                span_list.sort(key=lambda s: s["offset"])
-                items.extend((doc_id, page) for page in typeset(doc_id, span_list, cfg))
-            page_clusters = process_page_batch(items, cfg)
-            rows = []
-            for (doc_id, page), clusters in zip(items, page_clusters):
-                els = assemble_page_elements(doc_id, page.page_no, clusters)
-                page_no = page.page_no
-                row = {
-                    "doc_id": doc_id,
-                    "page_no": page_no,
-                    "elements": [
-                        {
-                            "label": e["label"],
-                            "l": e["l"], "t": e["t"], "r": e["r"], "b": e["b"],
-                            "text": e["text"],
-                            "media_ref": e["media_ref"],
-                            "children": e["children"],
-                        }
-                        for e in els
-                    ],
-                }
-                if with_confidence:
-                    from ..kernels.confidence import page_confidence
-
-                    row["page_confidence"] = page_confidence(page_no, clusters)
-                rows.append(row)
-            n_out += len(rows)
-            cols = ["doc_id", "page_no", "elements"] + (
-                ["page_confidence"] if with_confidence else []
-            )
-            yield pd.DataFrame(rows, columns=cols)
-        _write_lineage(lineage_dir, "convert", n_in, n_out, t0)
-        if _si.GRID_CALLS > grid0:
-            _write_lineage_ms(lineage_dir, "convert/grid_pages",
-                              _si.GRID_CALLS - grid0,
-                              _si.GRID_CALLS - grid0, 0.0)
-
-    from ..schemas import ELEMENTS_CONF_SCHEMA
-
-    return docs_df.mapInPandas(
-        fn, ELEMENTS_CONF_SCHEMA if with_confidence else ELEMENTS_SCHEMA
-    )
-
-
-# --------------------------------------------------------------------------
-# fully-fused doc-grain stage: docs → ordered spans, zero shuffles
+# fused: docs → ordered spans in one doc-grain stage, zero shuffles
 # --------------------------------------------------------------------------
 
 def doc_fused_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
                     with_confidence: bool = False):
-    """The zero-shuffle fast path: a document is self-contained, so parse →
-    layout → tables → assembly → reading order all run doc-locally in ONE
-    mapInPandas stage (the serial oracle per doc, parallelized by
-    partition). Table batches still form across all docs of an Arrow
-    batch.
+    """The zero-shuffle default path: a document is self-contained, so
+    parse → layout → OCR → tables → assembly → reading order all run
+    doc-locally in ONE mapInPandas stage (the serial oracle per doc,
+    parallelized by partition). Model batches form per document:
+    ``extract_doc_result`` sends one document's pages through
+    process_page_batch.
 
-    Trade-off vs the staged page-grain path: no shuffle and near-perfect
-    core scaling, but a mega-document is one task (fine while per-page
-    cost is CPU-milliseconds; switch to the staged path when page-level
-    model stages — GPU layout/OCR/TableFormer — need cross-doc batching
-    at page grain, or when stage checkpoints are required)."""
-    from ..oracle import extract_doc_result
-    from ..schemas import SPANS_CONF_SCHEMA
+    Why one Python stage: chaining two mapInPandas transforms runs TWO
+    Python workers per task slot (the JVM pipes batches through both),
+    which at local[C] oversubscribes the machine and inverts scaling.
 
+    Trade-off vs the checkpointed page-grain path: no shuffle and
+    near-perfect core scaling, but a mega-document is one task (fine
+    while per-page cost is CPU-milliseconds; use the checkpointed path
+    when page-level model stages — GPU layout/OCR/TableFormer — need
+    cross-doc batching at page grain, or when stage checkpoints are
+    required)."""
     cols = ["doc_id", "spans"] + (["confidence"] if with_confidence else [])
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import spatial_index as _si
-
-        t0 = time.monotonic()
+        lineage = _TaskLineage(lineage_dir, "doc_fused")
         n = 0
-        grid0 = _si.GRID_CALLS
-        timers: dict[str, float] = {}
         for pdf in batches:
             rows = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
                 n += 1
                 # spans arrive from Arrow as fresh plain dicts and are
                 # read-only downstream — no defensive copy needed
-                span_list = sorted(spans, key=_OFFSET_KEY)
-                res = extract_doc_result(doc_id, span_list, cfg,
-                                         with_confidence=with_confidence,
-                                         timers=timers if lineage_dir else None)
+                res = extract_doc_result(doc_id, sorted(spans, key=_OFFSET_KEY),
+                                         cfg, with_confidence=with_confidence,
+                                         timers=lineage.timers)
                 row = {"doc_id": doc_id, "spans": res["spans"]}
                 if with_confidence:
                     row["confidence"] = res["confidence"]
                 rows.append(row)
             yield pd.DataFrame(rows, columns=cols)
-        _write_lineage(lineage_dir, "doc_fused", n, n, t0)
-        # per-phase timer dump, mirroring the reference's stage timers
-        # (gpu_processor.py:333-363 / tf_predictor.py:556-562): one
-        # lineage row per phase so lineage_report prints the breakdown
-        for phase, ms in sorted(timers.items()):
-            _write_lineage_ms(lineage_dir, f"doc_fused/{phase}", n, n, ms)
-        if _si.GRID_CALLS > grid0:
-            _write_lineage_ms(lineage_dir, "doc_fused/grid_pages",
-                              _si.GRID_CALLS - grid0,
-                              _si.GRID_CALLS - grid0, 0.0)
+        lineage.finish(n, n)
 
     return docs_df.mapInPandas(
         fn, SPANS_CONF_SCHEMA if with_confidence else SPANS_OUT_SCHEMA
@@ -454,12 +163,152 @@ def doc_fused_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
 
 
 # --------------------------------------------------------------------------
+# S1: parse — docs → pages (the synthetic "PDF backend" scan)
+# --------------------------------------------------------------------------
+
+def parse_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None):
+    """(doc_id, spans[]) → one row per page: cells + typeset `elements`
+    (this corpus's stand-in for the rendered page image); detection runs
+    in the separate :func:`detect_stage` model stage.
+
+    Reference analogue: per-page load/parse (lambda_preprocessor.py:15-44);
+    the detect stage mirrors layout_predictor_gpu.py:253-315.
+    """
+    cols = ["doc_id", "page_no", "width", "height", "cells", "elements"]
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        lineage = _TaskLineage(lineage_dir, "parse")
+        n_in = n_out = 0
+        for pdf in batches:
+            rows: list[dict[str, Any]] = []
+            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
+                n_in += 1
+                # read-only like the fused stage's spans (no copy)
+                for page in typeset(doc_id, sorted(spans, key=_OFFSET_KEY), cfg):
+                    rows.append({
+                        "doc_id": doc_id,
+                        "page_no": page.page_no,
+                        "width": page.width,
+                        "height": page.height,
+                        "cells": page.cells,
+                        "elements": [element_to_dict(e) for e in page.elements],
+                    })
+            n_out += len(rows)
+            yield pd.DataFrame(rows, columns=cols)
+        lineage.finish(n_in, n_out)
+
+    return docs_df.mapInPandas(fn, PARSED_PAGES_SCHEMA)
+
+
+# --------------------------------------------------------------------------
+# S2: layout detection — a batched model stage through the generic harness
+# --------------------------------------------------------------------------
+
+def detect_stage(parsed_df, cfg: GenConfig, lineage_dir: str | None = None):
+    """Parsed pages (with typeset `elements`) → pages with detections.
+
+    Runs the layout-detector seam (kernels/convert.layout_detector, which
+    picks the model from ``cfg.detector``) through the generic model
+    harness: executor-local lazy singleton detector, pages accumulated
+    across Arrow record batches into fixed-size model calls, tail padded
+    by repeating the last page's model input
+    (layout_predictor_gpu.py:267-275 semantics)."""
+    spec, input_fn, forward = layout_detector(cfg, pad_by_repeat=True)
+
+    def item_fn(row: dict):
+        page_no = int(row["page_no"])
+        page = TypesetPage(
+            page_no=page_no,
+            width=float(row["width"]),
+            height=float(row["height"]),
+            # the detector reads cell geometry for the marker-only
+            # split noise case — must match the fused path exactly
+            cells=[dict(c) for c in row["cells"]],
+            # the page image stand-in is not carried past detection
+            elements=[element_from_dict(d, page_no) for d in row.pop("elements")],
+        )
+        return input_fn(row["doc_id"], page)
+
+    def result_fn(row: dict, dets: list[dict]) -> dict:
+        row["detections"] = dets
+        return row
+
+    t0 = time.monotonic()
+
+    def on_complete(n_rows: int, n_forwards: int) -> None:
+        _write_lineage_ms(lineage_dir, "detect", n_rows, n_rows,
+                          (time.monotonic() - t0) * 1000.0)
+
+    return arrow_model_stage(parsed_df, spec, item_fn, forward, result_fn,
+                             PAGES_SCHEMA, on_complete=on_complete)
+
+
+# --------------------------------------------------------------------------
+# S3+S5+S6: layout postprocess + OCR + tables + page assembly
+# --------------------------------------------------------------------------
+
+def layout_stage(pages_df, cfg: GenConfig, lineage_dir: str | None = None,
+                 with_confidence: bool = False):
+    """One row per page in, one row per page out: the page-batch core
+    (layout post-processing, OCR fill, table-structure decoding) over
+    each Arrow batch's pages with their materialized detections — OCR
+    and table batches form ACROSS the pages of the batch (mirrors the
+    reference's ≤128 cross-page table batches, tablemodel04_rs.py:
+    186-202) — then page assembly (page_assemble_model.py port).
+    Narrow — no shuffle.
+
+    ``with_confidence`` computes PageConfidenceScores HERE — the page
+    grain, where the post-processed clusters still exist — and ships one
+    struct per page row (a partial aggregation) through the elements
+    checkpoint; doc_assemble_stage folds them into the ConfidenceReport."""
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if with_confidence:
+            from ..kernels.confidence import page_confidence
+
+        lineage = _TaskLineage(lineage_dir, "layout")
+        n = 0
+        for pdf in batches:
+            items = [
+                (doc_id, TypesetPage(page_no=int(page_no), width=float(width),
+                                     height=float(height),
+                                     cells=[dict(c) for c in cells]))
+                for doc_id, page_no, width, height, cells in zip(
+                    pdf["doc_id"], pdf["page_no"], pdf["width"],
+                    pdf["height"], pdf["cells"])
+            ]
+            n += len(items)
+            page_clusters = process_page_batch(
+                items, cfg,
+                detections=[[dict(d) for d in dets] for dets in pdf["detections"]],
+            )
+            data = {
+                "doc_id": pdf["doc_id"],
+                "page_no": pdf["page_no"],
+                "elements": [
+                    [{k: e[k] for k in _ELEMENT_KEYS}
+                     for e in assemble_page_elements(doc_id, page.page_no, clusters)]
+                    for (doc_id, page), clusters in zip(items, page_clusters)
+                ],
+            }
+            if with_confidence:
+                data["page_confidence"] = [
+                    page_confidence(page.page_no, clusters)
+                    for (_, page), clusters in zip(items, page_clusters)
+                ]
+            yield pd.DataFrame(data)
+        lineage.finish(n, n)
+
+    return pages_df.mapInPandas(
+        fn, ELEMENTS_CONF_SCHEMA if with_confidence else ELEMENTS_SCHEMA
+    )
+
+
+# --------------------------------------------------------------------------
 # S7: document assembly — elements → ordered spans per doc
 # --------------------------------------------------------------------------
 
-def doc_assemble_stage(elements_df, lineage_dir: str | None = None,
-                       num_partitions: int | None = None,
-                       cfg: GenConfig | None = None,
+def doc_assemble_stage(elements_df, cfg: GenConfig,
+                       lineage_dir: str | None = None,
                        with_confidence: bool = False):
     """Per-document assembly: co-locate each doc's pages via
     repartition(doc_id), then group INSIDE the partition and run reading
@@ -483,25 +332,11 @@ def doc_assemble_stage(elements_df, lineage_dir: str | None = None,
         for page_no, els, _pc in pages:
             for e in els:
                 el = dict(e)
-                el["page_no"] = int(page_no)
+                el["page_no"] = page_no
                 children = el.get("children")
                 el["children"] = [] if children is None else [dict(c) for c in children]
-                el["cid"] = len(elements)
                 elements.append(el)
-        out = {
-            "doc_id": doc_id,
-            "spans": assemble_spans(
-                elements,
-                enable_merges=cfg.enable_merges if cfg else False,
-                process_list_markers=cfg.process_list_markers if cfg else False,
-                reading_order_mode=(
-                    getattr(cfg, "reading_order_mode", None) if cfg else None
-                ),
-                enrich_formulas=(
-                    getattr(cfg, "enrich_formulas", False) if cfg else False
-                ),
-            ),
-        }
+        out = {"doc_id": doc_id, "spans": assemble_doc_spans(elements, cfg)}
         if with_confidence:
             from ..kernels.confidence import doc_confidence
 
@@ -511,7 +346,7 @@ def doc_assemble_stage(elements_df, lineage_dir: str | None = None,
         return out
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t0 = time.monotonic()
+        lineage = _TaskLineage(lineage_dir, "assemble")
         by_doc: dict[str, list[tuple[int, Any, Any]]] = {}
         for pdf in batches:
             confs = (
@@ -533,12 +368,10 @@ def doc_assemble_stage(elements_df, lineage_dir: str | None = None,
             if len(chunk) >= 256:
                 yield pd.DataFrame(chunk, columns=out_cols)
                 chunk = []
-        _write_lineage(lineage_dir, "assemble", n_docs, n_docs, t0)
+        lineage.finish(n_docs, n_docs)
         yield pd.DataFrame(chunk, columns=out_cols)
 
-    from ..schemas import SPANS_CONF_SCHEMA
-
-    n = num_partitions or elements_df.sparkSession.sparkContext.defaultParallelism * 2
+    n = elements_df.sparkSession.sparkContext.defaultParallelism * 2
     return elements_df.repartition(n, "doc_id").mapInPandas(
         fn, SPANS_CONF_SCHEMA if with_confidence else SPANS_OUT_SCHEMA
     )

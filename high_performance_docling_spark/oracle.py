@@ -10,12 +10,31 @@ partitioning, shuffles, checkpoints) is what the equality tests exercise.
 
 from __future__ import annotations
 
+import time
 from typing import Any
 
 from .corpus import GenConfig, typeset
 from .kernels.assemble import assemble_page_elements
-from .kernels.convert import process_page_batch
+from .kernels.convert import phase_marker, process_page_batch
 from .kernels.reading_order import assemble_spans
+
+
+def assemble_doc_spans(
+    elements: list[dict[str, Any]], cfg: GenConfig
+) -> list[dict[str, Any]]:
+    """A document's page elements, in page order → its ordered spans.
+    Numbers the elements with doc-global cids (readingorder_model.py:61),
+    then runs reading order with the cfg's flags. Shared by the oracle
+    and the checkpointed path's doc_assemble_stage."""
+    for cid, el in enumerate(elements):
+        el["cid"] = cid
+    return assemble_spans(
+        elements,
+        enable_merges=cfg.enable_merges,
+        process_list_markers=cfg.process_list_markers,
+        reading_order_mode=cfg.reading_order_mode,
+        enrich_formulas=cfg.enrich_formulas,
+    )
 
 
 def extract_doc_spans(
@@ -38,35 +57,18 @@ def extract_doc_result(
     hook point). ``timers`` accumulates per-phase wall ms (parse /
     layout_predict / layout_postprocess / ocr / table_structure /
     doc_assemble) — the reference's stage-timer analogue."""
-    import time as _time
-
-    def _mark(key: str, t0: float) -> float:
-        t1 = _time.monotonic()
-        if timers is not None:
-            timers[key] = timers.get(key, 0.0) + (t1 - t0) * 1000.0
-        return t1
-
-    t = _time.monotonic()
+    _mark = phase_marker(timers)
+    t = time.monotonic()
     pages = typeset(doc_id, spans, cfg)
     t = _mark("parse", t)
     page_clusters = process_page_batch(
         [(doc_id, p) for p in pages], cfg, timers=timers
     )
-    t = _time.monotonic()
+    t = time.monotonic()
     elements: list[dict[str, Any]] = []
     for page, clusters in zip(pages, page_clusters):
         elements.extend(assemble_page_elements(doc_id, page.page_no, clusters))
-    for cid, el in enumerate(elements):  # global cids (readingorder_model.py:61)
-        el["cid"] = cid
-    out: dict[str, Any] = {
-        "spans": assemble_spans(
-            elements,
-            enable_merges=cfg.enable_merges,
-            process_list_markers=cfg.process_list_markers,
-            reading_order_mode=getattr(cfg, "reading_order_mode", None),
-            enrich_formulas=getattr(cfg, "enrich_formulas", False),
-        )
-    }
+    out: dict[str, Any] = {"spans": assemble_doc_spans(elements, cfg)}
     _mark("doc_assemble", t)
     if with_confidence:
         from .kernels.confidence import doc_confidence, page_confidence

@@ -1,14 +1,16 @@
 """End-to-end extraction pipeline: docs → ordered spans.
 
-Wires the stages (operators/stages.py) with:
-  - optional parquet stage checkpoints keyed by (doc_id[, page_no]) — a
+Wires the stages (operators/stages.py) into two modes:
+  - fused (default): one doc-grain stage, zero shuffles;
+  - checkpointed (checkpoint_dir set): page-grain stages, each
+    materialized to a parquet checkpoint keyed by (doc_id[, page_no]) — a
     restarted job anti-joins completed keys and only processes the
     remainder (north rule resumability; reference analogue: the phase
-    boundaries at main.py:53-80),
-  - per-partition lineage rows,
-  - skew handling: repartition the page table by hash(doc_id, page_no)
-    right after the document→page explode so mega-docs spread across the
-    cluster (SURVEY.md §4 "skew handling").
+    boundaries at main.py:53-80) — and one doc_id shuffle before
+    assembly. Mega-docs reach page grain only here: after the
+    document→page explode each page is its own row (SURVEY.md §4 "skew
+    handling").
+Both modes write per-partition lineage rows when lineage_dir is set.
 """
 
 from __future__ import annotations
@@ -19,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .corpus import GenConfig, generate_doc
 from .operators.stages import (
-    convert_stage,
     detect_stage,
     doc_assemble_stage,
     doc_fused_stage,
@@ -119,8 +120,6 @@ def extract_spans(
     cfg: GenConfig,
     checkpoint_dir: str | None = None,
     lineage_dir: str | None = None,
-    page_partitions: int | None = None,
-    mode: str = "fused",
     input_partitions: int | None = None,
     with_confidence: bool = False,
 ) -> DataFrame:
@@ -128,13 +127,17 @@ def extract_spans(
 
     Execution modes (partitioning/shuffle strategy is explicit, per the
     north rule):
-      - "fused" (default, checkpoint_dir=None): doc-grain, ZERO shuffles —
+      - fused (default, checkpoint_dir=None): doc grain, ZERO shuffles —
         each partition converts whole documents end-to-end. Fastest and
         perfectly scalable while stages are CPU kernels.
-      - "staged" (or checkpoint_dir set): page-grain stages with one
-        doc_id shuffle before assembly — use when page-level model stages
-        need cross-doc GPU batching or when resumable stage checkpoints
-        are required.
+      - checkpointed (checkpoint_dir set): page-grain stages, each
+        materialized and resumable, with one doc_id shuffle before
+        assembly — use when page-level model stages need cross-doc GPU
+        batching or when resumable stage checkpoints are required.
+
+    ``with_confidence`` adds the per-doc ConfidenceReport struct
+    (base_models.py:379-459) computed from the same post-processed
+    clusters as the spans.
     """
     # Parallelism guard: if the input still arrives with fewer splits than
     # cores (tiny corpus or in-memory DF), fan out once. The shuffle is
@@ -153,34 +156,17 @@ def extract_spans(
     if n_parts < target:
         docs_df = docs_df.repartition(target * 2, "doc_id")
 
-    if checkpoint_dir is None and mode == "fused":
-        # with_confidence adds the per-doc ConfidenceReport struct
-        # (base_models.py:379-459) computed from the same post-processed
-        # clusters as the spans
+    if checkpoint_dir is None:
         return doc_fused_stage(docs_df, cfg, lineage_dir,
                                with_confidence=with_confidence)
 
-    if checkpoint_dir is None:
-        # staged lazy path: ONE Python stage docs→elements (see
-        # convert_stage docstring for why chaining two Python stages
-        # oversubscribes the executors), then the single shuffle.
-        # with_confidence rides as a per-page struct computed at the
-        # page grain (partial aggregation) and folded after the shuffle.
-        elements = convert_stage(docs_df, cfg, lineage_dir,
-                                 with_confidence=with_confidence)
-        return doc_assemble_stage(elements, lineage_dir, cfg=cfg,
-                                  with_confidence=with_confidence)
-
-    # Checkpointed staged path: parse → detect (model stage) → layout,
-    # each materialized to parquet so no two Python stages chain in one
-    # job (the 2-workers-per-slot oversubscription pitfall) and each is
-    # independently resumable. The detect stage runs through the generic
-    # model harness (executor-local singleton, fixed 32-page batches) —
-    # on a real cluster it is the stage you'd schedule on GPU executors.
+    # parse → detect → layout, each materialized (so no two Python stages
+    # chain in one job) and resumable; detect is the stage a real cluster
+    # schedules on GPU executors (stages.py module docstring)
     parsed = _checkpoint_stage(
         spark,
         docs_df,
-        lambda df: parse_stage(df, cfg, lineage_dir, with_detections=False),
+        lambda df: parse_stage(df, cfg, lineage_dir),
         os.path.join(checkpoint_dir, "parsed"),
         ["doc_id"],
     )
@@ -191,8 +177,6 @@ def extract_spans(
         os.path.join(checkpoint_dir, "pages"),
         ["doc_id", "page_no"],
     )
-    if page_partitions:
-        pages = pages.repartition(page_partitions, "doc_id", "page_no")
     elements = _checkpoint_stage(
         spark,
         pages,
@@ -201,5 +185,5 @@ def extract_spans(
         os.path.join(checkpoint_dir, "elements"),
         ["doc_id", "page_no"],
     )
-    return doc_assemble_stage(elements, lineage_dir, cfg=cfg,
+    return doc_assemble_stage(elements, cfg, lineage_dir,
                               with_confidence=with_confidence)

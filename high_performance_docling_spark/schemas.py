@@ -63,7 +63,7 @@ PAGES_SCHEMA = T.StructType(
 
 # S1a — parsed pages BEFORE layout detection: `elements` is the typeset
 # ground truth the synthetic detector consumes, i.e. this corpus's stand-in
-# for the rendered page image a real RT-DETR stage would read. The staged
+# for the rendered page image a real RT-DETR stage would read. The checkpointed
 # pipeline materializes this boundary so the detect stage is a separate,
 # checkpointable, GPU-batchable model stage (layout_predictor_gpu.py role).
 TYPESET_ELEMENT_STRUCT = T.StructType(
@@ -174,17 +174,5 @@ SPANS_CONF_SCHEMA = T.StructType(
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT), False),
         T.StructField("confidence", DOC_CONFIDENCE_STRUCT, False),
-    ]
-)
-
-# Per-partition lineage rows (SURVEY.md §2.9: Spark analogue of the
-# reference's timer instrumentation, fork/timers.py:5-109).
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("input_rows", T.LongType(), False),
-        T.StructField("output_rows", T.LongType(), False),
-        T.StructField("wall_ms", T.DoubleType(), False),
     ]
 )

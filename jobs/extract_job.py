@@ -12,12 +12,13 @@ cluster):
         --input  s3://corpus/docs/            # or a local parquet dir
         --output s3://corpus/spans/ \
         --checkpoint-dir s3://corpus/ckpt/ \
-        --lineage-dir /shared/lineage \
-        --mode staged
+        --lineage-dir /shared/lineage
 
-Resumability: with --checkpoint-dir, a killed job restarted with the same
-arguments anti-joins completed (doc_id[, page_no]) keys and only
-processes the remainder (pipeline._checkpoint_stage).
+Modes: without --checkpoint-dir the job runs the fused doc-grain path
+(zero shuffles). With --checkpoint-dir it runs the checkpointed
+page-grain path, and a killed job restarted with the same arguments
+anti-joins completed (doc_id[, page_no]) keys and only processes the
+remainder (pipeline._checkpoint_stage).
 
 Local smoke:
     python jobs/extract_job.py --synthesize 200 --output /tmp/spans_out
@@ -38,10 +39,9 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="output parquet path")
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--lineage-dir", default=None)
-    ap.add_argument("--mode", choices=["fused", "staged"], default="fused")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--with-confidence", action="store_true",
-                    help="attach the per-doc ConfidenceReport struct (fused mode)")
+                    help="attach the per-doc ConfidenceReport struct")
     ap.add_argument("--figures-output", default=None,
                     help="also write the figure-crop media table here")
     ap.add_argument(
@@ -76,7 +76,6 @@ def main() -> None:
         cfg,
         checkpoint_dir=args.checkpoint_dir,
         lineage_dir=args.lineage_dir,
-        mode=args.mode,
         with_confidence=args.with_confidence,
     )
     out.write.mode("overwrite").parquet(args.output)

@@ -146,3 +146,25 @@ def test_mega_docs_exist_for_skew():
         d = generate_doc(cfg, i)
         page_counts.append(len(typeset(d["doc_id"], d["spans"], cfg)))
     assert max(page_counts) >= 3 * (sorted(page_counts)[len(page_counts) // 2])
+
+
+def test_extract_doc_result_leaves_input_spans_unchanged():
+    """doc_fused_stage and parse_stage hand their Arrow span dicts to the
+    kernels without a defensive copy; that holds only while extraction
+    never mutates its input (same dict objects, same contents)."""
+    import copy
+
+    from high_performance_docling_spark.oracle import extract_doc_result
+
+    for cfg in (GenConfig(seed=42, n_docs=8, mega_frac=0.2, mega_pages=6),
+                GenConfig(seed=21, n_docs=8, ocr_frac=0.3,
+                          keep_empty_clusters=True, enrich_formulas=True)):
+        for i in range(cfg.n_docs):
+            d = generate_doc(cfg, i)
+            spans = d["spans"]
+            ids = [id(s) for s in spans]
+            before = copy.deepcopy(spans)
+            extract_doc_result(d["doc_id"], spans, cfg, with_confidence=True,
+                               timers={})
+            assert [id(s) for s in spans] == ids
+            assert spans == before, d["doc_id"]

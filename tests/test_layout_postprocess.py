@@ -379,3 +379,46 @@ def test_grid_path_handles_pathological_page():
     n_pairs = sum(1 for g in groups if len(g) >= 2)
     assert n_pairs >= 0.95 * (n // 2)  # random jitter keeps most pairs
     assert dt < 30.0, f"grid path too slow: {dt:.1f}s"
+
+
+def test_postfilter_then_postprocess_equals_postprocess_on_corpus_pages():
+    """postprocess_page's fused filter and postfilter_detections share
+    BASE_THRESHOLD and clamp arithmetic: pre-filtering changes nothing.
+    Noisy corpus pages get planted proposals below, at and above the
+    threshold, some spilling off the page, so both paths drop and clamp."""
+    from high_performance_docling_spark.corpus import (
+        GenConfig,
+        generate_doc,
+        synth_detections,
+        typeset,
+    )
+    from high_performance_docling_spark.kernels.layout_postprocess import (
+        BASE_THRESHOLD,
+        postfilter_detections,
+    )
+
+    dropped = clamped = 0
+    for cfg in (GenConfig(seed=42, n_docs=6, noise=True),
+                GenConfig(seed=21, n_docs=6, noise=True, ocr_frac=0.3,
+                          keep_empty_clusters=True)):
+        for i in range(cfg.n_docs):
+            d = generate_doc(cfg, i)
+            for p in typeset(d["doc_id"], d["spans"], cfg):
+                dets = synth_detections(d["doc_id"], p, cfg)
+                n = len(dets)
+                # orphan clusters are numbered after the largest surviving
+                # id, so the sub-threshold proposal carries the largest id
+                for k, conf in enumerate((0.9, BASE_THRESHOLD,
+                                          BASE_THRESHOLD - 0.05)):
+                    src = dets[k % n]
+                    dets.append({**src, "id": 1000 * (k + 1), "confidence": conf,
+                                 "l": -5.0, "r": p.width + 12.0})
+                filtered = postfilter_detections(dets, p.width, p.height)
+                dropped += len(dets) - len(filtered)
+                clamped += sum(f["l"] == 0.0 and f["r"] == p.width
+                               for f in filtered)
+                kw = dict(keep_empty_clusters=cfg.keep_empty_clusters)
+                assert postprocess_page(p.width, p.height, p.cells, dets, **kw) \
+                    == postprocess_page(p.width, p.height, p.cells, filtered,
+                                        **kw), (d["doc_id"], p.page_no)
+    assert dropped > 0 and clamped > 0

@@ -1,5 +1,6 @@
 """Model-UDF harness: executor-local singleton, fixed-batch accumulation
-across Arrow record batches, pad-by-repeat, and the staged detect path.
+across Arrow record batches, pad-by-repeat, and the checkpointed detect
+stage.
 
 Reference semantics being pinned: layout_predictor_gpu.py:21 (init lock),
 :92-137 (guarded lazy load), :267-275 (FIXED_BS chunks, pad-by-repeat),
@@ -121,7 +122,13 @@ def test_arrow_model_stage_batches_across_record_batches(spark):
 
 
 def test_detect_stage_equals_inline_detection(spark):
-    from high_performance_docling_spark.corpus import GenConfig
+    """The padded detect stage over parse_stage's page rows returns, per
+    page, exactly synth_detections over the serially typeset pages."""
+    from high_performance_docling_spark.corpus import (
+        GenConfig,
+        synth_detections,
+        typeset,
+    )
     from high_performance_docling_spark.operators.stages import (
         detect_stage,
         parse_stage,
@@ -130,12 +137,17 @@ def test_detect_stage_equals_inline_detection(spark):
 
     cfg = GenConfig(seed=7, n_docs=12)
     docs = docs_dataframe(spark, cfg, num_partitions=4)
-    inline = parse_stage(docs, cfg).collect()
-    staged = detect_stage(parse_stage(docs, cfg, with_detections=False), cfg).collect()
-    key = lambda r: (r["doc_id"], r["page_no"])  # noqa: E731
-    inline_map = {key(r): r["detections"] for r in inline}
-    staged_map = {key(r): r["detections"] for r in staged}
-    assert staged_map == inline_map and len(staged_map) > 0
+    staged = {
+        (r["doc_id"], r["page_no"]): [d.asDict() for d in r["detections"]]
+        for r in detect_stage(parse_stage(docs, cfg), cfg).collect()
+    }
+    inline = {}
+    for r in docs.collect():
+        spans = sorted((s.asDict() for s in r["spans"]), key=lambda s: s["offset"])
+        for page in typeset(r["doc_id"], spans, cfg):
+            inline[(r["doc_id"], page.page_no)] = synth_detections(
+                r["doc_id"], page, cfg)
+    assert staged == inline and len(inline) >= 12
 
 
 # ---------------------------------------------------------------------------
@@ -259,9 +271,34 @@ def test_toy_ar_decoder_through_tableformer_batcher():
     assert results[0] == results[12]  # same start token -> same decode
 
 
-def test_staged_conv_detector_e2e_spans_exact(spark):
+def _oracle_on_conv_detector(inputs, cfg) -> dict:
+    """Serial oracle spans per doc, checking in process that the conv
+    detector is the model that ran (loaded, >0 new forward calls)."""
+    from high_performance_docling_spark.kernels.convert import layout_detector
+    from high_performance_docling_spark.kernels.toy_models import (
+        ConvLayoutDetector,
+    )
+    from high_performance_docling_spark.operators import model_harness
+    from high_performance_docling_spark.oracle import extract_doc_spans
+
+    name = layout_detector(cfg, pad_by_repeat=False)[0].name
+    before = getattr(model_harness._REGISTRY.get(name), "n_forward_calls", 0)
+    out = {doc_id: extract_doc_spans(doc_id, in_spans, cfg)
+           for doc_id, in_spans in inputs.items()}
+    model = model_harness._REGISTRY[name]
+    assert isinstance(model, ConvLayoutDetector)
+    assert model.n_forward_calls > before
+    return out
+
+
+def _spans_by_doc(rows):
+    return {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in rows}
+
+
+def test_staged_conv_detector_e2e_spans_exact(spark, tmp_path):
     """e2e gate: spans stay EXACT when the real-math conv detector
-    replaces synth_detections in the staged path."""
+    replaces synth_detections — fused, checkpointed and the serial oracle
+    all run it and agree span-for-span."""
     from high_performance_docling_spark.corpus import GenConfig
     from high_performance_docling_spark.pipeline import (
         docs_dataframe,
@@ -271,27 +308,18 @@ def test_staged_conv_detector_e2e_spans_exact(spark):
     cfg = GenConfig(seed=42, n_docs=12, noise=False, two_col_frac=0.4,
                     mega_frac=0.1, mega_pages=8, detector="conv")
     docs = docs_dataframe(spark, cfg, num_partitions=4)
-
-    def spans(rows):
-        return {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in rows}
-
-    fused = spans(extract_spans(spark, docs, cfg).collect())
-    staged = spans(extract_spans(spark, docs, cfg, mode="staged").collect())
+    fused = _spans_by_doc(extract_spans(spark, docs, cfg).collect())
+    staged = _spans_by_doc(extract_spans(
+        spark, docs, cfg, checkpoint_dir=str(tmp_path / "ckpt")).collect())
     assert fused == staged and len(fused) == 12
-    # and the output equals the serial oracle span-for-span
-    from high_performance_docling_spark.oracle import extract_doc_spans
-
-    inputs = spans(docs.collect())
-    for doc_id, in_spans in inputs.items():
-        assert staged[doc_id] == extract_doc_spans(doc_id, in_spans, cfg), \
-            doc_id
+    assert staged == _oracle_on_conv_detector(_spans_by_doc(docs.collect()), cfg)
 
 
-def test_staged_conv_detector_exact_on_ocr_corpus(spark):
+def test_staged_conv_detector_exact_on_ocr_corpus(spark, tmp_path):
     """The real-math detector's ~1e-7 pt recovery error survives the OCR
     path too: synthetic OCR text keys on int-rounded crop geometry, so
-    conv-detector staged spans equal synth-detector staged spans on a
-    scanned-region corpus."""
+    conv-detector spans (fused, checkpointed, oracle) equal
+    synth-detector spans on a scanned-region corpus."""
     from high_performance_docling_spark.corpus import GenConfig
     from high_performance_docling_spark.pipeline import (
         docs_dataframe,
@@ -304,13 +332,13 @@ def test_staged_conv_detector_exact_on_ocr_corpus(spark):
     cfg_conv = GenConfig(**base, detector="conv")
     docs = docs_dataframe(spark, cfg_syn, num_partitions=2)
 
-    def spans(df):
-        return {r["doc_id"]: [s.asDict() for s in r["spans"]]
-                for r in df.collect()}
-
-    syn = spans(extract_spans(spark, docs, cfg_syn, mode="staged"))
-    conv = spans(extract_spans(spark, docs, cfg_conv, mode="staged"))
-    assert syn == conv and len(conv) == 8
+    syn = _spans_by_doc(extract_spans(spark, docs, cfg_syn).collect())
+    conv = _spans_by_doc(extract_spans(spark, docs, cfg_conv).collect())
+    conv_ckpt = _spans_by_doc(extract_spans(
+        spark, docs, cfg_conv, checkpoint_dir=str(tmp_path / "ckpt")).collect())
+    assert syn == conv == conv_ckpt and len(conv) == 8
+    assert conv == _oracle_on_conv_detector(_spans_by_doc(docs.collect()),
+                                            cfg_conv)
     # non-vacuous: scanned OCR text is present in the output
     assert any("scanned region" in s["text"]
                for spans_ in conv.values() for s in spans_)

@@ -45,15 +45,16 @@ def test_ocr_text_is_geometry_keyed():
     assert t1 == t2 and t1 != t3
 
 
-def test_ocr_spark_fused_and_staged_match_oracle(spark):
+def test_ocr_spark_fused_and_staged_match_oracle(spark, tmp_path):
     docs = docs_dataframe(spark, OCR_CFG, num_partitions=3)
     inputs = {
         r["doc_id"]: [s.asDict() for s in r["spans"]] for r in docs.collect()
     }
-    for mode in ("fused", "staged"):
+    for mode, ckpt in (("fused", None), ("checkpointed", str(tmp_path / "c"))):
         got = {
             r["doc_id"]: [s.asDict() for s in r["spans"]]
-            for r in extract_spans(spark, docs, OCR_CFG, mode=mode).collect()
+            for r in extract_spans(spark, docs, OCR_CFG,
+                                   checkpoint_dir=ckpt).collect()
         }
         for doc_id, in_spans in inputs.items():
             assert got[doc_id] == extract_doc_spans(doc_id, in_spans, OCR_CFG), (

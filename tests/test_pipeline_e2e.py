@@ -2,6 +2,7 @@
 checkpoint/resume semantics."""
 
 import os
+import re
 
 from high_performance_docling_spark.corpus import GenConfig
 from high_performance_docling_spark.oracle import extract_doc_spans
@@ -26,16 +27,19 @@ def test_spark_matches_oracle_exactly(spark):
         assert got[doc_id] == extract_doc_spans(doc_id, in_spans, CFG), doc_id
 
 
-def test_staged_mode_equals_fused_mode(spark):
+def test_staged_mode_equals_fused_mode(spark, tmp_path):
+    """The checkpointed page-grain stages equal the fused doc-grain stage."""
     docs = docs_dataframe(spark, CFG, num_partitions=6)
-    fused = _spans(extract_spans(spark, docs, CFG, mode="fused").collect())
-    staged = _spans(extract_spans(spark, docs, CFG, mode="staged").collect())
+    fused = _spans(extract_spans(spark, docs, CFG).collect())
+    staged = _spans(extract_spans(spark, docs, CFG,
+                                  checkpoint_dir=str(tmp_path / "ckpt")).collect())
     assert fused == staged
 
 
 def test_mega_cluster_page_grid_path_staged_e2e(spark, tmp_path):
     """VERDICT r4 #7: a pathological ≥20k-cluster page driven through the
-    DISTRIBUTED pipeline (staged mode), not just the kernel: spans stay
+    DISTRIBUTED pipeline (checkpointed page-grain stages), not just the
+    kernel: spans stay
     EXACT (equal to both the serial oracle and the same doc without the
     density stress) and the lineage stream records the grid path taken."""
     import json
@@ -56,7 +60,7 @@ def test_mega_cluster_page_grid_path_staged_e2e(spark, tmp_path):
     docs = docs_dataframe(spark, dense, num_partitions=2)
     ldir = str(tmp_path / "lineage")
     got = _spans(
-        extract_spans(spark, docs, dense, mode="staged",
+        extract_spans(spark, docs, dense, checkpoint_dir=str(tmp_path / "ckpt"),
                       lineage_dir=ldir).collect()
     )
     inputs = _spans(docs.collect())
@@ -71,7 +75,7 @@ def test_mega_cluster_page_grid_path_staged_e2e(spark, tmp_path):
         if fname.endswith(".jsonl"):
             with open(os.path.join(ldir, fname)) as f:
                 rows += [json.loads(line) for line in f]
-    grid_rows = [r for r in rows if r["stage"].endswith("grid_pages")]
+    grid_rows = [r for r in rows if r["stage"] == "layout/grid_pages"]
     assert grid_rows and sum(r["input_rows"] for r in grid_rows) >= 2, rows
 
 
@@ -113,10 +117,11 @@ def test_lineage_rows_written(spark, tmp_path):
     extract_spans(spark, docs, cfg, lineage_dir=ldir).collect()
     files = os.listdir(ldir)
     assert any(f.startswith("doc_fused") for f in files)
-    extract_spans(spark, docs, cfg, lineage_dir=ldir, mode="staged").collect()
+    extract_spans(spark, docs, cfg, lineage_dir=ldir,
+                  checkpoint_dir=str(tmp_path / "ckpt")).collect()
     files = os.listdir(ldir)
-    assert any(f.startswith("convert") for f in files)
-    assert any(f.startswith("assemble") for f in files)
+    for stage in ("parse", "detect", "layout", "assemble"):
+        assert any(f.startswith(f"{stage}-") for f in files), stage
 
 
 def test_checkpoint_recovers_from_uncommitted_write(spark, tmp_path):
@@ -222,3 +227,24 @@ def test_fused_lineage_reports_per_phase_timers(spark, tmp_path):
         assert phase in by_stage and by_stage[phase] > 0.0, phase
     phase_sum = sum(v for k, v in by_stage.items() if k.startswith("doc_fused/"))
     assert phase_sum <= by_stage["doc_fused"] * 1.05
+
+
+def test_plan_shapes_of_the_two_modes(spark, tmp_path):
+    """Fused is one Python node and no Exchange; checkpointed reads the
+    elements checkpoint and shuffles exactly once, on doc_id, before
+    assembly."""
+    cfg = GenConfig(seed=3, n_docs=8)
+    src = str(tmp_path / "docs")
+    docs_dataframe(spark, cfg, num_partitions=8).write.parquet(src)
+    docs = spark.read.parquet(src)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    fused = plan(extract_spans(spark, docs, cfg))
+    assert fused.count("MapInPandas") == 1 and "Exchange" not in fused
+    ckpt = plan(extract_spans(spark, docs, cfg,
+                              checkpoint_dir=str(tmp_path / "ckpt")))
+    assert ckpt.count("Exchange") == 1, ckpt
+    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+", ckpt), ckpt
+    assert ckpt.count("MapInPandas") == 1

@@ -221,9 +221,9 @@ def test_list_marker_processing_golden():
     assert [(s["kind"], s["text"]) for s in spans] == golden
 
 
-def test_merge_and_marker_flags_thread_through_pipeline(spark):
+def test_merge_and_marker_flags_thread_through_pipeline(spark, tmp_path):
     """cfg.enable_merges / cfg.process_list_markers reach both execution
-    paths: fused and staged outputs stay equal with the flags on."""
+    paths: fused and checkpointed outputs stay equal with the flags on."""
     from high_performance_docling_spark.corpus import GenConfig
     from high_performance_docling_spark.pipeline import (
         docs_dataframe,
@@ -234,9 +234,10 @@ def test_merge_and_marker_flags_thread_through_pipeline(spark):
                     process_list_markers=True)
     docs = docs_dataframe(spark, cfg, num_partitions=4)
     fused = {r["doc_id"]: [tuple(s) for s in r["spans"]]
-             for r in extract_spans(spark, docs, cfg, mode="fused").collect()}
+             for r in extract_spans(spark, docs, cfg).collect()}
     staged = {r["doc_id"]: [tuple(s) for s in r["spans"]]
-              for r in extract_spans(spark, docs, cfg, mode="staged").collect()}
+              for r in extract_spans(spark, docs, cfg,
+                                     checkpoint_dir=str(tmp_path / "c")).collect()}
     assert fused == staged and len(fused) == 8
 
 

@@ -37,8 +37,9 @@ def test_spans_match_frozen_goldens():
 def test_enriched_profile_spans_match_goldens_all_modes(spark, tmp_path):
     """Docling-parity output profile (VERDICT r4 #4): enrichment ON +
     merges + markers; the tested invariant is the ENRICHED span sequence
-    (spans_enriched_seed42.json) — serial oracle, fused, staged, and
-    checkpointed-staged execution all produce it exactly."""
+    (spans_enriched_seed42.json) — serial oracle, fused, checkpointed,
+    and a checkpointed rerun resumed from its committed checkpoints all
+    produce it exactly."""
     from high_performance_docling_spark.corpus import docling_parity_config
     from high_performance_docling_spark.pipeline import (
         docs_dataframe,
@@ -75,15 +76,13 @@ def test_enriched_profile_spans_match_goldens_all_modes(spark, tmp_path):
     assert serial == want
 
     docs = docs_dataframe(spark, cfg, num_partitions=4)
+    ckpt = str(tmp_path / "ckpt")
     for mode, kw in (
         ("fused", {}),
-        ("staged", {}),
-        ("staged-checkpointed", {"checkpoint_dir": str(tmp_path / "ckpt")}),
+        ("checkpointed", {"checkpoint_dir": ckpt}),
+        ("checkpointed-resumed", {"checkpoint_dir": ckpt}),
     ):
-        got = norm(
-            extract_spans(spark, docs, cfg,
-                          mode=mode.split("-")[0], **kw).collect()
-        )
+        got = norm(extract_spans(spark, docs, cfg, **kw).collect())
         assert got == want, mode
 
     # non-vacuous: the profile's output DIFFERS from the raw profile on

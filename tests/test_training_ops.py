@@ -638,9 +638,11 @@ def test_connected_components_raises_on_non_convergence(spark):
 
 
 def test_with_confidence_on_staged_and_checkpointed_paths(spark, tmp_path):
-    """The staged path carries confidence as a per-page struct computed
-    at the page grain (partial aggregation) and folded after the doc
-    shuffle — output must equal the fused path's ConfidenceReport."""
+    """The checkpointed path carries confidence as a per-page struct
+    computed at the page grain (partial aggregation) through the elements
+    checkpoint and folded after the doc shuffle — output must equal the
+    fused path's ConfidenceReport, also when a rerun resumes from the
+    committed checkpoints."""
     from high_performance_docling_spark.corpus import GenConfig
     from high_performance_docling_spark.pipeline import (
         docs_dataframe,
@@ -662,13 +664,14 @@ def test_with_confidence_on_staged_and_checkpointed_paths(spark, tmp_path):
         return out
 
     fused = norm(extract_spans(spark, docs, cfg, with_confidence=True).collect())
-    staged = norm(extract_spans(spark, docs, cfg, mode="staged",
-                                with_confidence=True).collect())
-    assert staged == fused
     ckpt = norm(extract_spans(spark, docs, cfg,
                               checkpoint_dir=str(tmp_path / "c"),
                               with_confidence=True).collect())
     assert ckpt == fused
+    resumed = norm(extract_spans(spark, docs, cfg,
+                                 checkpoint_dir=str(tmp_path / "c"),
+                                 with_confidence=True).collect())
+    assert resumed == fused
 
 
 def test_star_cc_equals_label_propagation_on_pair_graph(spark):
