@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
-"""Round benchmark: headline queries + end-to-end extraction throughput.
+"""Round benchmark: end-to-end extraction throughput and scaling.
 
 Prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "samples": {leg: [sec, ...]}, "sf": ...,
+  {"metric": ..., "value": <sum of the timed extraction legs, sec>,
+   "unit": "sec", "legs": {leg: sec, ...}, "samples": {leg: [sec, ...]},
    "docs_per_sec_N": ..., "docs_per_sec_4N": ..., "scaling_efficiency": ...}
 
 Scaling evidence (north rule: efficiency >= 0.8 from N to 4N executors):
@@ -38,8 +38,7 @@ BENCH_IDLE_BUSY_THRESH) for the host to quiet down before releasing
 the pair; on timeout the pair runs anyway — the wait is opportunistic,
 the pairing is the defense. Every wait + per-leg loadavg is recorded.
 
-Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), BENCH_DOCS (default 38400),
+Env knobs: SPARK_GRAFT_CPUS (default 32), BENCH_DOCS (default 38400),
 BENCH_SAMPLES (default 5), BENCH_SKIP_SCALING=1 to skip the scaling pair,
 BENCH_SF1_DOCS (default 384000; 0 skips) for the sf1 skew-stress leg,
 BENCH_IDLE_BUSY_THRESH (default 0.20), BENCH_IDLE_WAIT_MAX (default 30 s
@@ -50,7 +49,7 @@ with a HEAVIER mega-doc tail (mega_frac 0.04, mega_pages 32), single
 timed sample per cadence point (clearly labeled — the statistical gate
 stays the sf0.1 median-of-k), plus the per-partition task-time spread
 from the fused stage's lineage rows (max/median ratio — the straggler
-metric salting must keep < 2).
+metric).
 """
 
 from __future__ import annotations
@@ -66,23 +65,11 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_DOCS = int(os.environ.get("BENCH_DOCS", "38400"))
 K_SAMPLES = int(os.environ.get("BENCH_SAMPLES", "5"))
 SF1_DOCS = int(os.environ.get("BENCH_SF1_DOCS", "384000"))
 CACHE = os.path.join(REPO, ".bench_cache")
-
-BENCH_QUERIES = [
-    "pricing_summary",
-    "revenue_forecast",
-    "top_orders_per_segment",
-    "dedup_exact",
-    "token_count",
-    "quality_score",
-    "sessionize_events",
-]
-
 
 def _session(cores: int, app: str):
     from high_performance_docling_spark.pipeline import get_spark
@@ -379,8 +366,6 @@ def _interleaved_scaling(small: int, big: int, k: int) -> dict:
 
 
 def main() -> None:
-    import __spark_entry__ as E
-
     results: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
 
@@ -451,77 +436,6 @@ def main() -> None:
             "task_time_spread": _task_time_spread(ldir),
         }
 
-    # 3. headline query suite (own session; first run warms codegen)
-    time.sleep(3)
-    spark = _session(CPUS, "bench-queries")
-    qs = E.queries()
-    qs["pricing_summary"](spark, SF_DIR).write.mode("overwrite").format("noop").save()
-    for name in BENCH_QUERIES:
-        t0 = time.monotonic()
-        qs[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
-        results[name] = round(time.monotonic() - t0, 3)
-
-    # ANN quality at the bench SF (VERDICT r4 #8): recall@5 of the two
-    # approximate paths vs the exact brute-force top-k over the SAME
-    # query set. Chance level is k/N (~0.001 at sf0.1), so anything
-    # above ~0.2 is meaningfully structural; recorded, not gated.
-    exact_nn = {
-        (r["query_id"], r["nbr_id"])
-        for r in qs["embedding_cosine_topk"](spark, SF_DIR).collect()
-    }
-    ann_recall = {}
-    if exact_nn:
-        for name in ("embedding_lsh_ann", "embedding_ivf_ann"):
-            approx = {
-                (r["query_id"], r["nbr_id"])
-                for r in qs[name](spark, SF_DIR).collect()
-            }
-            ann_recall[name] = round(len(approx & exact_nn) / len(exact_nn), 3)
-
-    # ANN index QUALITY on a planted-cluster corpus (VERDICT r5 #5): the
-    # driver's near-isotropic embeddings bound any partition-based ANN's
-    # recall at its scan fraction, so the numbers above certify cost-
-    # proportionality only. On clustered data the index must capture the
-    # structure: recall far ABOVE the measured candidate-scan fraction.
-    # Both recorded; the isotropic pair stays as the documented floor.
-    from high_performance_docling_spark.corpus import (
-        clustered_embeddings_dataframe,
-    )
-    from high_performance_docling_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        kmeans_fit,
-        lsh_topk,
-    )
-
-    cemb = clustered_embeddings_dataframe(spark, n_vecs=5000, dim=64).cache()
-    cn = cemb.count()
-    cq = [i * 97 % 5000 for i in range(10)]
-    c_exact = {(r["query_id"], r["nbr_id"])
-               for r in brute_force_topk(cemb, cq).collect()}
-    ann_clustered = {"n_vecs": cn, "n_queries": len(cq),
-                     "planted_clusters": 8}
-    denom = len(cq) * (cn - 1)
-    lsh_kw = dict(n_planes=7, dim=64, n_tables=8)
-    got = {(r["query_id"], r["nbr_id"])
-           for r in lsh_topk(cemb, cq, k=5, **lsh_kw).collect()}
-    ann_clustered["lsh_8x7"] = {
-        "recall_at_5": round(len(got & c_exact) / len(c_exact), 3),
-        "scan_fraction": round(
-            lsh_topk(cemb, cq, k=10 ** 6, **lsh_kw).count() / denom, 3),
-    }
-    cents = kmeans_fit(cemb, k=8, n_iter=3)
-    got = {(r["query_id"], r["nbr_id"])
-           for r in ivf_topk(cemb, cq, k=5, centroids=cents,
-                             n_probe=1).collect()}
-    ann_clustered["ivf_kmeans8_probe1"] = {
-        "recall_at_5": round(len(got & c_exact) / len(c_exact), 3),
-        "scan_fraction": round(
-            ivf_topk(cemb, cq, k=10 ** 6, centroids=cents,
-                     n_probe=1).count() / denom, 3),
-    }
-    spark.stop()
-
     # noise-free reference point: serial kernel cost per document (no
     # Spark, single thread) — the number host contention cannot touch;
     # full-width throughput ≈ 1000/kernel_ms * effective_cores when quiet.
@@ -543,18 +457,17 @@ def main() -> None:
     kernel_ms = statistics.median(kernel_passes)
 
     out = {
-        "metric": "headline suite + e2e span extraction wall time",
+        "metric": "e2e span extraction wall time (sum of timed legs)",
         "kernel_ms_per_doc_serial": round(kernel_ms, 3),
         "kernel_ms_samples": [round(v, 3) for v in kernel_passes],
         "value": round(sum(results.values()), 3),
         "unit": "sec",
-        "queries": results,
+        "legs": results,
         "samples": samples,
         "stat": (f"median of fixed k (k={K_SAMPLES}; no adaptive "
                  "re-sampling); scaling efficiency = median of ABBA-"
                  "interleaved paired per-sample ratios"),
         "scaling_pairs": scaling,
-        "sf": SF_DIR.rstrip("/").split("sf")[-1],
         "bench_docs": N_DOCS,
         "docs_per_sec_full_width": round(docs_s_full, 2),
         "docs_per_sec_4N": round(docs_s_4n, 2) if docs_s_4n else None,
@@ -564,8 +477,6 @@ def main() -> None:
         "cores_4N": big,
         "cores_N": small,
         "sf1_skew_leg": sf1,
-        "ann_recall_at_5": ann_recall,
-        "ann_clustered": ann_clustered,
         "loadavg_per_leg": LOADAVG_LOG,
     }
     print(json.dumps(out))

@@ -1,18 +1,14 @@
 #!/usr/bin/env python3
-"""Round-7 auxiliary benchmarks (guide §1.4 isolation; bench.py is FROZEN).
+"""Auxiliary benchmarks, kept apart from bench.py (guide §1.4 isolation).
 
 Subcommands:
   kernel [n_docs] [passes]   — serial per-doc extraction kernel ms
                                (median of ``passes`` warmed passes)
-  queries [names...]         — per-query noop-sink wall seconds at
-                               $SPARK_GRAFT_SF_DIR, labeled jobs, k=3
-                               samples each, median reported
   golden                     — sha256 of kernel outputs over two fixed
                                corpora (exact-equivalence check for
                                kernel refactors)
 
-All timing uses the noop sink so the computation, not the sink, is
-measured. Results print as one JSON line for easy diffing.
+Results print as one JSON line for easy diffing.
 """
 
 from __future__ import annotations
@@ -27,9 +23,6 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def kernel(n_docs: int = 200, passes: int = 5) -> None:
@@ -74,37 +67,6 @@ def golden() -> None:
     print(json.dumps(out))
 
 
-def queries(names: list[str]) -> None:
-    from high_performance_docling_spark.pipeline import get_spark
-
-    import __spark_entry__ as E
-
-    spark = get_spark("bench-extra", master=f"local[{CPUS}]",
-                      shuffle_partitions=max(16, CPUS * 2))
-    qs = E.queries()
-    if not names:
-        names = [
-            "pricing_summary", "revenue_forecast", "top_orders_per_segment",
-            "dedup_exact", "token_count", "quality_score",
-            "sessionize_events",
-        ]
-    # warm codegen/session on the first query
-    qs[names[0]](spark, SF_DIR).write.mode("overwrite").format("noop").save()
-    out = {}
-    for name in names:
-        samples = []
-        for i in range(3):
-            spark.sparkContext.setJobDescription(f"{name} [{i}]")
-            t0 = time.monotonic()
-            qs[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            samples.append(time.monotonic() - t0)
-        spark.sparkContext.setJobDescription(None)
-        out[name] = {"median": round(statistics.median(samples), 3),
-                     "samples": [round(s, 3) for s in samples]}
-    print(json.dumps(out))
-    spark.stop()
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "kernel"
     if cmd == "kernel":
@@ -112,7 +74,5 @@ if __name__ == "__main__":
                int(sys.argv[3]) if len(sys.argv) > 3 else 5)
     elif cmd == "golden":
         golden()
-    elif cmd == "queries":
-        queries(sys.argv[2:])
     else:
         raise SystemExit(f"unknown subcommand {cmd!r}")

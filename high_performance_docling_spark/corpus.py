@@ -851,48 +851,3 @@ def generate_doc(cfg: GenConfig, doc_index: int) -> dict[str, Any]:
 
 def generate_corpus(cfg: GenConfig) -> list[dict[str, Any]]:
     return [generate_doc(cfg, i) for i in range(cfg.n_docs)]
-
-
-def clustered_embeddings_dataframe(
-    spark,
-    n_vecs: int = 8192,
-    dim: int = 64,
-    n_clusters: int = 8,
-    noise: float = 0.05,
-    seed: int = 7,
-    num_partitions: int = 16,
-):
-    """Planted-cluster embedding table (VERDICT r5 #5): ``n_clusters``
-    random unit centers, each vector = its cluster's center + N(0,
-    noise²) per component. The driver's synthetic embeddings are near-
-    isotropic, which bounds ANY partition-based ANN's recall at its scan
-    fraction; this table has real structure, so an index that captures
-    it shows recall far ABOVE scan fraction (recorded in the bench).
-
-    Distributed and deterministic PER ROW: each vec_id derives its own
-    numpy generator from (seed, vec_id) and cluster = vec_id mod
-    n_clusters, so any partitioning/reordering yields identical rows.
-    Schema matches the driver's embeddings table (vec_id, embedding
-    array<float>) with cluster_id as the planted ground truth."""
-    import numpy as _np
-
-    centers = _np.random.default_rng(seed).standard_normal(
-        (n_clusters, dim))
-    centers /= _np.linalg.norm(centers, axis=1, keepdims=True)
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            cl = (ids % n_clusters).astype(int)
-            vecs = []
-            for vid, c in zip(ids, cl):
-                rng = _np.random.default_rng(seed * 1_000_003 + int(vid))
-                v = centers[c] + noise * rng.standard_normal(dim)
-                vecs.append([float(x) for x in v.astype(_np.float32)])
-            yield pd.DataFrame(
-                {"vec_id": ids, "cluster_id": cl, "embedding": vecs})
-
-    return spark.range(n_vecs, numPartitions=num_partitions).mapInPandas(
-        fn, "vec_id long, cluster_id int, embedding array<float>")

@@ -26,6 +26,8 @@ and a ``forward`` that runs one batched inference — the Spark plumbing
 from __future__ import annotations
 
 import threading
+import time
+from collections import deque
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
@@ -126,7 +128,7 @@ def arrow_model_stage(
     forward: Callable[[Any, list], list],
     result_fn: Callable[[dict, Any], dict],
     out_schema,
-    on_complete: Callable[[int, int], None] | None = None,
+    on_complete: Callable[[int, int, float], None] | None = None,
 ):
     """Generic model-inference stage: ``mapInArrow`` over ``df``, batching
     rows across Arrow record batches into fixed-size ``forward`` calls.
@@ -134,6 +136,8 @@ def arrow_model_stage(
     - item_fn(row_dict) -> model input item
     - forward(model, items) -> one result per item
     - result_fn(row_dict, result) -> output row dict matching out_schema
+    - on_complete(n_rows, n_forward_calls, wall_ms), once per task; the
+      clock starts when the task does, not when the stage is built
 
     Output record batches are emitted per completed model batch, so the
     stage streams (bounded memory) regardless of input partition size.
@@ -144,14 +148,15 @@ def arrow_model_stage(
     arrow_schema = to_arrow_schema(out_schema)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        t0 = time.monotonic()
         batcher = FixedBatcher(spec, forward)
-        pending: list[dict] = []  # rows awaiting their model result, in order
+        pending: deque[dict] = deque()  # rows awaiting their result, in order
         done: list[dict] = []
         n_rows = 0
 
         def drain(results: Iterator[Any]) -> None:
             for res in results:
-                done.append(result_fn(pending.pop(0), res))
+                done.append(result_fn(pending.popleft(), res))
 
         for rb in batches:
             for row in rb.to_pylist():
@@ -163,7 +168,8 @@ def arrow_model_stage(
                 done = []
         drain(batcher.finish())
         if on_complete is not None:
-            on_complete(n_rows, batcher.n_forward_calls)
+            on_complete(n_rows, batcher.n_forward_calls,
+                        (time.monotonic() - t0) * 1000.0)
         if done:
             yield pa.RecordBatch.from_pylist(done, schema=arrow_schema)
 

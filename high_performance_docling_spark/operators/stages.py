@@ -233,11 +233,8 @@ def detect_stage(parsed_df, cfg: GenConfig, lineage_dir: str | None = None):
         row["detections"] = dets
         return row
 
-    t0 = time.monotonic()
-
-    def on_complete(n_rows: int, n_forwards: int) -> None:
-        _write_lineage_ms(lineage_dir, "detect", n_rows, n_rows,
-                          (time.monotonic() - t0) * 1000.0)
+    def on_complete(n_rows: int, n_forwards: int, wall_ms: float) -> None:
+        _write_lineage_ms(lineage_dir, "detect", n_rows, n_rows, wall_ms)
 
     return arrow_model_stage(parsed_df, spec, item_fn, forward, result_fn,
                              PAGES_SCHEMA, on_complete=on_complete)

@@ -1,14 +1,10 @@
-"""Structured Streaming operators (SURVEY.md §2.9).
+"""Structured Streaming surface (SURVEY.md §2.9).
 
-The reference pipeline is batch-only; these operators cover the
-streaming surface a production corpus ingestion needs: watermarked
-windowed aggregation over an event stream and an idempotent
-(exactly-once-per-epoch) foreachBatch sink.
+The reference pipeline is batch-only; these modules run the batch
+extraction over a document feed (``extract``) and screen an incoming
+document stream against a static content index (``incremental``).
 """
 
-from .windows import stream_windowed_counts, run_stream_once  # noqa: F401
-from .sketches import stream_hll_registers  # noqa: F401
-from .reservoir import stream_weighted_reservoir, es_weighted_key  # noqa: F401
 from .incremental import (  # noqa: F401
     build_content_index,
     stream_screen_incoming,

@@ -3,8 +3,8 @@
 New corpus files land in a directory (at scale: an Iceberg/Kafka feed);
 each micro-batch runs the SAME fused extraction as the batch path via
 ``foreachBatch`` — one code path for batch and streaming (the Structured
-Streaming pattern for stateless-per-document work; watermarked state is
-only needed by the windowed/sessionized operators, not here).
+Streaming pattern for stateless-per-document work, which needs no
+watermarked state).
 
 Exactly-once note: parquet append inside foreachBatch is at-least-once
 on retry; production sinks use the (batch_id)-idempotent writers (Delta/

@@ -1,9 +1,6 @@
 """Stream-static join: screen an INCOMING document stream against the
 static existing-corpus index — the streaming face of the batch
-`dedup_incremental` query (entry_queries.py), and the one structured-
-streaming join mode the rest of the streaming surface didn't yet
-exercise (windows = agg, sessions/reservoir = stateful,
-dedup = dropDuplicatesWithinWatermark, extract/WARC = foreachBatch).
+`dedup_incremental` query (entry_queries.py).
 
 Spark re-plans the static side per micro-batch, so the index can be a
 bucketed/partitioned table that broadcast- or hash-joins each delta;

@@ -19,7 +19,7 @@ n_near / keep — why each rejected doc was rejected). Re-running the
 same batch OVERWRITES its own partition and, because both screen keys
 are deterministic content functions, reproduces byte-identical
 verdicts — the replace-by-batch idempotence contract (same shape as
-iceberg.write_events_idempotent). Existing partitions are never
+iceberg.merge_commit). Existing partitions are never
 touched, so a killed job resumes by re-running its batch.
 
 Local smoke:

@@ -124,6 +124,34 @@ def test_lineage_rows_written(spark, tmp_path):
         assert any(f.startswith(f"{stage}-") for f in files), stage
 
 
+def test_detect_lineage_clock_starts_in_the_task(spark, tmp_path):
+    """The detect row's wall_ms is task time: building the stage and
+    waiting before the action must not count toward it."""
+    import json
+    import time
+
+    from high_performance_docling_spark.operators.stages import (
+        detect_stage,
+        parse_stage,
+    )
+
+    cfg = GenConfig(seed=3, n_docs=4)
+    ldir = str(tmp_path / "lineage")
+    docs = docs_dataframe(spark, cfg, num_partitions=2)
+    detected = detect_stage(parse_stage(docs, cfg), cfg, lineage_dir=ldir)
+    time.sleep(2.0)
+    t0 = time.monotonic()
+    detected.write.mode("overwrite").format("noop").save()
+    action_ms = (time.monotonic() - t0) * 1000.0
+    rows = []
+    for f in os.listdir(ldir):
+        if f.startswith("detect-"):
+            with open(os.path.join(ldir, f)) as fh:
+                rows.extend(json.loads(ln) for ln in fh)
+    assert rows
+    assert max(r["wall_ms"] for r in rows) <= action_ms
+
+
 def test_checkpoint_recovers_from_uncommitted_write(spark, tmp_path):
     """A job killed mid-write leaves the checkpoint dir WITHOUT _SUCCESS;
     a restart must treat it as absent and rewrite, not crash."""

@@ -1,70 +1,10 @@
-"""Structured Streaming smoke: watermarked windowed agg equals the batch
+"""Structured Streaming: the document-feed extraction and the
+stream-static incoming-document screen each equal the batch
 computation over the same files."""
 
 from pyspark.sql import functions as F
 
-from high_performance_docling_spark.streaming import (
-    run_stream_once,
-    stream_windowed_counts,
-)
-
 SF = "/root/testdata/sf0.001"
-
-
-def test_stream_windowed_counts_matches_batch(spark, tmp_path):
-    # the file stream source requires a directory of files
-    src = tmp_path / "events_stream"
-    src.mkdir()
-    import shutil
-
-    shutil.copy(f"{SF}/events.parquet", src / "part-0.parquet")
-    agg = stream_windowed_counts(spark, str(src), window="1 hour")
-    got = {
-        (str(r["window_start"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in run_stream_once(agg, "t_stream").collect()
-    }
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    batch = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "event_type",
-                "n_events", "total_value")
-    )
-    want = {
-        (str(r["window_start"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in batch.collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """A duplicated (at-least-once) feed dedups to the batch-distinct set;
-    state bounded by the watermark horizon."""
-    import shutil
-
-    from high_performance_docling_spark.streaming.dedup import (
-        run_stream_append,
-        stream_dedup_events,
-    )
-
-    src = tmp_path / "dup_stream"
-    src.mkdir()
-    shutil.copy(f"{SF}/events.parquet", src / "part-0.parquet")
-    shutil.copy(f"{SF}/events.parquet", src / "part-1.parquet")  # full replay
-    out = run_stream_append(
-        stream_dedup_events(spark, str(src)), "t_dedup_stream"
-    ).collect()
-    batch = spark.read.parquet(f"{SF}/events.parquet")
-    assert len(out) == batch.count()
-    assert {r["event_id"] for r in out} == {
-        r["event_id"] for r in batch.select("event_id").collect()
-    }
 
 
 def test_stream_extract_spans_matches_batch(spark, tmp_path):
@@ -96,65 +36,6 @@ def test_stream_extract_spans_matches_batch(spark, tmp_path):
         for r in extract_spans(spark, docs, cfg).collect()
     }
     assert got == want and len(got) == 16
-
-
-def test_stream_hll_registers_match_batch_and_estimate(spark, tmp_path):
-    """Mergeability: HLL registers streamed across micro-batches equal
-    the batch registers over the same files (byte-identical — max is
-    commutative/associative/idempotent, hash deterministic), and the
-    shared finalization yields the batch estimate."""
-    import shutil
-
-    from high_performance_docling_spark.operators import sketches as SK
-    from high_performance_docling_spark.streaming import stream_hll_registers
-
-    src = tmp_path / "events_hll"
-    src.mkdir()
-    shutil.copy(f"{SF}/events.parquet", src / "part-0.parquet")
-    # duplicate feed: at-least-once delivery must not move a register
-    shutil.copy(f"{SF}/events.parquet", src / "part-1.parquet")
-
-    regs = stream_hll_registers(spark, str(src), window="1 hour")
-    got = {
-        (str(r["window_start"]), r["event_type"], r["reg"]): r["mx"]
-        for r in run_stream_once(regs, "t_hll").collect()
-    }
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    reg, rho = SK.hll_reg_rho(F.col("user_id"))
-    batch_regs = (
-        ev.select("ts", "event_type", reg, rho)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type", "reg")
-        .agg(F.max("rho").alias("mx"))
-        .select(F.col("w.start").alias("window_start"), "event_type",
-                "reg", "mx")
-    )
-    want = {
-        (str(r["window_start"]), r["event_type"], r["reg"]): r["mx"]
-        for r in batch_regs.collect()
-    }
-    assert got == want and len(got) > 0
-
-    # shared finalization over the streamed registers == batch estimate
-    streamed = spark.createDataFrame(
-        [(k[0], k[1], k[2], v) for k, v in got.items()],
-        ["window_start", "event_type", "reg", "mx"],
-    )
-    est_s = {
-        (r["window_start"], r["event_type"]): r["hll_estimate"]
-        for r in SK.hll_estimate_from_registers(
-            streamed, ["window_start", "event_type"]).collect()
-    }
-    est_b = {
-        (str(r["window_start"]), r["event_type"]): r["hll_estimate"]
-        for r in SK.hll_estimate_from_registers(
-            batch_regs.withColumn(
-                "window_start", F.col("window_start").cast("string")),
-            ["window_start", "event_type"]).collect()
-    }
-    assert est_s == est_b and len(est_s) > 0
 
 
 def test_stream_screen_incoming_matches_batch(spark, tmp_path):
@@ -220,145 +101,3 @@ def test_stream_screen_incoming_matches_batch(spark, tmp_path):
     assert {k for k, v in got.items() if v[1] == 0} == {
         k for k, v in want.items() if v[0] > 0
     }
-
-
-def test_stream_cms_counters_match_batch_on_duplicated_feed(spark, tmp_path):
-    """Exactly-once counting under at-least-once delivery: the stream
-    dedups event_ids within the watermark BEFORE counting, so a
-    duplicated feed yields the same counters as ONE batch pass — and
-    the counters use the same cms_bucket hash as the batch
-    heavy-hitters query, so they are interchangeable for estimates."""
-    import shutil
-
-    from high_performance_docling_spark.operators.sketches import cms_bucket
-    from high_performance_docling_spark.streaming.sketches import (
-        stream_cms_counters,
-    )
-
-    src = tmp_path / "events_cms"
-    src.mkdir()
-    shutil.copy(f"{SF}/events.parquet", src / "part-0.parquet")
-    shutil.copy(f"{SF}/events.parquet", src / "part-1.parquet")  # replay
-
-    counters = stream_cms_counters(spark, str(src), window="1 hour")
-    got = {
-        (str(r["window_start"]), r["row"], r["bucket"]): r["c"]
-        for r in run_stream_once(counters, "t_cms").collect()
-    }
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    cells = ev.select(
-        "ts",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("row"),
-                    cms_bucket(F.col("user_id"), i).alias("bucket"),
-                )
-                for i in range(4)
-            ])
-        ).alias("rb"),
-    )
-    want = {
-        (str(r["window_start"]), r["row"], r["bucket"]): r["c"]
-        for r in cells.groupBy(
-            F.window("ts", "1 hour").alias("wd"), "rb.row", "rb.bucket"
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select(F.col("wd.start").alias("window_start"), "row",
-                "bucket", "c")
-        .collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_stream_stream_attribution_join_matches_batch(spark, tmp_path):
-    """Stream-stream interval join (watermarked both sides) produces
-    exactly the batch interval join over the same files."""
-    import shutil
-
-    from high_performance_docling_spark.streaming.joins import (
-        _typed, attribution_join, stream_attribution,
-    )
-
-    src = tmp_path / "events_attr"
-    src.mkdir()
-    shutil.copy(f"{SF}/events.parquet", src / "part-0.parquet")
-
-    from high_performance_docling_spark.streaming.dedup import (
-        run_stream_append,
-    )
-
-    streamed = stream_attribution(spark, str(src), window="30 minutes")
-    got = sorted(
-        (r["user_id"], r["click_id"], r["purchase_id"])
-        for r in run_stream_append(streamed, "t_attr").collect()
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    batch = attribution_join(
-        _typed(ev, "click", "c"), _typed(ev, "purchase", "p"),
-        window="30 minutes",
-    )
-    want = sorted(
-        (r["user_id"], r["click_id"], r["purchase_id"])
-        for r in batch.collect()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_native_session_windows_match_batch(spark, tmp_path):
-    """Native session_window streamed == batch session_window over the
-    same files, and both agree with the gap semantics of the custom
-    sessionizer (same session count per user for the same gap)."""
-    import shutil
-
-    from high_performance_docling_spark.streaming.windows import (
-        stream_session_windows,
-    )
-
-    src = tmp_path / "events_sw"
-    src.mkdir()
-    shutil.copy(f"{SF}/events.parquet", src / "part-0.parquet")
-
-    got = sorted(
-        map(str, run_stream_once(
-            stream_session_windows(spark, str(src), gap="30 minutes"),
-            "t_sw",
-        ).collect())
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    batch = (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events", "session_value",
-        )
-    )
-    want = sorted(map(str, batch.collect()))
-    assert got == want and len(got) > 0
-    # session COUNT per user agrees with the 30-min-gap cumsum
-    # sessionizer (same gap semantics, different machinery)
-    from high_performance_docling_spark.entry_queries import QUERIES
-
-    sess = QUERIES["sessionize_events"](spark, SF)
-    want_counts = {
-        r["user_id"]: r["n"]
-        for r in sess.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    got_counts: dict[int, int] = {}
-    for row in batch.select("user_id").collect():
-        got_counts[row["user_id"]] = got_counts.get(row["user_id"], 0) + 1
-    assert got_counts == want_counts
