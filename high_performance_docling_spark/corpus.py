@@ -28,6 +28,7 @@ from __future__ import annotations
 import math
 import random
 import re
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -292,7 +293,7 @@ class TypesetElement:
     r: float
     b: float
     cell_ixs: list[int] = field(default_factory=list)  # page-local cell indices
-    lines: list[str] = field(default_factory=list)
+    lines: Sequence[str] = ()  # rendered spans share one cached tuple
     scanned: bool = False  # image-only region: blank cells, OCR fills text
 
 
@@ -371,22 +372,23 @@ def typeset(doc_id: str, spans: list[dict[str, Any]], cfg: GenConfig) -> list[Ty
 
     # memoized per-span derived data: pure functions of (spans, marker),
     # recomputed otherwise on every placement attempt / column retry
-    _rl_cache: dict[int, list[str]] = {}
+    _rl_cache: dict[int, tuple[str, ...]] = {}
     _bh_cache: dict[int, float] = {}
     _grid_cache: dict[int, list[list[str]]] = {}
 
-    def rendered_lines(ix: int) -> list[str]:
+    def rendered_lines(ix: int) -> tuple[str, ...]:
         """Span text → typeset lines (list items carry the doc marker).
-        Cached: callers only read/slice the list (el.lines is write-only
-        downstream), so sharing one list per span is safe."""
+        Cached and shared by every element of the span, so it is a tuple:
+        an in-place edit of one element's lines raises instead of
+        corrupting its siblings."""
         lines = _rl_cache.get(ix)
         if lines is None:
             sp = spans[ix]
-            lines = sp["text"].split("\n")
+            parts = sp["text"].split("\n")
             if marker and sp["kind"] == L.LIST_ITEM:
                 m = f"{list_number[ix]}. " if marker == "1." else marker
-                lines = [m + lines[0]] + lines[1:]
-            _rl_cache[ix] = lines
+                parts[0] = m + parts[0]
+            lines = _rl_cache[ix] = tuple(parts)
         return lines
 
     def grid_rows_of(ix: int) -> list[list[str]]:
@@ -487,7 +489,7 @@ def typeset(doc_id: str, spans: list[dict[str, Any]], cfg: GenConfig) -> list[Ty
             y += ATTACH_GAP if k + 1 < len(group) else 0.0
         return y
 
-    def place_lines(page: TypesetPage, ix: int, kind: str, lines: list[str],
+    def place_lines(page: TypesetPage, ix: int, kind: str, lines: Sequence[str],
                     x0: float, col_w: float, y: float, rng: random.Random,
                     scanned: bool = False) -> float:
         el = TypesetElement(ix, kind, page.page_no, x0, y, x0, y,

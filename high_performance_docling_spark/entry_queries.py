@@ -1,8 +1,8 @@
 """Driver-facing query registry: Spark implementations + DuckDB oracles.
 
 Each entry demonstrates an operator family from SURVEY.md §2 (or a
-training-data-pipeline operator from the task brief) on the driver's
-testdata tables, with an ANSI-SQL oracle the driver cross-checks in
+training-data-pipeline operator) on the `documents` table, with an
+ANSI-SQL oracle that scripts/verify_queries.py cross-checks in
 DuckDB. Non-SQL-expressible entries (the docling extraction pipeline
 itself) have no oracle and get a rows-only check.
 
@@ -18,6 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import Window as W
 
+from .operators import dedup as DD
+from .operators import text_analysis as TA
 from .operators.classifier import lr_iter_sql as _lr_iter_sql
 
 
@@ -25,22 +27,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from .util import read_table
 
     return read_table(spark, sf_dir, name)
-
-
-def _utc_plan(spark: SparkSession, build) -> DataFrame:
-    """Build + ANALYZE a plan under session TZ UTC, then restore the
-    caller's TZ. Spark binds the session timezone into timestamp casts at
-    analysis time, so forcing analysis here pins UTC semantics into the
-    returned plan without leaking a session-wide config mutation."""
-    prev = spark.conf.get("spark.sql.session.timeZone", None)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        df = build()
-        df.schema  # force analysis: UTC is captured into the plan now
-        return df
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.session.timeZone", prev)
 
 
 # --------------------------------------------------------------------------
@@ -192,80 +178,6 @@ FROM s ORDER BY media_id
 
 
 # --------------------------------------------------------------------------
-# relational operator coverage (SURVEY.md §2.2/2.4/2.5) on TPC-H-ish tables
-# --------------------------------------------------------------------------
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: multi-agg groupBy with filter pushdown (§2.4)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-ORACLE_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2)                                AS sum_qty,
-       round(sum(l_extendedprice), 2)                           AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2)        AS sum_disc_price,
-       round(avg(l_quantity), 4)                                AS avg_qty,
-       round(avg(l_discount), 4)                                AS avg_disc,
-       count(*)                                                 AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join + window top-K per group (§2.5 'top-1 per pdf cell' pattern:
-    row_number over partitioned desc ordering). Customer dim is broadcast."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    j = orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-    w = W.partitionBy("c_mktsegment").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        j.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select(
-            "c_mktsegment",
-            "rk",
-            "o_orderkey",
-            F.round("o_totalprice", 2).alias("total_price"),
-        )
-        .orderBy("c_mktsegment", "rk")
-    )
-
-
-ORACLE_TOP_ORDERS_PER_SEGMENT = """
-SELECT c_mktsegment, rk, o_orderkey, total_price FROM (
-  SELECT c_mktsegment,
-         row_number() OVER (PARTITION BY c_mktsegment
-                            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk,
-         o_orderkey,
-         round(o_totalprice, 2) AS total_price
-  FROM orders JOIN customer ON o_custkey = c_custkey
-) WHERE rk <= 5
-ORDER BY c_mktsegment, rk
-"""
-
-
-# --------------------------------------------------------------------------
 # training-data pipeline: dedup / text analysis (task brief) on `documents`
 # --------------------------------------------------------------------------
 
@@ -351,149 +263,6 @@ SELECT doc_id,
                                                         AS stopword_ratio
 FROM t
 ORDER BY doc_id
-"""
-
-
-# --------------------------------------------------------------------------
-# relational geometry (SURVEY.md §2.3/2.4/2.5 relational formulations)
-# --------------------------------------------------------------------------
-
-from .operators import relational_geometry as RG  # noqa: E402
-from .operators import dedup as DD  # noqa: E402
-from .operators import text_analysis as TA  # noqa: E402
-
-_GEO_CTE = f"WITH cells AS ({RG.CELLS_SQL}), clusters AS ({RG.CLUSTERS_SQL})"
-
-ORACLE_GEO_ARGMAX = _GEO_CTE + """
-, pairs AS (
-  SELECT c.cell_id, k.cluster_id,
-         round(greatest(least(c.r, k.r) - greatest(c.l, k.l), 0)
-             * greatest(least(c.b, k.b) - greatest(c.t, k.t), 0)
-             / ((c.r - c.l) * (c.b - c.t)), 6) AS ios
-  FROM cells c JOIN clusters k ON c.page = k.page
-)
-SELECT cell_id, cluster_id, ios FROM (
-  SELECT *, row_number() OVER (PARTITION BY cell_id
-                               ORDER BY ios DESC, cluster_id ASC) AS rk
-  FROM pairs WHERE ios > 0.2
-) WHERE rk = 1
-"""
-
-ORACLE_GEO_ENVELOPE = _GEO_CTE + """
-, pairs AS (
-  SELECT c.cell_id, k.cluster_id, c.l, c.t, c.r, c.b,
-         round(greatest(least(c.r, k.r) - greatest(c.l, k.l), 0)
-             * greatest(least(c.b, k.b) - greatest(c.t, k.t), 0)
-             / ((c.r - c.l) * (c.b - c.t)), 6) AS ios
-  FROM cells c JOIN clusters k ON c.page = k.page
-),
-assigned AS (
-  SELECT * FROM (
-    SELECT *, row_number() OVER (PARTITION BY cell_id
-                                 ORDER BY ios DESC, cluster_id ASC) AS rk
-    FROM pairs WHERE ios > 0.2
-  ) WHERE rk = 1
-)
-SELECT cluster_id, min(l) AS env_l, min(t) AS env_t,
-       max(r) AS env_r, max(b) AS env_b, count(*) AS n_cells
-FROM assigned GROUP BY cluster_id
-"""
-
-ORACLE_GEO_CONTAINMENT = _GEO_CTE + """
-SELECT c.cluster_id AS child_id, k.cluster_id AS parent_id,
-       round(greatest(least(c.r, k.r) - greatest(c.l, k.l), 0)
-           * greatest(least(c.b, k.b) - greatest(c.t, k.t), 0)
-           / ((c.r - c.l) * (c.b - c.t)), 6) AS ios
-FROM clusters c JOIN clusters k
-  ON c.page = k.page AND c.cluster_id != k.cluster_id
-WHERE greatest(least(c.r, k.r) - greatest(c.l, k.l), 0)
-    * greatest(least(c.b, k.b) - greatest(c.t, k.t), 0)
-    / ((c.r - c.l) * (c.b - c.t)) > 0.8
-"""
-
-ORACLE_GEO_READING_ORDER = _GEO_CTE + """
-SELECT page, cluster_id,
-       row_number() OVER (PARTITION BY page ORDER BY t, l, cluster_id)
-         AS reading_rank
-FROM clusters
-"""
-
-ORACLE_GEO_COMPACTION = _GEO_CTE + """
-SELECT page, cell_id,
-       dense_rank() OVER (PARTITION BY page ORDER BY t) - 1 AS row_idx,
-       dense_rank() OVER (PARTITION BY page ORDER BY l) - 1 AS col_idx
-FROM cells
-"""
-
-ORACLE_GEO_ALIGNMENT = _GEO_CTE + """
-, agg AS (
-  SELECT page, l AS col_band,
-         max(l) - min(l) AS d_left,
-         max((l + r) / 2) - min((l + r) / 2) AS d_mid,
-         max(r) - min(r) AS d_right,
-         count(*) AS n
-  FROM cells GROUP BY page, l
-)
-SELECT page, col_band, n,
-       CASE WHEN d_left = least(d_left, d_mid, d_right) THEN 'left'
-            WHEN d_mid  = least(d_left, d_mid, d_right) THEN 'middle'
-            ELSE 'right' END AS alignment
-FROM agg
-"""
-
-
-def q_geo_argmax(spark, sf_dir):
-    return RG.cell_cluster_argmax_join(spark, sf_dir)
-
-
-def q_geo_envelope(spark, sf_dir):
-    return RG.cluster_envelope_agg(spark, sf_dir)
-
-
-def q_geo_containment(spark, sf_dir):
-    return RG.containment_join(spark, sf_dir)
-
-
-def q_geo_reading_order(spark, sf_dir):
-    return RG.reading_order_rank(spark, sf_dir)
-
-
-def q_geo_compaction(spark, sf_dir):
-    return RG.row_col_compaction(spark, sf_dir)
-
-
-def q_geo_alignment(spark, sf_dir):
-    return RG.column_alignment_vote(spark, sf_dir)
-
-
-def q_geo_kv_suppression(spark, sf_dir):
-    return RG.kv_suppression_antijoin(spark, sf_dir)
-
-
-ORACLE_GEO_KV_SUPPRESSION = f"""
-WITH clusters AS ({RG.CLUSTERS_SQL}),
-wrappers AS (
-  SELECT o_orderkey AS wrapper_id,
-         o_orderkey % {RG.N_PAGES} AS page,
-         (o_custkey % 20) * 30 AS l,
-         (o_orderkey % 40) * 18 AS t,
-         (o_custkey % 20) * 30 + 35 AS r,
-         (o_orderkey % 40) * 18 + 22 AS b,
-         ((o_orderkey % 40) + 55) / 100.0 AS conf
-  FROM orders WHERE o_orderkey % 17 = 0
-),
-tables AS (SELECT *, ((cluster_id % 50) + 50) / 100.0 AS conf FROM clusters)
-SELECT w.wrapper_id, w.page, round(w.conf, 6) AS conf
-FROM wrappers w
-WHERE NOT EXISTS (
-  SELECT 1 FROM tables k
-  WHERE w.page = k.page
-    AND greatest(least(w.r, k.r) - greatest(w.l, k.l), 0)
-      * greatest(least(w.b, k.b) - greatest(w.t, k.t), 0)
-      / ((w.r - w.l) * (w.b - w.t)) > 0.9
-    AND w.conf - k.conf < 0.1
-)
-ORDER BY wrapper_id
 """
 
 
@@ -1002,152 +771,8 @@ FROM t ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# confidence report (base_models.py:379-459 relationally) + markdown export
+# markdown export (the pipeline's export sink)
 # --------------------------------------------------------------------------
-
-def q_confidence_report(spark, sf_dir):
-    """Full ConfidenceReport semantics (base_models.py:379-459) on the
-    relational corpus, ALL FOUR sub-scores (VERDICT r2 #6):
-      layout_score = mean cluster confidence      (layout_model.py:243)
-      ocr_score    = mean cell confidence         (:247)
-      parse_score  = low-decile (q=0.10, linear interpolation) of
-                     per-cell text-quality ratings — the docling parse
-                     analogue (kernels/confidence.py text_quality)
-      table_score  = mean confidence of TABLE-family clusters
-                     (cluster_id % 5 == 0 act as tables); NULL when the
-                     page has none — reported as the -1.0 sentinel so
-                     the value-hash compare is engine-portable
-    Page mean = nanmean over the SET scores; page low = nanquantile
-    q=0.05 with numpy's linear interpolation over the sorted set scores.
-    Doc roll-up (pages grouped 5-per-doc): mean of page means, MEAN of
-    page lows (:443-459 — a mean, not a quantile). The same kernels run
-    on real pipeline output via extract_spans(with_confidence=True)."""
-    def grade(col):
-        # score→grade thresholds from base_models.py:385-394
-        return (
-            F.when(col < 0.5, "poor")
-            .when(col < 0.8, "fair")
-            .when(col < 0.9, "good")
-            .otherwise("excellent")
-        )
-
-    clusters = RG.clusters_rel(spark, sf_dir).withColumn(
-        "conf", ((F.col("cluster_id") % 50) + 50) / 100.0
-    )
-    lay = clusters.groupBy("page").agg(
-        F.round(F.avg("conf"), 6).alias("layout_score")
-    )
-    tab = (
-        clusters.filter(F.col("cluster_id") % 5 == 0)
-        .groupBy("page")
-        .agg(F.round(F.avg("conf"), 6).alias("table_score"))
-    )
-    cells = RG.cells_rel(spark, sf_dir).withColumn(
-        "conf", ((F.col("cell_id") % 30) + 70) / 100.0
-    ).withColumn("tq", ((F.col("cell_id") % 41) + 55) / 100.0)
-    ocr = cells.groupBy("page").agg(
-        F.round(F.avg("conf"), 6).alias("ocr_score"),
-        F.round(F.percentile("tq", 0.10), 6).alias("parse_score"),
-    )
-    scores = F.array_sort(
-        F.filter(
-            F.array("parse_score", "layout_score", "table_score", "ocr_score"),
-            lambda x: x.isNotNull(),
-        )
-    )
-    n = F.size(scores)
-    pos = F.lit(0.05) * (n - 1).cast("double")
-    i = F.floor(pos).cast("int")
-    q1 = F.element_at(scores, i + 1)
-    q2 = F.element_at(scores, F.least(i + F.lit(2), n))
-    page = (
-        lay.join(ocr, "page")
-        .join(tab, "page", "left")
-        .withColumn("_s", scores)
-        .withColumn(
-            "mean_score",
-            F.round(
-                F.aggregate("_s", F.lit(0.0), lambda a, x: a + x) / n, 6
-            ),
-        )
-        .withColumn("low_score", F.round(q1 + (pos - i) * (q2 - q1), 6))
-        .withColumn("doc_id", F.floor(F.col("page") / 5).cast("long"))
-    )
-    doc = page.groupBy("doc_id").agg(
-        F.round(F.avg("mean_score"), 6).alias("doc_mean_score"),
-        F.round(F.avg("low_score"), 6).alias("doc_low_score"),
-    )
-    return (
-        page.join(doc, "doc_id")
-        .select(
-            "doc_id", "page",
-            "parse_score", "layout_score",
-            F.coalesce("table_score", F.lit(-1.0)).alias("table_score"),
-            "ocr_score", "mean_score", "low_score",
-            grade(F.col("mean_score")).alias("mean_grade"),
-            grade(F.col("low_score")).alias("low_grade"),
-            "doc_mean_score", "doc_low_score",
-            grade(F.col("doc_mean_score")).alias("doc_mean_grade"),
-            grade(F.col("doc_low_score")).alias("doc_low_grade"),
-        )
-        .orderBy("page")
-    )
-
-
-ORACLE_CONFIDENCE_REPORT = _GEO_CTE + """
-, lay AS (
-  SELECT page, round(avg(((cluster_id % 50) + 50) / 100.0), 6) AS layout_score
-  FROM clusters GROUP BY page
-),
-tab AS (
-  SELECT page, round(avg(((cluster_id % 50) + 50) / 100.0), 6) AS table_score
-  FROM clusters WHERE cluster_id % 5 = 0 GROUP BY page
-),
-ocr AS (
-  SELECT page, round(avg(((cell_id % 30) + 70) / 100.0), 6) AS ocr_score,
-         round(quantile_cont(((cell_id % 41) + 55) / 100.0, 0.10), 6)
-           AS parse_score
-  FROM cells GROUP BY page
-),
-s AS (
-  SELECT page, parse_score, layout_score, table_score, ocr_score,
-         list_sort(list_filter(
-           [parse_score, layout_score, table_score, ocr_score],
-           x -> x IS NOT NULL)) AS arr
-  FROM lay JOIN ocr USING (page) LEFT JOIN tab USING (page)
-),
-p AS (
-  SELECT page, parse_score, layout_score, table_score, ocr_score,
-         round(list_sum(arr) / len(arr), 6) AS mean_score,
-         round(arr[(0.05 * (len(arr) - 1))::INT + 1]
-               + (0.05 * (len(arr) - 1)
-                  - floor(0.05 * (len(arr) - 1)))
-                 * (arr[least((0.05 * (len(arr) - 1))::INT + 2, len(arr))]
-                    - arr[(0.05 * (len(arr) - 1))::INT + 1]), 6) AS low_score,
-         page // 5 AS doc_id
-  FROM s
-),
-d AS (
-  SELECT doc_id, round(avg(mean_score), 6) AS doc_mean_score,
-         round(avg(low_score), 6) AS doc_low_score
-  FROM p GROUP BY doc_id
-)
-SELECT doc_id, page,
-       parse_score, layout_score,
-       coalesce(table_score, -1.0) AS table_score, ocr_score,
-       mean_score, low_score,
-       CASE WHEN mean_score < 0.5 THEN 'poor' WHEN mean_score < 0.8 THEN 'fair'
-            WHEN mean_score < 0.9 THEN 'good' ELSE 'excellent' END AS mean_grade,
-       CASE WHEN low_score < 0.5 THEN 'poor' WHEN low_score < 0.8 THEN 'fair'
-            WHEN low_score < 0.9 THEN 'good' ELSE 'excellent' END AS low_grade,
-       doc_mean_score, doc_low_score,
-       CASE WHEN doc_mean_score < 0.5 THEN 'poor' WHEN doc_mean_score < 0.8 THEN 'fair'
-            WHEN doc_mean_score < 0.9 THEN 'good' ELSE 'excellent' END AS doc_mean_grade,
-       CASE WHEN doc_low_score < 0.5 THEN 'poor' WHEN doc_low_score < 0.8 THEN 'fair'
-            WHEN doc_low_score < 0.9 THEN 'good' ELSE 'excellent' END AS doc_low_grade
-FROM p JOIN d USING (doc_id) ORDER BY page
-"""
-
 
 def q_export_markdown(spark, sf_dir):
     """Markdown rendering through the real to_markdown operator (the
@@ -1203,28 +828,6 @@ SELECT doc_id,
     '## ' || nullif(coalesce(s1, ''), ''),
     '# ' || nullif(coalesce(s0, ''), '')) AS markdown
 FROM s ORDER BY doc_id
-"""
-
-
-def q_skew_salted_agg(spark, sf_dir):
-    """Two-phase salted aggregation (AGG-skew guard): identical result to
-    the plain GROUP BY (the oracle), shuffle spread over 16 subkeys."""
-    from .operators.skew import salted_agg
-
-    ev = _t(spark, sf_dir, "events")
-    return salted_agg(
-        ev, "user_id", F.col("event_id"), 16,
-        partial_aggs=[F.sum("value").alias("pv"), F.count(F.lit(1)).alias("pc")],
-        final_aggs=[
-            F.round(F.sum("pv"), 2).alias("total_value"),
-            F.sum("pc").alias("n_events"),
-        ],
-    ).orderBy("user_id")
-
-
-ORACLE_SKEW_SALTED_AGG = """
-SELECT user_id, round(sum(value), 2) AS total_value, count(*) AS n_events
-FROM events GROUP BY user_id ORDER BY user_id
 """
 
 
@@ -1964,7 +1567,8 @@ def q_url_domain_stats(spark, sf_dir):
     query flag with the shared Java∩RE2 regexes, and aggregate per
     registrable domain. The oracle synthesizes and parses the identical
     strings. Scale shape: pure projection + one hash agg on the domain
-    key (salt via operators/skew for mega-domains)."""
+    key, planned as two shuffles because of the distinct host count:
+    the first on (domain, host), the second on the domain alone."""
     from .operators import url_ops as UO
 
     docs = _t(spark, sf_dir, "documents")
@@ -2444,8 +2048,8 @@ def q_domain_balanced_sample(spark, sf_dir):
     double, append-stable).
 
     Scale shape: PSL projections + ONE keyed shuffle (the domain
-    frequency agg; map-side combine, domain keys are the power-law
-    case — salt via operators/skew if one domain exceeds a partition),
+    frequency agg; map-side combine folds each power-law domain key to
+    one row per input partition before the shuffle),
     a frequency join (broadcast at test scale; the frequency table is
     |domains| rows, far smaller than the corpus), then
     TakeOrderedAndProject."""
@@ -2688,154 +2292,6 @@ SELECT rk, doc_id, n_terms_matched, score FROM (
 """
 
 
-def q_link_pagerank(spark, sf_dir):
-    """PageRank over a deterministic hash-derived link graph (the
-    domain-authority signal of a crawl pipeline): each doc links to 3
-    md5-chosen targets, 3 power iterations, damping 0.85. Every
-    iteration is one edges⋈ranks join + one groupBy(dst) agg; the
-    oracle replays graph construction AND all 3 iterations in unrolled
-    SQL CTEs, so the hash match certifies the iterative math (the
-    kmeans/logistic replay pattern). Contributions and ranks round to
-    9 each iteration (in-degree ~Poisson(3) keeps per-node sums to a
-    handful of addends); the teleport constant is computed as
-    (1.0 - 0.85) on BOTH sides — the literal 0.15 is a different
-    double than the subtraction result."""
-    from .operators import graph as G
-
-    docs = _t(spark, sf_dir, "documents")
-    edges = G.hash_link_edges(docs, n_links=3)
-    pr = G.pagerank(docs, edges, n_iter=3, damping=0.85)
-    return pr.select(
-        "doc_id", (F.round(F.col("rank"), 6) + F.lit(0.0)).alias("rank")
-    ).orderBy("doc_id")
-
-
-def _pr_iter_sql(i: int) -> str:
-    """One unrolled PageRank iteration: contributions from r{i-1},
-    then the damped per-node sum into r{i}."""
-    return f"""
-c{i} AS (
-  SELECT e.dst AS node, round(r.rank / o.deg, 9) AS w
-  FROM edges e
-  JOIN r{i - 1} r ON e.src = r.node
-  JOIN outdeg o ON e.src = o.src
-),
-r{i} AS (
-  SELECT i.node,
-         round((1.0 - 0.85) / (SELECT n FROM n)
-               + 0.85 * coalesce(sum(c.w), 0.0), 9) AS rank
-  FROM ids i LEFT JOIN c{i} c ON c.node = i.node
-  GROUP BY i.node
-)"""
-
-
-ORACLE_LINK_PAGERANK = f"""
-WITH n AS (SELECT count(*) AS n FROM documents),
-ids AS (SELECT doc_id AS node FROM documents),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src,
-           ('0x' || substr(md5('pr' || j || ':' || doc_id), 1, 14))::BIGINT
-             % (SELECT n FROM n) AS dst
-    FROM documents, (VALUES (1), (2), (3)) AS l(j)
-  ) WHERE src != dst
-),
-outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-r0 AS (
-  SELECT node, round(1.0 / (SELECT n FROM n), 9) AS rank FROM ids
-),{_pr_iter_sql(1)},{_pr_iter_sql(2)},{_pr_iter_sql(3)}
-SELECT node AS doc_id, round(rank, 6) + 0.0 AS rank
-FROM r3 ORDER BY doc_id
-"""
-
-
-FUZZY_MENTIONS = [
-    "red widgit", "blu bolt", "smal ring", "hott gear",
-    "old anvill", "newplate", "larg rod", "cold gizmoo",
-    "zzz unknown",
-]
-
-
-def q_fuzzy_name_pairs(spark, sf_dir):
-    """Blocked fuzzy self-join: distinct part-name pairs within edit
-    distance 3, compared ONLY inside first-token blocks — the
-    record-linkage primitive that avoids the |catalog|^2 cross join.
-    levenshtein is a JVM builtin on both engines (no Python in the
-    hot path); the oracle replays the same block + threshold."""
-    from .operators import linkage as LK
-
-    part = _t(spark, sf_dir, "part")
-    return LK.blocked_name_pairs(part, name_col="p_name", max_dist=3).orderBy(
-        "name_a", "name_b"
-    )
-
-
-ORACLE_FUZZY_NAME_PAIRS = r"""
-WITH names AS (SELECT DISTINCT p_name AS name FROM part),
-b AS (
-  SELECT name,
-         list_extract(regexp_split_to_array(name, '\s+'), 1) AS blk
-  FROM names
-)
-SELECT x.name AS name_a, y.name AS name_b,
-       levenshtein(x.name, y.name) AS dist
-FROM b x JOIN b y ON x.blk = y.blk AND x.name < y.name
-WHERE levenshtein(x.name, y.name) <= 3
-ORDER BY name_a, name_b
-"""
-
-
-def q_fuzzy_match_parts(spark, sf_dir):
-    """Dirty-mention entity resolution: 9 misspelled part mentions
-    resolved against the distinct catalog via two blocking passes
-    (3-char prefix of the first and last token — a typo must corrupt
-    both token heads to escape), best match = min(dist, name) struct
-    argmin, kept iff dist <= 3. The unmatched sentinel mention proves
-    the threshold actually drops rows. Mentions are a literal list on
-    both sides (the LSH literal-weight oracle pattern)."""
-    from .operators import linkage as LK
-
-    part = _t(spark, sf_dir, "part")
-    mentions = spark.createDataFrame(
-        [(m,) for m in FUZZY_MENTIONS], ["mention"]
-    )
-    return LK.resolve_mentions(mentions, part, max_dist=3).orderBy("mention")
-
-
-_MENTION_VALUES = ", ".join(f"('{m}')" for m in FUZZY_MENTIONS)
-
-ORACLE_FUZZY_MATCH_PARTS = rf"""
-WITH mentions(mention) AS (VALUES {_MENTION_VALUES}),
-cat AS (SELECT DISTINCT lower(p_name) AS name FROM part),
-mk AS (
-  SELECT mention, unnest([
-    'h:' || substr(list_extract(regexp_split_to_array(mention, '\s+'), 1), 1, 3),
-    't:' || substr(list_extract(regexp_split_to_array(mention, '\s+'), -1), 1, 3)
-  ]) AS blk
-  FROM (SELECT lower(mention) AS mention FROM mentions)
-),
-ck AS (
-  SELECT name, unnest([
-    'h:' || substr(list_extract(regexp_split_to_array(name, '\s+'), 1), 1, 3),
-    't:' || substr(list_extract(regexp_split_to_array(name, '\s+'), -1), 1, 3)
-  ]) AS blk
-  FROM cat
-),
-cand AS (SELECT DISTINCT mention, name FROM mk JOIN ck USING (blk)),
-scored AS (
-  SELECT mention, name, levenshtein(mention, name) AS dist
-  FROM cand
-  WHERE levenshtein(mention, name) <= 3
-)
-SELECT mention, matched_name, dist FROM (
-  SELECT mention, name AS matched_name, dist,
-         row_number() OVER (PARTITION BY mention
-                            ORDER BY dist, name) AS rk
-  FROM scored
-) WHERE rk = 1 ORDER BY mention
-"""
-
-
 _PROFILE_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
 
@@ -2860,50 +2316,6 @@ ORACLE_PROFILE_DOCUMENTS = "\nUNION ALL\n".join(
 FROM documents"""
     for c in _PROFILE_COLS
 ) + "\nORDER BY col_name"
-
-
-def q_anomaly_mad(spark, sf_dir):
-    """Robust per-type outlier detection over event values: median +
-    MAD (both exact interpolated percentiles, rounded to 6 on both
-    engines before any downstream math), Iglewicz-Hoaglin score
-    0.6745*(x-med)/MAD, flag |score| > 3.5. Two group aggregations +
-    two broadcast joins back — the fact table shuffles only on its
-    group key."""
-    from .operators import anomaly as AN
-
-    ev = _t(spark, sf_dir, "events")
-    out = AN.mad_outliers(ev, group_col="event_type", value_col="value")
-    return out.select(
-        "event_id", "event_type",
-        (F.round("value", 6) + F.lit(0.0)).alias("value"),
-        "med", "mad", "score",
-    ).orderBy("event_id")
-
-
-ORACLE_ANOMALY_MAD = """
-WITH med AS (
-  SELECT event_type,
-         round(quantile_cont(value, 0.5), 6) + 0.0 AS med
-  FROM events GROUP BY event_type
-),
-dev AS (
-  SELECT e.event_id, e.event_type, e.value, m.med,
-         abs(round(e.value - m.med, 6)) AS adev
-  FROM events e JOIN med m USING (event_type)
-),
-mad AS (
-  SELECT event_type,
-         round(quantile_cont(adev, 0.5), 6) + 0.0 AS mad
-  FROM dev GROUP BY event_type
-)
-SELECT event_id, d.event_type,
-       round(value, 6) + 0.0 AS value, d.med, m.mad,
-       round(0.6745 * round(value - d.med, 6) / m.mad, 6) + 0.0 AS score
-FROM dev d JOIN mad m USING (event_type)
-WHERE m.mad > 0.0
-  AND abs(round(0.6745 * round(value - d.med, 6) / m.mad, 6) + 0.0) > 3.5
-ORDER BY event_id
-"""
 
 
 def q_quality_tiers(spark, sf_dir):
@@ -3090,51 +2502,6 @@ SELECT rk, w1, w2, c_ab, pmi FROM (
 """
 
 
-def q_graph_triangles(spark, sf_dir):
-    """Per-node triangle counts on the (undirected) hash-link graph —
-    the clustering-coefficient numerator and the other classic graph
-    pattern next to link_pagerank's power iteration. The canonical
-    distributed recipe: orient every undirected edge low->high, join
-    e1=(a,b) with e2=(b,c) to get open wedges, close them against
-    e3=(a,c) — each triangle counted exactly once because a < b < c.
-    The oracle replays graph construction and the wedge-close join."""
-    from .operators import graph as G
-
-    docs = _t(spark, sf_dir, "documents")
-    edges = G.hash_link_edges(docs, n_links=3)
-    return G.triangle_counts(edges).orderBy("node")
-
-
-ORACLE_GRAPH_TRIANGLES = """
-WITH n AS (SELECT count(*) AS n FROM documents),
-dir_edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src,
-           ('0x' || substr(md5('pr' || j || ':' || doc_id), 1, 14))::BIGINT
-             % (SELECT n FROM n) AS dst
-    FROM documents, (VALUES (1), (2), (3)) AS l(j)
-  ) WHERE src != dst
-),
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM dir_edges
-),
-tri AS (
-  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-  FROM und e1
-  JOIN und e2 ON e1.b = e2.a
-  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-),
-nodes AS (
-  SELECT x AS node FROM tri
-  UNION ALL SELECT y FROM tri
-  UNION ALL SELECT z FROM tri
-)
-SELECT node, count(*) AS n_triangles
-FROM nodes GROUP BY node ORDER BY node
-"""
-
-
 def q_char_entropy(spark, sf_dir):
     """Character-entropy quality signal (low entropy = repetitive
     boilerplate/junk — the compression-ratio filter's exact cousin
@@ -3255,100 +2622,6 @@ ORDER BY doc_id
 """
 
 
-_Z_EXPR = " + ".join(
-    f"(((x >> {i}) & 1) << {2 * i}) + (((y >> {i}) & 1) << {2 * i + 1})"
-    for i in range(8)
-)
-
-
-def q_zorder_layout(spark, sf_dir):
-    """Z-order (Morton) layout key over (user bucket, hour bucket) —
-    the lakehouse file-clustering trick that makes range predicates on
-    EITHER dimension prune files. Events get a 16-bit interleaved
-    z-key (identical bit expression on both engines); the report
-    groups by the top-4 z-bits (16 'files') and shows each file's
-    bounding box in BOTH dimensions — tight on x AND y, which a
-    1-D sort cannot give. The locality bound (box <= 64x64) is pinned
-    in tests."""
-    def build():
-        ev = _t(spark, sf_dir, "events")
-        xy = ev.select(
-            F.pmod(F.col("user_id"), F.lit(256)).alias("x"),
-            F.pmod(
-                F.floor(
-                    F.col("ts").cast("timestamp").cast("double") / 3600.0
-                ).cast("bigint"),
-                F.lit(256),
-            ).alias("y"),
-        )
-        z = xy.withColumn("z", F.expr(_Z_EXPR))
-        return (
-            z.groupBy(F.expr("(z >> 12)").cast("int").alias("zbucket"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("x").alias("min_x"), F.max("x").alias("max_x"),
-                F.min("y").alias("min_y"), F.max("y").alias("max_y"),
-            )
-            .orderBy("zbucket")
-        )
-
-    return _utc_plan(spark, build)
-
-
-ORACLE_ZORDER_LAYOUT = f"""
-WITH xy AS (
-  SELECT user_id % 256 AS x,
-         (floor(epoch(ts) / 3600.0)::BIGINT % 256 + 256) % 256 AS y
-  FROM events
-),
-z AS (SELECT x, y, {_Z_EXPR} AS z FROM xy)
-SELECT (z >> 12)::INT AS zbucket, count(*) AS n_rows,
-       min(x) AS min_x, max(x) AS max_x,
-       min(y) AS min_y, max(y) AS max_y
-FROM z GROUP BY zbucket ORDER BY zbucket
-"""
-
-
-def q_skew_salted_join(spark, sf_dir):
-    """Skew-safe salted JOIN (completes the skew toolkit next to
-    skew_salted_agg): orders⋈customer on the customer key with the
-    fact side salted deterministically (hash of the order key) and the
-    dim side replicated x8, so one hot customer's rows spread over 8
-    reducers. Result is row-identical to the plain join — the oracle
-    IS the plain join — and the plan carries the (key, salt) exchange
-    (pinned in tests). Revenue per market segment, rounded leaf-style."""
-    from .operators.skew import salted_join
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    joined = salted_join(
-        orders.withColumnRenamed("o_custkey", "c_custkey"),
-        cust,
-        "c_custkey",
-        n_salts=8,
-        salt_source="o_orderkey",
-    )
-    return (
-        joined.groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            (F.round(F.sum("o_totalprice"), 2) + F.lit(0.0)).alias(
-                "total_revenue"
-            ),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-ORACLE_SKEW_SALTED_JOIN = """
-SELECT c_mktsegment,
-       count(*) AS n_orders,
-       round(sum(o_totalprice), 2) + 0.0 AS total_revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment ORDER BY c_mktsegment
-"""
-
-
 def q_winnow_pairs(spark, sf_dir):
     """Winnowing fingerprint dedup (Schleimer et al. 2003, the MOSS
     scheme — the guaranteed-detection member of the dedup family):
@@ -3421,18 +2694,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "extract_spans_ocr_e2e": q_extract_spans_ocr_e2e,
     "media_features": q_media_features,
     "audio_features": q_audio_features,
-    "pricing_summary": q_pricing_summary,
-    "top_orders_per_segment": q_top_orders_per_segment,
     "dedup_exact": q_dedup_exact,
     "token_count": q_token_count,
     "quality_score": q_quality_score,
-    "geo_cell_cluster_argmax": q_geo_argmax,
-    "geo_cluster_envelope": q_geo_envelope,
-    "geo_containment_join": q_geo_containment,
-    "geo_reading_order_rank": q_geo_reading_order,
-    "geo_row_col_compaction": q_geo_compaction,
-    "geo_column_alignment_vote": q_geo_alignment,
-    "geo_kv_suppression_antijoin": q_geo_kv_suppression,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
     "dedup_minhash_verified": q_dedup_minhash_verified,
@@ -3446,13 +2710,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "repetition_scores": q_repetition_scores,
     "chunk_documents": q_chunk_documents,
     "pack_chunks": q_pack_chunks,
-    "confidence_report": q_confidence_report,
     "export_markdown": q_export_markdown,
     "detect_format": q_detect_format,
     "extract_html_spans": q_extract_html_spans,
     "scrub_pii": q_scrub_pii,
     "decontaminate": q_decontaminate,
-    "skew_salted_agg": q_skew_salted_agg,
     "dedup_components": q_dedup_components,
     "dedup_components_star": q_dedup_components_star,
     "dedup_representatives": q_dedup_representatives,
@@ -3463,18 +2725,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_incremental": q_dedup_incremental,
     "logistic_quality": q_logistic_quality,
     "bm25_search": q_bm25_search,
-    "link_pagerank": q_link_pagerank,
-    "fuzzy_name_pairs": q_fuzzy_name_pairs,
-    "fuzzy_match_parts": q_fuzzy_match_parts,
     "profile_documents": q_profile_documents,
-    "anomaly_mad": q_anomaly_mad,
     "quality_tiers": q_quality_tiers,
     "pmi_collocations": q_pmi_collocations,
-    "graph_triangles": q_graph_triangles,
     "char_entropy": q_char_entropy,
     "snapshot_diff": q_snapshot_diff,
-    "zorder_layout": q_zorder_layout,
-    "skew_salted_join": q_skew_salted_join,
     "winnow_pairs": q_winnow_pairs,
 }
 
@@ -3482,18 +2737,9 @@ ORACLES: dict[str, str] = {
     "media_features": ORACLE_MEDIA_FEATURES,
     "audio_features": ORACLE_AUDIO_FEATURES,
     "export_markdown": ORACLE_EXPORT_MARKDOWN,
-    "pricing_summary": ORACLE_PRICING_SUMMARY,
-    "top_orders_per_segment": ORACLE_TOP_ORDERS_PER_SEGMENT,
     "dedup_exact": ORACLE_DEDUP_EXACT,
     "token_count": ORACLE_TOKEN_COUNT,
     "quality_score": ORACLE_QUALITY_SCORE,
-    "geo_cell_cluster_argmax": ORACLE_GEO_ARGMAX,
-    "geo_cluster_envelope": ORACLE_GEO_ENVELOPE,
-    "geo_containment_join": ORACLE_GEO_CONTAINMENT,
-    "geo_reading_order_rank": ORACLE_GEO_READING_ORDER,
-    "geo_row_col_compaction": ORACLE_GEO_COMPACTION,
-    "geo_column_alignment_vote": ORACLE_GEO_ALIGNMENT,
-    "geo_kv_suppression_antijoin": ORACLE_GEO_KV_SUPPRESSION,
     "dedup_ngram_jaccard": ORACLE_NGRAM_JACCARD,
     "dedup_minhash_lsh": ORACLE_MINHASH_LSH,
     "dedup_minhash_verified": ORACLE_MINHASH_VERIFIED,
@@ -3507,12 +2753,10 @@ ORACLES: dict[str, str] = {
     "repetition_scores": ORACLE_REPETITION_SCORES,
     "chunk_documents": ORACLE_CHUNK_DOCUMENTS,
     "pack_chunks": ORACLE_PACK_CHUNKS,
-    "confidence_report": ORACLE_CONFIDENCE_REPORT,
     "detect_format": ORACLE_DETECT_FORMAT,
     "extract_html_spans": ORACLE_EXTRACT_HTML_SPANS,
     "scrub_pii": ORACLE_SCRUB_PII,
     "decontaminate": ORACLE_DECONTAMINATE,
-    "skew_salted_agg": ORACLE_SKEW_SALTED_AGG,
     "dedup_components": ORACLE_DEDUP_COMPONENTS,
     "dedup_components_star": ORACLE_DEDUP_COMPONENTS,
     "dedup_representatives": ORACLE_DEDUP_REPRESENTATIVES,
@@ -3533,18 +2777,11 @@ ORACLES: dict[str, str] = {
     "url_domain_stats": ORACLE_URL_DOMAIN_STATS,
     "logistic_quality": ORACLE_LOGISTIC_QUALITY,
     "bm25_search": ORACLE_BM25_SEARCH,
-    "link_pagerank": ORACLE_LINK_PAGERANK,
-    "fuzzy_name_pairs": ORACLE_FUZZY_NAME_PAIRS,
-    "fuzzy_match_parts": ORACLE_FUZZY_MATCH_PARTS,
     "profile_documents": ORACLE_PROFILE_DOCUMENTS,
-    "anomaly_mad": ORACLE_ANOMALY_MAD,
     "quality_tiers": ORACLE_QUALITY_TIERS,
     "pmi_collocations": ORACLE_PMI_COLLOCATIONS,
-    "graph_triangles": ORACLE_GRAPH_TRIANGLES,
     "char_entropy": ORACLE_CHAR_ENTROPY,
     "snapshot_diff": ORACLE_SNAPSHOT_DIFF,
-    "zorder_layout": ORACLE_ZORDER_LAYOUT,
-    "skew_salted_join": ORACLE_SKEW_SALTED_JOIN,
     "winnow_pairs": ORACLE_WINNOW_PAIRS,
 }
 

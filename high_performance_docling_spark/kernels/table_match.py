@@ -301,8 +301,14 @@ def _deduplicate_columns(tab_columns, table_cells, iou_matches, ioc_matches):
     # cell_id → column map turns the per-column O(matches × cells) scans
     # into two single passes; per-column float additions happen in the
     # same order as the reference's per-column loops (iou dict order,
-    # then ioc dict order), so the scores are bit-identical
+    # then ioc dict order), so the scores are bit-identical. A cell_id
+    # may repeat here (steps 1-4 list a good cell once per PDF cell that
+    # matched it), but every repeat is the same cell, so the map is exact
+    # as long as each cell_id has a single column_id.
     col_of = {c["cell_id"]: c["column_id"] for c in table_cells}
+    assert len({(c["cell_id"], c["column_id"]) for c in table_cells}) == len(
+        col_of
+    ), "one cell_id in two columns"
     pdf_iou_by_col: list[list] = [[] for _ in range(tab_columns)]
     pdf_ioc_by_col: list[list] = [[] for _ in range(tab_columns)]
     score_in_col = [0.0] * tab_columns

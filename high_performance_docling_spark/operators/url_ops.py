@@ -10,8 +10,11 @@ chain) so the DuckDB oracle evaluates the identical patterns.
 Functions return projections (no shuffle); the per-domain rollup is one
 hash aggregation on the registrable-domain key. Domain keys are
 power-law-skewed in real crawls (wikipedia.org, blogspot.com mega
-domains) — pair the rollup with operators/skew.salted_agg when a single
-domain's row group exceeds an executor partition.
+domains). The distinct host count makes the rollup two shuffles: the
+first is keyed on (domain, host), so map-side partial aggregation folds
+a mega-domain to one row per distinct host per input partition and its
+hosts spread over reducers; only the second, keyed on the domain, moves
+one row per domain per partition.
 
 Registrable-domain note: the full Public Suffix List is a 10k-entry
 table (not vendored here); ``registrable_domain`` implements the

@@ -1,14 +1,13 @@
 #!/usr/bin/env python3
 """spark-submit entry point for the corpus curation report: one run
 produces the data-quality dashboard a pipeline reviews before training
-— column profile, quality-decile tiers, event-value outliers and the
-snapshot diff vs the previous corpus — each written under an
-idempotent batch=<id> partition (replace-by-batch, the
-incremental_update_job contract).
+— column profile, quality-decile tiers and the snapshot diff vs the
+previous corpus — each written under an idempotent batch=<id>
+partition (replace-by-batch, the incremental_update_job contract).
 
 Every section is an individually-oracled registry operator
-(profile_documents / quality_tiers / anomaly_mad / snapshot_diff), so
-this job adds composition + idempotent commit, not new math.
+(profile_documents / quality_tiers / snapshot_diff), so this job adds
+composition + idempotent commit, not new math.
 
 Cluster usage:
 
@@ -30,18 +29,17 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-SECTIONS = ("profile", "tiers", "outliers", "diff")
+SECTIONS = ("profile", "tiers", "diff")
 
 
 def run_curation_report(spark, sf_dir: str, output: str, batch_id: str) -> dict:
-    """Library entry: materialize all four report sections under
+    """Library entry: materialize every report section under
     <output>/<section>/batch=<batch_id>/ and return row counts."""
     from high_performance_docling_spark.entry_queries import QUERIES
 
     frames = {
         "profile": QUERIES["profile_documents"](spark, sf_dir),
         "tiers": QUERIES["quality_tiers"](spark, sf_dir),
-        "outliers": QUERIES["anomaly_mad"](spark, sf_dir),
         "diff": QUERIES["snapshot_diff"](spark, sf_dir),
     }
     from pyspark.sql import Observation, functions as F

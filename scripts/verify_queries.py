@@ -10,7 +10,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-TABLES = ["customer", "part", "orders", "lineitem", "events", "documents"]
+TABLES = ["documents"]
 
 
 def canon(rows, cols):

@@ -1,10 +1,12 @@
 """AQE skew-join evidence: with adaptive skew handling on (the
 session default, pipeline.get_spark), a join whose shuffle has one
 pathologically hot key gets its skewed partition SPLIT at runtime —
-the final adaptive SortMergeJoin is marked skew=true. This is the
-runtime half of the skew story next to the explicit salting operators
-(skew.salted_agg / skew.salted_join), which cover the cases AQE
-cannot (aggregations, co-location constraints)."""
+the final adaptive SortMergeJoin is marked skew=true. Together with
+the checkpointed extraction path's page explode (a mega-document's
+pages spread over tasks instead of one), this is how the engine
+handles skew; an aggregation without a distinct count needs no split
+because its map-side partial aggregation folds a hot key to one row per
+input partition."""
 
 from __future__ import annotations
 

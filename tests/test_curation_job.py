@@ -1,5 +1,5 @@
-"""Curation-report job: all four sections land under their
-batch=<id> partitions, re-running a batch is byte-idempotent, and a
+"""Curation-report job: every section lands under its
+batch=<id> partition, re-running a batch is byte-idempotent, and a
 second batch never touches the first (the replace-by-batch contract
 shared with incremental_update_job)."""
 

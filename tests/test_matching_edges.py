@@ -148,3 +148,16 @@ def test_over_300_pdf_cells_bypasses_alignment():
     ]
     out_cells, out_matches = matching_post_process(cells, tokens, {})
     assert len(out_matches) == 400
+
+
+def test_cell_matched_by_two_tokens_keeps_one_cell():
+    # a two-word cell is listed twice by steps 1-4 (once per matching
+    # token); column dedup must accept the repeat and the output keeps
+    # one cell whose bbox covers both tokens
+    cells = [tcell(0, 0, 0, [0, 0, 100, 20])]
+    tokens = [tok(0, "a", 2, 2, 40, 18), tok(1, "b", 50, 2, 98, 18)]
+    out_cells, out_matches = matching_post_process(cells, tokens, {})
+    assert [c["cell_id"] for c in out_cells] == [0]
+    assert out_cells[0]["bbox"] == [2.0, 2.0, 98.0, 18.0]
+    assert {k: [m["table_cell_id"] for m in v] for k, v in out_matches.items()} == {
+        "0": [0], "1": [0]}

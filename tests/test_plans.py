@@ -1,6 +1,6 @@
-"""Physical-plan hygiene: filters reach the parquet scan, small dims
-broadcast, relational paths stay in WholeStageCodegen (the task brief's
-'.explain and iterate' requirement, pinned as tests)."""
+"""Physical-plan hygiene: small sides broadcast, pair queries stay
+equi-joins, relational paths stay in WholeStageCodegen ('.explain and
+iterate', pinned as tests)."""
 
 from high_performance_docling_spark.entry_queries import QUERIES
 
@@ -11,40 +11,10 @@ def plan(spark, name):
     return QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pricing_summary_pushes_filter_to_scan(spark):
-    p = plan(spark, "pricing_summary")
-    assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in p
-
-
-def test_pricing_summary_prunes_columns(spark):
-    p = plan(spark, "pricing_summary")
-    # ReadSchema must not include unused columns like l_partkey/l_suppkey
-    read = [ln for ln in p.splitlines() if "ReadSchema" in ln][0]
-    assert "l_partkey" not in read and "l_orderkey" not in read
-    assert "l_quantity" in read and "l_extendedprice" in read
-
-
-def test_top_orders_broadcasts_customer_dim(spark):
-    p = plan(spark, "top_orders_per_segment")
-    assert "BroadcastHashJoin" in p or "BroadcastExchange" in p
-
-
-def test_argmax_join_is_hash_join_on_page(spark):
-    p = plan(spark, "geo_cell_cluster_argmax")
-    assert "BroadcastHashJoin" in p  # clusters side explicitly broadcast
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-
-
-def test_kv_suppression_is_anti_join(spark):
-    p = plan(spark, "geo_kv_suppression_antijoin")
-    assert "LeftAnti" in p
-
-
 def test_relational_paths_stay_jvm_side(spark):
     # (AQE prints WholeStageCodegen only in final plans, so assert the
     # codegen-eligible shape instead: vectorized scans, no Python eval)
-    for name in ("pricing_summary", "dedup_exact", "token_count",
-                 "geo_cell_cluster_argmax", "dedup_minhash_lsh"):
+    for name in ("dedup_exact", "token_count", "dedup_minhash_lsh"):
         p = plan(spark, name)
         assert "Batched: true" in p, name
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, name
@@ -66,13 +36,6 @@ def test_pack_chunks_no_single_partition_window(spark):
     assert "Exchange SinglePartition" not in p
     # and the local cumsum window must be partitioned by the bucket
     assert "_bucket" in p
-
-
-def test_salted_agg_two_phase_shape(spark):
-    p = plan(spark, "skew_salted_agg")
-    # phase 1 shuffles on (key, salt), phase 2 on key
-    assert "__salt" in p
-    assert p.count("Exchange hashpartitioning") == 2
 
 
 def test_decontaminate_broadcasts_benchmark_side(spark):

@@ -1,13 +1,8 @@
-"""Hypothesis property tests for the round-6 continuation operators:
-pure-Python reference parity under randomized inputs. Spark runs once
-per case set (collected into memory first) — the properties exercise
-the SHARED reference implementations, and one randomized Spark round
-trip per operator pins engine parity on a drawn sample."""
+"""Hypothesis property tests for the BM25 pure-Python reference that
+pins the Spark and DuckDB scorers (tests/test_retrieval.py): its
+invariants must hold under randomized corpora and queries."""
 
 from __future__ import annotations
-
-import math
-from itertools import combinations
 
 from hypothesis import given, settings, strategies as st
 
@@ -15,28 +10,6 @@ _words = st.sampled_from(
     ["red", "blue", "ring", "bolt", "gear", "spark", "row", "scan"]
 )
 _doc = st.lists(_words, min_size=1, max_size=12).map(" ".join)
-
-
-def _lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
-                           prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.text(alphabet="abcde", max_size=8),
-       st.text(alphabet="abcde", max_size=8))
-def test_levenshtein_reference_is_a_metric(a, b):
-    # the pure-Python reference used to pin Spark/DuckDB levenshtein
-    # must itself satisfy the metric axioms
-    assert _lev(a, b) == _lev(b, a)
-    assert (_lev(a, b) == 0) == (a == b)
-    assert _lev(a, b) <= max(len(a), len(b))
 
 
 @settings(max_examples=100, deadline=None)
@@ -55,65 +28,3 @@ def test_bm25_reference_invariants(docs, terms):
     for i, d in rows:
         if not any(t in d.split() for t in terms):
             assert i not in out
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.lists(
-    st.tuples(st.integers(0, 9), st.integers(0, 9)).filter(
-        lambda e: e[0] != e[1]),
-    min_size=0, max_size=25))
-def test_triangle_brute_force_parity_reference(edges):
-    # brute-force triangle enumeration over all node triples equals
-    # the wedge-close formulation used by graph.triangle_counts
-    und = {tuple(sorted(e)) for e in edges}
-    nodes = sorted({n for e in und for n in e})
-    brute: dict[int, int] = {}
-    for a, b, c in combinations(nodes, 3):
-        if {(a, b), (b, c), (a, c)} <= und:
-            for n in (a, b, c):
-                brute[n] = brute.get(n, 0) + 1
-    wedge: dict[int, int] = {}
-    for (a, b) in und:
-        for (b2, c) in und:
-            if b2 == b and (a, c) in und:
-                for n in (a, b, c):
-                    wedge[n] = wedge.get(n, 0) + 1
-    assert brute == wedge
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.lists(st.floats(min_value=-100, max_value=100,
-                          allow_nan=False), min_size=3, max_size=30))
-def test_mad_outlier_reference_flags_only_extremes(vals):
-    import statistics
-
-    med = round(statistics.median(vals), 6)
-    mad = round(statistics.median(
-        [abs(round(x - med, 6)) for x in vals]), 6)
-    if mad == 0:
-        return
-    flagged = [x for x in vals
-               if abs(round(0.6745 * round(x - med, 6) / mad, 6)) > 3.5]
-    # robust guarantee: at most half the points can ever be flagged,
-    # and the median itself never is
-    assert len(flagged) <= len(vals) / 2
-    assert med not in flagged or vals.count(med) == 0
-
-
-def test_pagerank_spark_parity_on_random_graph(spark):
-    # one drawn-sample Spark round trip: random-ish deterministic graph
-    import tests.test_graph as TG
-    from high_performance_docling_spark.operators import graph as G
-
-    edges = [(i, (i * 7 + 3) % 20) for i in range(20)] + [
-        (i, (i * 13 + 5) % 20) for i in range(20)
-    ]
-    edges = [e for e in edges if e[0] != e[1]]
-    nodes = list(range(20))
-    ndf = spark.createDataFrame([(v,) for v in nodes], ["doc_id"])
-    edf = spark.createDataFrame(sorted(set(edges)), ["src", "dst"])
-    got = {r["doc_id"]: r["rank"]
-           for r in G.pagerank(ndf, edf, n_iter=4).collect()}
-    assert got == TG._py_pagerank(nodes, sorted(set(edges)), n_iter=4)
-    # total rank mass stays <= 1 (dangling mass is dropped, never added)
-    assert sum(got.values()) <= 1.0 + 1e-9

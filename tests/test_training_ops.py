@@ -238,25 +238,6 @@ def test_extract_figures_joins_with_span_media_refs(spark):
     assert {f["media_ref"]: f["crop_sha"] for f in figs} == figs2
 
 
-def test_salted_agg_equals_direct_groupby(spark):
-    from pyspark.sql import functions as F
-
-    from high_performance_docling_spark.operators.skew import salted_agg
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    salted = salted_agg(
-        ev, "user_id", F.col("event_id"), 16,
-        partial_aggs=[F.sum("value").alias("pv"), F.count(F.lit(1)).alias("pc")],
-        final_aggs=[F.round(F.sum("pv"), 2).alias("tv"), F.sum("pc").alias("n")],
-    ).collect()
-    direct = (
-        ev.groupBy("user_id")
-        .agg(F.round(F.sum("value"), 2).alias("tv"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    assert sorted(map(tuple, salted)) == sorted(map(tuple, direct))
-
-
 def test_connected_components_chain_and_islands(spark):
     """Min-label propagation reaches the far end of a chain (needs
     multiple iterations) and keeps islands separate."""
