@@ -118,65 +118,6 @@ FROM c ORDER BY media_id
 """
 
 
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio codec path: doc_id-seeded int16 waveforms are encoded
-    to actual RIFF/WAVE bytes (kernels/wav_codec.py), decoded back, and
-    featurized over the DECODED samples — the query only matches its
-    oracle if the codec round-trips bit-exactly, because the oracle
-    regenerates the samples from the integer formula without touching
-    the codec. The Python stage emits EXACT integer aggregates; all
-    float math (duration/mean/rms) is JVM-side F.round so rounding rules
-    match DuckDB. Scale shape: one Arrow-batched Python stage per side,
-    no shuffle (orderBy is presentation-only)."""
-    from .operators import multimodal as MM
-
-    docs = _t(spark, sf_dir, "documents")
-    feats = MM.audio_feature_batch(MM.synth_wav_media(docs))
-    return feats.select(
-        "media_id",
-        "n_samples",
-        "sample_rate",
-        F.round(F.col("n_samples") * 1000.0 / F.col("sample_rate"), 3)
-        .alias("duration_ms"),
-        F.round(F.col("sum_abs") / F.col("n_samples"), 6).alias("mean_abs"),
-        F.round(F.sqrt(F.col("sum_sq") / F.col("n_samples")), 6).alias("rms"),
-        "zero_crossings",
-    ).orderBy("media_id")
-
-
-# Regenerates the waveform from the same integer formula as
-# synth_wav_media (never touching WAV bytes): s_i = (media_id*7919 +
-# i*104729) mod 65536 - 32768. DuckDB lists are 1-indexed: smp[i] is
-# s_{i-1}, so the zero-crossing scan over i in 1..n-1 covers all n-1
-# adjacent pairs.
-ORACLE_AUDIO_FEATURES = """
-WITH a AS (
-  SELECT doc_id AS media_id,
-         (doc_id % 400 + 160)::BIGINT AS n,
-         (8000 + (doc_id % 3) * 4000)::BIGINT AS sr
-  FROM documents
-),
-s AS (
-  SELECT media_id, n, sr,
-         list_transform(range(0, n),
-           i -> (media_id * 7919 + i * 104729) % 65536 - 32768) AS smp
-  FROM a
-)
-SELECT media_id,
-       n::INT AS n_samples,
-       sr::INT AS sample_rate,
-       round(n * 1000.0 / sr, 3) AS duration_ms,
-       round(list_sum(list_transform(smp, x -> abs(x))) / (n * 1.0), 6)
-         AS mean_abs,
-       round(sqrt(list_sum(list_transform(smp, x -> x * x)) / (n * 1.0)), 6)
-         AS rms,
-       list_sum(list_transform(range(1, n),
-           i -> CASE WHEN (smp[i] < 0) <> (smp[i + 1] < 0)
-                THEN 1 ELSE 0 END))::INT AS zero_crossings
-FROM s ORDER BY media_id
-"""
-
-
 # --------------------------------------------------------------------------
 # training-data pipeline: dedup / text analysis (task brief) on `documents`
 # --------------------------------------------------------------------------
@@ -2693,7 +2634,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "extract_spans_e2e": q_extract_spans_e2e,
     "extract_spans_ocr_e2e": q_extract_spans_ocr_e2e,
     "media_features": q_media_features,
-    "audio_features": q_audio_features,
     "dedup_exact": q_dedup_exact,
     "token_count": q_token_count,
     "quality_score": q_quality_score,
@@ -2735,7 +2675,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 ORACLES: dict[str, str] = {
     "media_features": ORACLE_MEDIA_FEATURES,
-    "audio_features": ORACLE_AUDIO_FEATURES,
     "export_markdown": ORACLE_EXPORT_MARKDOWN,
     "dedup_exact": ORACLE_DEDUP_EXACT,
     "token_count": ORACLE_TOKEN_COUNT,

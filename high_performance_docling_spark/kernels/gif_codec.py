@@ -1,7 +1,6 @@
 """Pure-Python GIF codec (GIF87a/GIF89a per the public W3C/CompuServe
-specification) — the fourth real image container behind the multimodal
-decode seam (PNG, baseline JPEG, APNG video, now GIF: the wild web's
-other ubiquitous format, and the only one of the four built on LZW).
+specification) — the second real image container behind the multimodal
+decode seam (operators/multimodal.decode_media_batch), beside PNG.
 
 Decoder: logical screen descriptor, global/local color tables, graphic
 control extensions (frame delays, transparency index), interlaced row

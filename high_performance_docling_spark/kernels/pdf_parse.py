@@ -22,11 +22,11 @@ Glyph widths are approximated at half the font size (the Helvetica
 average) — positions drive ordering, not typography, so the
 approximation is immaterial to span output.
 
-Out of scope (documented production seams, like the multimodal codec):
-encrypted files, CID/Type0 fonts, inline images. Cells use TOP-LEFT
-origin like the rest of the engine (the PDF-native bottom-left y is
-flipped at parse time — the one place the reference's coordinate flip,
-readingorder_model.py:56, survives).
+Out of scope (documented production seams): encrypted files,
+CID/Type0 fonts, inline images. Cells use TOP-LEFT origin like the rest
+of the engine (the PDF-native bottom-left y is flipped at parse time —
+the one place the reference's coordinate flip, readingorder_model.py:56,
+survives).
 """
 
 from __future__ import annotations

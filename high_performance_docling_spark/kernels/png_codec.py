@@ -10,8 +10,8 @@ runs and hosts; the DECODER implements all five PNG filter types
 these color types decode too.
 
 Reference analogue: the reference stores figure crops as PIL ImageRefs
-(document_assembler.py:62-90); this module is the codec seam that turns
-the engine's deterministic bitmaps into actual portable image files.
+(document_assembler.py:62-90); this module turns the engine's
+deterministic bitmaps into actual portable image files.
 """
 
 from __future__ import annotations
@@ -71,8 +71,7 @@ def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
 
 def _unfilter(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
     """Undo per-scanline PNG filters (RFC 2083 §6): ``raw`` is (h,
-    1+stride) with the filter byte in column 0. Shared by decode_png and
-    the APNG frame decoder."""
+    1+stride) with the filter byte in column 0."""
     out = np.zeros((h, stride), dtype=np.uint8)
     for y in range(h):
         ftype, line = raw[y, 0], raw[y, 1:].copy()

@@ -1,22 +1,13 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media travel as opaque ``binary`` columns with a typed metadata struct —
-the Spark-side schema/partitioning/UDF plumbing is real and tested. The
-IMAGE codec path is real: ``real_codecs=True`` decodes actual PNG bytes
-via the pure-Python codec (kernels/png_codec.py, stdlib zlib) and
-computes features over decoded PIXELS; ``synth_png_media`` builds a
-deterministic corpus of real PNG payloads for it. The AUDIO codec path
-is real too: ``synth_wav_media`` emits actual RIFF/WAVE 16-bit-PCM
-payloads (kernels/wav_codec.py, stdlib wave) and both
-``decode_media_batch(real_codecs=True)`` and ``audio_feature_batch``
-operate on the DECODED samples. The VIDEO path is real for APNG clips:
-``synth_apng_media`` emits actual animated-PNG payloads
-(kernels/apng_codec.py) and ``decode_media_batch(real_codecs=True)``
-decodes them frame-by-frame (frame sampling uses the DECODED frame
-count). The one remaining seam is foreign video containers
-(H.264/VP9 in mp4/webm): ``decode_media_batch`` raises
-``NotImplementedError`` for non-APNG video payloads, so a production
-deployment plugs ffmpeg into exactly one branch.
+the Spark-side schema/partitioning/UDF plumbing is real and tested
+(the ``media_features`` registry entry). The IMAGE codec path is real:
+``real_codecs=True`` decodes actual PNG and GIF bytes via the
+pure-Python codecs (kernels/png_codec.py, kernels/gif_codec.py) and
+computes features over decoded PIXELS. Audio and video under
+``real_codecs`` raise ``NotImplementedError``: their codecs are a
+production seam.
 
 Reference analogue: figure crops as content-addressed refs
 (document_assembler.py:62-90) and image batches through model stages
@@ -25,7 +16,6 @@ Reference analogue: figure crops as content-addressed refs
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -91,166 +81,6 @@ def synth_media(docs_df: DataFrame) -> DataFrame:
     )
 
 
-def synth_png_media(docs_df: DataFrame) -> DataFrame:
-    """Deterministic REAL-PNG media table: every row is an image whose
-    payload is actual PNG bytes (encode_png) of a doc_id-seeded gradient
-    bitmap sized from the same width/height formula as synth_media.
-    Arrow-batched mapInPandas — encoding is per-row Python-side work, but
-    it IS the codec (the thing being exercised), not plumbing."""
-    from ..kernels.png_codec import encode_png
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = did % 640 + 16, did % 480 + 16
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = ((xx * 3 + yy * 7 + did) % 251).astype(np.uint8)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "media_type": "image",
-                        "payload": encode_png(img),
-                        "meta": {"width": w, "height": h,
-                                 "n_frames": None, "sample_rate": None},
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "media_type", "payload", "meta"]
-            )
-
-    return docs_df.select("doc_id").mapInPandas(fn, MEDIA_SCHEMA)
-
-
-def synth_apng_media(docs_df: DataFrame) -> DataFrame:
-    """Deterministic REAL-VIDEO media table: every row is an APNG clip
-    (kernels/apng_codec.py) of doc_id-seeded 32x24 greyscale frames —
-    frame f's gradient phase advances with f, so frame sampling over the
-    DECODED animation is meaningful. n_frames matches synth_media's
-    doc_id % 90 + 10 formula."""
-    from ..kernels.apng_codec import encode_apng
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = did % 90 + 10
-                yy, xx = np.mgrid[0:24, 0:32]
-                frames = np.stack([
-                    ((xx * 3 + yy * 7 + did + 11 * f) % 251).astype(np.uint8)
-                    for f in range(n)
-                ])
-                rows.append(
-                    {
-                        "media_id": did,
-                        "media_type": "video",
-                        "payload": encode_apng(frames),
-                        "meta": {"width": 32, "height": 24,
-                                 "n_frames": n, "sample_rate": None},
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "media_type", "payload", "meta"]
-            )
-
-    return docs_df.select("doc_id").mapInPandas(fn, MEDIA_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_samples", T.IntegerType(), False),
-        T.StructField("sample_rate", T.IntegerType(), False),
-        # EXACT integer aggregates only — the float math (mean/rms/
-        # duration) happens JVM-side with F.round so it is bit-identical
-        # to the DuckDB oracle's round() (half away from zero; Python's
-        # builtin round is banker's and would diverge on ties)
-        T.StructField("sum_abs", T.LongType(), False),
-        T.StructField("sum_sq", T.LongType(), False),
-        T.StructField("zero_crossings", T.IntegerType(), False),
-    ]
-)
-
-
-def synth_wav_media(docs_df: DataFrame) -> DataFrame:
-    """Deterministic REAL-WAV media table: every row is an audio clip
-    whose payload is actual RIFF/WAVE bytes (encode_wav) of a
-    doc_id-seeded int16 waveform — s_i = ((doc_id*7919 + i*104729) mod
-    65536) - 32768, n = doc_id mod 400 + 160 samples, rate 8/12/16 kHz by
-    doc_id mod 3. The formula is pure integer modular arithmetic so a SQL
-    oracle can regenerate the exact samples without touching the codec."""
-    from ..kernels.wav_codec import encode_wav
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = did % 400 + 160
-                sr = 8000 + (did % 3) * 4000
-                i = np.arange(n, dtype=np.int64)
-                s = ((did * 7919 + i * 104729) % 65536 - 32768).astype(np.int16)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "media_type": "audio",
-                        "payload": encode_wav(s, sr),
-                        "meta": {"width": None, "height": None,
-                                 "n_frames": None, "sample_rate": sr},
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "media_type", "payload", "meta"]
-            )
-
-    return docs_df.select("doc_id").mapInPandas(fn, MEDIA_SCHEMA)
-
-
-def audio_feature_batch(df: DataFrame) -> DataFrame:
-    """Audio payloads → per-clip integer feature aggregates over the
-    DECODED samples (wav_codec round-trips the container): sample count,
-    rate, sum(|s|), sum(s²), and sign-change count. Multi-channel clips
-    fold channel 0. One Arrow-batched Python stage, no shuffle."""
-    from ..kernels.wav_codec import decode_wav
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                s, sr = decode_wav(bytes(payload))
-                if s.ndim == 2:
-                    s = s[:, 0]
-                s64 = s.astype(np.int64)
-                neg = s64 < 0
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "n_samples": len(s64),
-                        "sample_rate": int(sr),
-                        "sum_abs": int(np.abs(s64).sum()),
-                        "sum_sq": int((s64 * s64).sum()),
-                        "zero_crossings": int((neg[:-1] != neg[1:]).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sample_rate",
-                         "sum_abs", "sum_sq", "zero_crossings"],
-            )
-
-    return df.mapInPandas(fn, AUDIO_FEATURES_SCHEMA)
-
-
 def _entropy(data: bytes) -> float:
     import math
 
@@ -271,13 +101,12 @@ def decode_media_batch(df: DataFrame, real_codecs: bool = False) -> DataFrame:
 
     ``real_codecs=False`` (the synthetic path) computes byte-level
     features over the opaque payload. ``real_codecs=True`` DECODES image
-    payloads as real PNGs / baseline JPEGs / GIFs (kernels/{png,jpeg,
-    gif}_codec.py, sniffed by container magic) and audio payloads as
-    real WAVs (kernels/wav_codec.py), computing the same features over
-    the decoded pixel / raw-PCM byte array instead — n_bytes is the
-    decoded byte count, byte_mean/byte_entropy are decoded-content
-    statistics. Video under real_codecs raises NotImplementedError (the
-    one remaining codec seam: no ffmpeg in this container)."""
+    payloads as real PNGs or GIFs (kernels/{png,gif}_codec.py, sniffed
+    by container magic) and computes the same features over the decoded
+    pixel array instead — n_bytes is the decoded byte count,
+    byte_mean/byte_entropy are decoded-content statistics. Any other
+    media type under real_codecs raises NotImplementedError (no audio or
+    video codec in this package)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -288,49 +117,19 @@ def decode_media_batch(df: DataFrame, real_codecs: bool = False) -> DataFrame:
                 data = bytes(payload)
                 n_frames = (meta or {}).get("n_frames") or 0
                 if real_codecs:
-                    if mtype == "image":
-                        # container sniff: PNG, baseline JPEG or GIF
-                        # (what real figure crops / crawl images
-                        # actually are)
-                        if data[:2] == b"\xff\xd8":
-                            from ..kernels.jpeg_codec import decode_jpeg
-
-                            data = decode_jpeg(data).tobytes()
-                        elif data[:6] in (b"GIF87a", b"GIF89a"):
-                            from ..kernels.gif_codec import decode_gif
-
-                            data = decode_gif(data)[0][0].tobytes()
-                        else:
-                            from ..kernels.png_codec import decode_png
-
-                            data = decode_png(data).tobytes()
-                    elif mtype == "audio":
-                        from ..kernels.wav_codec import decode_wav
-
-                        data = decode_wav(data)[0].tobytes()
-                    elif mtype == "video":
-                        # gate on the DECLARED type first (ADVICE r5: a
-                        # stray media_type whose payload merely starts
-                        # with the PNG magic must not silently decode as
-                        # video), then dispatch on the container magic
-                        if data[:8] == b"\x89PNG\r\n\x1a\n":
-                            # APNG: decode the real animation; frame
-                            # count comes from the DECODED stream
-                            from ..kernels.apng_codec import decode_apng
-
-                            decoded, _ = decode_apng(data)
-                            n_frames = decoded.shape[0]
-                            data = decoded.tobytes()
-                        else:
-                            raise NotImplementedError(
-                                "real video decode beyond APNG requires "
-                                "ffmpeg — not in this container"
-                            )
-                    else:
+                    if mtype != "image":
                         raise NotImplementedError(
-                            f"unknown media_type {mtype!r} under "
-                            "real_codecs"
+                            f"no {mtype!r} codec under real_codecs"
                         )
+                    # container sniff: GIF, else PNG
+                    if data[:6] in (b"GIF87a", b"GIF89a"):
+                        from ..kernels.gif_codec import decode_gif
+
+                        data = decode_gif(data)[0][0].tobytes()
+                    else:
+                        from ..kernels.png_codec import decode_png
+
+                        data = decode_png(data).tobytes()
                 # frame sampling: every 10th frame, deterministic
                 frames = (
                     ",".join(str(i) for i in range(0, int(n_frames), 10))

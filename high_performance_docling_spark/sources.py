@@ -66,8 +66,8 @@ def fetch_documents(manifest_df: DataFrame, fetcher=None, real_http: bool = Fals
     work queue and fetch parallelism = partitions).
 
     ``real_http`` is the production seam — requests/urllib are not
-    importable here, so it raises ``NotImplementedError`` exactly like
-    the multimodal codec seam; tests run the deterministic fake fetch.
+    importable here, so it raises ``NotImplementedError``; tests run the
+    deterministic fake fetch.
     """
     if real_http:
         raise NotImplementedError(
@@ -406,10 +406,15 @@ def read_jsonl_quarantined(
     into _corrupt_record; returns (good, quarantined) where
     `quarantined` carries the raw offending line verbatim.
 
-    Spark refuses a filter that references only the corrupt column on
-    an uncached frame (the parser would need a second pass), so the
-    frame is persisted for the split — at 100 TB prefer writing the
-    split once (badRecordsPath-style) over keeping it cached."""
+    The frame is persisted so that ONE parse under the full schema
+    decides every line for both frames. Uncached, each query re-parses
+    with its pruned schema, so corruption depends on the columns read:
+    a line whose field has the wrong type is corrupt for ``good`` but
+    parses for a projection of the other columns, and a query reading
+    only ``_corrupt_record`` is refused
+    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). Nothing
+    unpersists it; at 100 TB write the split once (badRecordsPath-style)
+    instead, which keeps the one parse per split."""
     raw = (
         spark.read.schema(schema + ", _corrupt_record STRING")
         .option("mode", "PERMISSIVE")

@@ -84,15 +84,6 @@ def test_length_quantiles_single_agg_no_python(spark):
     assert p.count("Exchange hashpartitioning") <= 1
 
 
-def test_audio_features_single_python_stage_no_shuffle(spark):
-    # codec + feature extraction fuse into Arrow-batched Python stages;
-    # the only exchange is the presentation orderBy (range), never a
-    # hash shuffle of the corpus
-    p = plan(spark, "audio_features")
-    assert "MapInPandas" in p
-    assert "Exchange hashpartitioning" not in p
-
-
 def test_perplexity_score_broadcasts_model_no_python(spark):
     # the LM joins must be broadcast hash equi-joins on (w1[, w2]); the
     # only nested-loop is the documented 1-row vocab-size cross join

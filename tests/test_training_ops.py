@@ -1,5 +1,6 @@
-"""Training-data pipeline operators: dedup, text analysis, multimodal
-plumbing."""
+"""Training-data pipeline operators: dedup, text analysis, cleaning and
+chunking; multimodal plumbing, the image kernels and the figure-crop
+sink."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -95,41 +96,79 @@ def test_multimodal_plumbing(spark, docs):
     assert sorted(map(str, feats)) == sorted(map(str, feats2))
 
 
-def test_multimodal_real_png_decode(spark, docs):
-    """real_codecs=True decodes ACTUAL PNG payloads and computes pixel
-    statistics; expectations recomputed independently in NumPy."""
+def test_multimodal_real_codecs_decode_png_and_guard_the_rest(spark, docs):
+    """real_codecs=True decodes an ACTUAL PNG payload and computes pixel
+    statistics (expectations recomputed in NumPy); audio and video
+    payloads surface the NotImplementedError seam executor-side."""
     import numpy as np
 
+    from high_performance_docling_spark.kernels.png_codec import encode_png
+
+    yy, xx = np.mgrid[0:21, 0:34]
+    img = ((xx * 3 + yy * 7 + 5) % 251).astype(np.uint8)
+    payload = encode_png(img)
+    df = spark.createDataFrame(
+        [(1, "image", bytearray(payload), {"n_frames": 0})],
+        "media_id long, media_type string, payload binary, meta map<string,int>",
+    )
+    row = MM.decode_media_batch(df, real_codecs=True).collect()[0]
+    # features are over decoded PIXELS, not compressed bytes
+    assert row["n_bytes"] == 21 * 34 != len(payload)
+    assert abs(row["byte_mean"] - round(float(img.mean()), 6)) < 1e-9
+    for mtype in ("audio", "video"):
+        media = MM.synth_media(docs.limit(30)).filter(f"media_type = '{mtype}'")
+        with pytest.raises(Exception, match="NotImplementedError"):
+            MM.decode_media_batch(media, real_codecs=True).collect()
+
+
+def test_figure_crops_decode_to_the_rendered_bitmap(spark):
+    """Every figure crop decodes to exactly the pixels of its box in the
+    rendered page, recomputed on the driver from ``typeset``: the PNG
+    bytes the sink stores lose nothing between the executor's bitmap and
+    the output row. (The bitmap stand-in paints each picture box solid,
+    so this pins geometry and the codec round trip, not image content.)"""
+    import hashlib
+
+    import numpy as np
+
+    from high_performance_docling_spark.corpus import (
+        GenConfig,
+        generate_corpus,
+        typeset,
+    )
+    from high_performance_docling_spark.kernels.image_ops import (
+        RENDER_SCALE,
+        crop_bitmap,
+        render_page_bitmap,
+    )
     from high_performance_docling_spark.kernels.png_codec import decode_png
+    from high_performance_docling_spark.labels import PICTURE
+    from high_performance_docling_spark.operators.figures import extract_figures
+    from high_performance_docling_spark.pipeline import docs_dataframe
 
-    media = MM.synth_png_media(docs.limit(8))
-    rows = {r["media_id"]: r for r in media.collect()}
-    feats = MM.decode_media_batch(media, real_codecs=True).collect()
-    assert len(feats) == 8
-    for r in feats:
-        did = r["media_id"]
-        w, h = did % 640 + 16, did % 480 + 16
-        yy, xx = np.mgrid[0:h, 0:w]
-        img = ((xx * 3 + yy * 7 + did) % 251).astype(np.uint8)
-        # the payload really is that bitmap as a PNG
-        assert (decode_png(bytes(rows[did]["payload"])) == img).all()
-        # features are over decoded PIXELS, not compressed bytes
-        assert r["n_bytes"] == h * w
-        assert r["n_bytes"] != len(bytes(rows[did]["payload"]))
-        assert abs(r["byte_mean"] - round(float(img.mean()), 6)) < 1e-9
+    cfg = GenConfig(seed=42, n_docs=20)
+    want = {}
+    for doc in generate_corpus(cfg):
+        spans = sorted(doc["spans"], key=lambda s: s["offset"])
+        for page in typeset(doc["doc_id"], spans, cfg):
+            pics = [e for e in page.elements if e.label == PICTURE]
+            boxes = [[c["l"], c["t"], c["r"], c["b"]] for c in page.cells]
+            img = render_page_bitmap(
+                page.width, page.height, boxes + [[e.l, e.t, e.r, e.b] for e in pics]
+            )
+            for e in pics:
+                key = (doc["doc_id"], page.page_no, e.l, e.t, e.r, e.b)
+                want[key] = crop_bitmap(img, [e.l, e.t, e.r, e.b], RENDER_SCALE)
 
-
-def test_multimodal_video_codec_still_guarded(spark, docs):
-    """Images AND audio now have real codecs; only video under
-    real_codecs surfaces the NotImplementedError seam (raised
-    executor-side). Audio with a non-WAV payload is a decode
-    ValueError, not the missing-codec seam."""
-    video = MM.synth_media(docs.limit(30)).filter("media_type = 'video'")
-    with pytest.raises(Exception, match="NotImplementedError|ffmpeg"):
-        MM.decode_media_batch(video, real_codecs=True).collect()
-    audio = MM.synth_media(docs.limit(30)).filter("media_type = 'audio'")
-    with pytest.raises(Exception, match="ValueError|not a readable WAV"):
-        MM.decode_media_batch(audio, real_codecs=True).collect()
+    figs = extract_figures(docs_dataframe(spark, cfg, num_partitions=4), cfg).collect()
+    got = {(f["doc_id"], f["page_no"], f["l"], f["t"], f["r"], f["b"]): f for f in figs}
+    assert want and len(figs) == len(got) and got.keys() == want.keys()
+    for key, f in got.items():
+        data = bytes(f["crop"])
+        px = decode_png(data)
+        assert px.dtype == np.uint8 and np.array_equal(px, want[key]), key
+        assert (f["crop_h"], f["crop_w"]) == want[key].shape
+        assert f["crop_sha"] == hashlib.sha256(data).hexdigest()
 
 
 def test_simhash_band_pairs_equals_all_pairs(spark, docs):

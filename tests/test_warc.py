@@ -335,3 +335,20 @@ def test_jsonl_quarantine_splits_good_and_bad(spark, tmp_path):
     assert g["c"]["source"] is None  # missing field, not corrupt
     q = [r["raw_line"] for r in bad.collect()]
     assert q == ["{this is not json at all"]
+
+
+def test_jsonl_quarantine_type_error_lands_in_exactly_one_frame(spark, tmp_path):
+    """A line that is valid JSON but has a field of the wrong type is
+    corrupt under the full schema. Every projection of the split must
+    agree: it is out of ``good`` even for a query reading only ``id``,
+    and it is in ``quarantined`` (a re-parse per projection would let it
+    reappear in one and, reading only the corrupt column, fail the
+    other)."""
+    from high_performance_docling_spark.sources import read_jsonl_quarantined
+
+    p = tmp_path / "in.jsonl"
+    p.write_text('{"id": "a", "n": 1}\n{"id": "d", "n": "x"}\n')
+    good, bad = read_jsonl_quarantined(spark, str(p), schema="id STRING, n INT")
+    assert [tuple(r) for r in good.collect()] == [("a", 1)]
+    assert [r["id"] for r in good.select("id").collect()] == ["a"]
+    assert [r["raw_line"] for r in bad.collect()] == ['{"id": "d", "n": "x"}']
