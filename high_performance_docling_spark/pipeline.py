@@ -104,14 +104,20 @@ def _checkpoint_stage(
     Python stage twice. Join strategy for the done-keys set is left to
     Catalyst/AQE: at 100 TB the completed-key set can be huge and must be
     allowed to shuffle rather than broadcast.
+
+    The checkpoint is read back with the stage's declared output schema
+    (building the stage is lazy and runs no job): ``spark.read.parquet``
+    without a schema launches a job to read the footers, one per read.
     """
+    out = stage_fn(input_df)
+    read = spark.read.schema(out.schema)
     if _checkpoint_committed(path):
-        done_keys = spark.read.parquet(path).select(*input_keys).distinct()
+        done_keys = read.parquet(path).select(*input_keys).distinct()
         todo = input_df.join(done_keys, input_keys, "left_anti")
         stage_fn(todo).write.mode("append").parquet(path)
     else:
-        stage_fn(input_df).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+        out.write.mode("overwrite").parquet(path)
+    return read.parquet(path)
 
 
 def extract_spans(

@@ -55,7 +55,7 @@ def run_compact(spark, path: str, target_mb: int = 256) -> dict:
     n_out = max(1, -(-input_bytes(path) // (target_mb * 1024 * 1024)))
     tmp = path.rstrip("/") + ".compact.tmp"
     df.repartition(n_out).write.mode("overwrite").parquet(tmp)
-    new_rows = spark.read.parquet(tmp).count()
+    new_rows = spark.read.schema(df.schema).parquet(tmp).count()
     if new_rows != n_rows:  # pragma: no cover - safety abort
         shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(

@@ -79,15 +79,14 @@ def main() -> None:
         with_confidence=args.with_confidence,
     )
     out.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+    n = spark.read.schema(out.schema).parquet(args.output).count()
     print(f"extracted spans for {n} documents → {args.output}")
     if args.figures_output:
         from high_performance_docling_spark.operators.figures import extract_figures
 
-        extract_figures(docs, cfg).write.mode("overwrite").parquet(
-            args.figures_output
-        )
-        nf = spark.read.parquet(args.figures_output).count()
+        figures = extract_figures(docs, cfg)
+        figures.write.mode("overwrite").parquet(args.figures_output)
+        nf = spark.read.schema(figures.schema).parquet(args.figures_output).count()
         print(f"extracted {nf} figure crops → {args.figures_output}")
     spark.stop()
 

@@ -87,27 +87,44 @@ def test_output_schema(spark):
     assert span_fields == ["kind", "text", "media_ref", "order"]
 
 
+def _page_keys(path):
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=["doc_id", "page_no"])
+    return list(zip(t.column("doc_id").to_pylist(), t.column("page_no").to_pylist()))
+
+
 def test_checkpoint_resume(spark, tmp_path):
+    import shutil
+
+    from pyspark.sql import functions as F
+
     cfg = GenConfig(seed=5, n_docs=8)
     ckpt = str(tmp_path / "ckpt")
     docs = docs_dataframe(spark, cfg, num_partitions=2)
 
     out1 = _spans(extract_spans(spark, docs, cfg, checkpoint_dir=ckpt).collect())
-    assert os.path.exists(os.path.join(ckpt, "pages"))
-    assert os.path.exists(os.path.join(ckpt, "elements"))
+    all_keys = sorted(_page_keys(os.path.join(ckpt, "parsed")))
 
     # simulate a restart: resume must not reprocess completed keys and
     # must produce identical output
     out2 = _spans(extract_spans(spark, docs, cfg, checkpoint_dir=ckpt).collect())
     assert out1 == out2
 
-    # partial checkpoint: drop half the docs from the pages checkpoint and
-    # verify only the missing ones are recomputed (by output completeness)
-    import shutil
-
-    shutil.rmtree(os.path.join(ckpt, "elements"))
+    # partial checkpoints: pages and elements committed for only half the
+    # docs; the resume must compute the other half, and only that half
+    half = sorted(out1)[::2]
+    for stage in ("pages", "elements"):
+        path = os.path.join(ckpt, stage)
+        (spark.read.parquet(path).where(F.col("doc_id").isin(half))
+         .write.parquet(path + ".half"))
+        shutil.rmtree(path)
+        os.rename(path + ".half", path)
+        assert {d for d, _ in _page_keys(path)} == set(half)
     out3 = _spans(extract_spans(spark, docs, cfg, checkpoint_dir=ckpt).collect())
     assert out3 == out1
+    for stage in ("parsed", "pages", "elements"):
+        assert sorted(_page_keys(os.path.join(ckpt, stage))) == all_keys, stage
 
 
 def test_lineage_rows_written(spark, tmp_path):
@@ -276,3 +293,20 @@ def test_plan_shapes_of_the_two_modes(spark, tmp_path):
     assert ckpt.count("Exchange") == 1, ckpt
     assert re.search(r"Exchange hashpartitioning\(doc_id#\d+", ckpt), ckpt
     assert ckpt.count("MapInPandas") == 1
+
+
+def test_checkpointed_build_runs_one_job_per_stage(spark, tmp_path):
+    """Building the checkpointed frame runs the three checkpointed stages
+    and nothing else: each checkpoint is read back with the stage's
+    declared schema, not with a footer-reading schema-inference job."""
+    cfg = GenConfig(seed=3, n_docs=8)
+    src = str(tmp_path / "docs")
+    docs_dataframe(spark, cfg, num_partitions=8).write.parquet(src)
+    docs = spark.read.parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpointed-build", "fresh checkpointed build")
+    try:
+        extract_spans(spark, docs, cfg, checkpoint_dir=str(tmp_path / "ckpt"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("checkpointed-build")) == 3
