@@ -8,7 +8,7 @@ Two execution modes (pipeline.extract_spans) over one page-batch core
   checkpointed     each boundary materialized to parquet, resumable:
     S1 parse       docs → pages (cells + typeset elements)   mapInPandas, 1→N rows
     S2 detect      pages → pages + raw detections            mapInArrow (model harness)
-    S3+S5+S6       pages → page elements                     mapInPandas, 1→1 rows
+    S3+S5+S6       pages → page elements                     mapInArrow, 1→1 rows
     S7 assemble    elements → (doc_id, spans_out[])          repartition(doc_id) + mapInPandas
 
 Scale design:
@@ -36,6 +36,8 @@ from operator import itemgetter
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..corpus import (
     GenConfig,
@@ -56,10 +58,9 @@ from ..schemas import (
     SPANS_CONF_SCHEMA,
     SPANS_OUT_SCHEMA,
 )
-from .model_harness import arrow_model_stage
+from .model_harness import arrow_model_stage, arrow_pylist
 
 _OFFSET_KEY = itemgetter("offset")
-_ELEMENT_KEYS = ("label", "l", "t", "r", "b", "text", "media_ref", "children")
 
 
 def _write_lineage_ms(
@@ -223,7 +224,7 @@ def detect_stage(parsed_df, cfg: GenConfig, lineage_dir: str | None = None):
             height=float(row["height"]),
             # the detector reads cell geometry for the marker-only
             # split noise case — must match the fused path exactly
-            cells=[dict(c) for c in row["cells"]],
+            cells=row["cells"],
             # the page image stand-in is not carried past detection
             elements=[element_from_dict(d, page_no) for d in row.pop("elements")],
         )
@@ -254,50 +255,51 @@ def layout_stage(pages_df, cfg: GenConfig, lineage_dir: str | None = None,
     186-202) — then page assembly (page_assemble_model.py port).
     Narrow — no shuffle.
 
+    A ``mapInArrow`` stage: ``cells`` and ``detections`` are decoded
+    column by column (:func:`arrow_pylist` gives fresh dicts, so the
+    kernels may keep them), and the output is built column by column
+    with ``pa.array(..., type=)``; ``doc_id`` and ``page_no`` pass
+    through as the input's Arrow arrays.
+
     ``with_confidence`` computes PageConfidenceScores HERE — the page
     grain, where the post-processed clusters still exist — and ships one
     struct per page row (a partial aggregation) through the elements
     checkpoint; doc_assemble_stage folds them into the ConfidenceReport."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    out_schema = ELEMENTS_CONF_SCHEMA if with_confidence else ELEMENTS_SCHEMA
+    arrow_schema = to_arrow_schema(out_schema)
+    elements_type = arrow_schema.field("elements").type
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         if with_confidence:
             from ..kernels.confidence import page_confidence
 
         lineage = _TaskLineage(lineage_dir, "layout")
         n = 0
-        for pdf in batches:
+        for rb in batches:
             items = [
-                (doc_id, TypesetPage(page_no=int(page_no), width=float(width),
-                                     height=float(height),
-                                     cells=[dict(c) for c in cells]))
+                (doc_id, TypesetPage(page_no=page_no, width=width,
+                                     height=height, cells=cells))
                 for doc_id, page_no, width, height, cells in zip(
-                    pdf["doc_id"], pdf["page_no"], pdf["width"],
-                    pdf["height"], pdf["cells"])
+                    *(arrow_pylist(rb.column(c)) for c in (
+                        "doc_id", "page_no", "width", "height", "cells")))
             ]
             n += len(items)
             page_clusters = process_page_batch(
-                items, cfg,
-                detections=[[dict(d) for d in dets] for dets in pdf["detections"]],
-            )
-            data = {
-                "doc_id": pdf["doc_id"],
-                "page_no": pdf["page_no"],
-                "elements": [
-                    [{k: e[k] for k in _ELEMENT_KEYS}
-                     for e in assemble_page_elements(doc_id, page.page_no, clusters)]
-                    for (doc_id, page), clusters in zip(items, page_clusters)
-                ],
-            }
+                items, cfg, detections=arrow_pylist(rb.column("detections")))
+            # struct fields are picked by name, so extra keys are ignored
+            out = [rb.column("doc_id"), rb.column("page_no"), pa.array(
+                [assemble_page_elements(doc_id, page.page_no, clusters)
+                 for (doc_id, page), clusters in zip(items, page_clusters)],
+                type=elements_type)]
             if with_confidence:
-                data["page_confidence"] = [
-                    page_confidence(page.page_no, clusters)
-                    for (_, page), clusters in zip(items, page_clusters)
-                ]
-            yield pd.DataFrame(data)
+                out.append(pa.array(
+                    [page_confidence(page.page_no, clusters)
+                     for (_, page), clusters in zip(items, page_clusters)],
+                    type=arrow_schema.field("page_confidence").type))
+            yield pa.RecordBatch.from_arrays(out, schema=arrow_schema)
         lineage.finish(n, n)
 
-    return pages_df.mapInPandas(
-        fn, ELEMENTS_CONF_SCHEMA if with_confidence else ELEMENTS_SCHEMA
-    )
+    return pages_df.mapInArrow(fn, out_schema)
 
 
 # --------------------------------------------------------------------------
@@ -368,7 +370,10 @@ def doc_assemble_stage(elements_df, cfg: GenConfig,
         lineage.finish(n_docs, n_docs)
         yield pd.DataFrame(chunk, columns=out_cols)
 
-    n = elements_df.sparkSession.sparkContext.defaultParallelism * 2
+    # one task per core, so assembly runs in one wave (AQE does not
+    # coalesce a repartition(n, col), and a Python task costs ~50 ms
+    # however small it is)
+    n = elements_df.sparkSession.sparkContext.defaultParallelism
     return elements_df.repartition(n, "doc_id").mapInPandas(
         fn, SPANS_CONF_SCHEMA if with_confidence else SPANS_OUT_SCHEMA
     )

@@ -8,12 +8,17 @@ Reference semantics being pinned: layout_predictor_gpu.py:21 (init lock),
 
 import uuid
 
+import pyarrow as pa
+import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F, types as T
 
 from high_performance_docling_spark.operators.model_harness import (
     FixedBatcher,
     ModelSpec,
     arrow_model_stage,
+    arrow_pylist,
+    arrow_rows,
     get_model,
 )
 
@@ -66,6 +71,43 @@ def test_fixed_batcher_no_padding_mode():
     results = batcher.run(list(range(70)))
     assert batcher.n_forward_calls == 3
     assert results[69]["batch_len"] == 6  # real tail size, no padding
+
+
+@pytest.mark.parametrize("pad", [True, False])
+@pytest.mark.parametrize("via", ["run", "add"])
+def test_fixed_batcher_chunks_padding_and_slicing_pinned(via, pad):
+    """Chunk boundaries, pad-by-repeat, result slicing, streaming and the
+    forward count, for n = 0, 1, bs, bs+1 and 3·bs+5, through both
+    ``run()`` and ``add()``/``finish()``. bs = 8 gives 3·bs+5 a 5-item
+    tail, so padding must repeat the tail's LAST item."""
+    bs = 8
+    for n in (0, 1, bs, bs + 1, 3 * bs + 5):
+        seen: list[list] = []
+
+        def forward(model, chunk):
+            seen.append(list(chunk))
+            return [(x, len(chunk)) for x in chunk]
+
+        batcher = FixedBatcher(_spec(batch_size=bs, pad=pad), forward)
+        items = [f"item{k}" for k in range(n)]
+        if via == "run":
+            results = batcher.run(items)
+        else:
+            results, yielded = [], []
+            for it in items:
+                got = list(batcher.add(it))
+                yielded.append(len(got))
+                results.extend(got)
+            results.extend(batcher.finish())
+            # a full batch is forwarded by the add() that completes it
+            assert yielded == [bs if (k + 1) % bs == 0 else 0
+                               for k in range(n)]
+        real = [items[k:k + bs] for k in range(0, n, bs)]
+        sent = [c + [c[-1]] * (bs - len(c)) if pad else c for c in real]
+        assert seen == sent, (n, seen)
+        assert results == [(x, len(s)) for c, s in zip(real, sent) for x in c]
+        assert batcher.n_forward_calls == len(real) == -(-n // bs)
+        assert not batcher._buf
 
 
 def test_arrow_model_stage_batches_across_record_batches(spark):
@@ -342,3 +384,80 @@ def test_staged_conv_detector_exact_on_ocr_corpus(spark, tmp_path):
     # non-vacuous: scanned OCR text is present in the output
     assert any("scanned region" in s["text"]
                for spans_ in conv.values() for s in spans_)
+
+
+# ---------------------------------------------------------------------------
+# arrow_pylist / arrow_rows: to_pylist() decoded column by column
+# ---------------------------------------------------------------------------
+
+_INT32 = st.integers(-2**31, 2**31 - 1)
+_LEAVES = {
+    "s": (pa.string(), st.text(max_size=6)),
+    "i32": (pa.int32(), _INT32),
+    "i64": (pa.int64(), st.integers(-2**63, 2**63 - 1)),
+    "f64": (pa.float64(), st.floats(allow_nan=False)),
+    "b": (pa.bool_(), st.booleans()),
+    "li32": (pa.list_(pa.int32()),
+             st.lists(st.none() | _INT32, max_size=4)),
+}
+
+
+def _assert_same(got, want):
+    """Equal values with the same Python type at every level."""
+    assert type(got) is type(want), (got, want)
+    if isinstance(want, dict):
+        assert list(got) == list(want)
+        for k in want:
+            _assert_same(got[k], want[k])
+    elif isinstance(want, list):
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            _assert_same(g, w)
+    else:
+        assert got == want
+
+
+@st.composite
+def _list_of_struct_arrays(draw):
+    names = draw(st.lists(st.sampled_from(sorted(_LEAVES)), min_size=1,
+                          max_size=len(_LEAVES), unique=True))
+    struct = st.fixed_dictionaries(
+        {k: st.none() | _LEAVES[k][1] for k in names})
+    rows = draw(st.lists(st.none() | st.lists(st.none() | struct, max_size=4),
+                         max_size=12))
+    arr = pa.array(rows, type=pa.list_(pa.struct(
+        [(k, _LEAVES[k][0]) for k in names])))
+    offset = draw(st.integers(0, len(arr)))
+    return arr.slice(offset, draw(st.integers(0, len(arr) - offset)))
+
+
+@settings(max_examples=300, deadline=None)
+@given(_list_of_struct_arrays())
+def test_arrow_pylist_equals_to_pylist(arr):
+    _assert_same(arrow_pylist(arr), arr.to_pylist())
+    # the struct level on its own, with the list's slice carried down
+    flat = arr.flatten()
+    _assert_same(arrow_pylist(flat), flat.to_pylist())
+    for i in range(flat.type.num_fields):
+        _assert_same(arrow_pylist(flat.field(i)), flat.field(i).to_pylist())
+
+
+def test_arrow_rows_on_checkpointed_batches(spark, tmp_path):
+    """One real batch of each checkpoint, as Spark reads it back (every
+    field nullable): arrow_rows equals RecordBatch.to_pylist."""
+    from high_performance_docling_spark.corpus import GenConfig
+    from high_performance_docling_spark.pipeline import (
+        docs_dataframe,
+        extract_spans,
+    )
+
+    cfg = GenConfig(seed=17, n_docs=6, ocr_frac=0.25, keep_empty_clusters=True)
+    ckpt = tmp_path / "ckpt"
+    extract_spans(spark, docs_dataframe(spark, cfg, num_partitions=2), cfg,
+                  checkpoint_dir=str(ckpt), with_confidence=True).collect()
+    for name in ("parsed", "pages", "elements"):
+        table = spark.read.parquet(str(ckpt / name)).toArrow()
+        assert all(f.nullable for f in table.schema), table.schema
+        rb = max(table.to_batches(), key=len)
+        assert rb.num_rows > 0
+        _assert_same(arrow_rows(rb), rb.to_pylist())

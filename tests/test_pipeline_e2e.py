@@ -295,6 +295,20 @@ def test_plan_shapes_of_the_two_modes(spark, tmp_path):
     assert ckpt.count("MapInPandas") == 1
 
 
+def test_checkpointed_assembly_runs_in_one_wave(spark, tmp_path):
+    """The doc_id shuffle makes one partition per core, so assembly is
+    one wave of Python tasks; AQE does not coalesce a repartition(n,
+    col), so the plan's partition count is the task count."""
+    cfg = GenConfig(seed=3, n_docs=8)
+    src = str(tmp_path / "docs")
+    docs_dataframe(spark, cfg, num_partitions=8).write.parquet(src)
+    out = extract_spans(spark, spark.read.parquet(src), cfg,
+                        checkpoint_dir=str(tmp_path / "ckpt"))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    n = re.findall(r"hashpartitioning\(doc_id#\d+, (\d+)\)", plan)
+    assert n == [str(spark.sparkContext.defaultParallelism)], plan
+
+
 def test_checkpointed_build_runs_one_job_per_stage(spark, tmp_path):
     """Building the checkpointed frame runs the three checkpointed stages
     and nothing else: each checkpoint is read back with the stage's
