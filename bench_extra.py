@@ -4,19 +4,19 @@
 Subcommands:
   kernel [n_docs] [passes]   — serial per-doc extraction kernel ms
                                (median of ``passes`` warmed passes)
-  golden                     — sha256 of kernel outputs over two fixed
-                               corpora (exact-equivalence check for
-                               kernel refactors)
+  golden                     — sha256 of kernel outputs over three fixed
+                               corpora, checked against
+                               tests/goldens/kernel_hashes.json (exits 1
+                               on a mismatch; the exact-equivalence gate
+                               for kernel refactors)
 
 Results print as one JSON line for easy diffing.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import pickle
 import statistics
 import sys
 import time
@@ -46,25 +46,24 @@ def kernel(n_docs: int = 200, passes: int = 5) -> None:
     }))
 
 
-def golden() -> None:
-    from high_performance_docling_spark.corpus import GenConfig, generate_corpus
-    from high_performance_docling_spark.oracle import extract_doc_result
+GOLDEN_FILE = os.path.join(REPO, "tests", "goldens", "kernel_hashes.json")
 
-    out = {}
-    for kwargs in (
-        dict(seed=42, n_docs=300),
-        dict(seed=7, n_docs=120, mega_frac=0.04, mega_pages=32),
-    ):
-        cfg = GenConfig(**kwargs)
-        docs = generate_corpus(cfg)
-        res = [
-            extract_doc_result(d["doc_id"], d["spans"], cfg,
-                               with_confidence=True)
-            for d in docs
-        ]
-        key = json.dumps(kwargs, sort_keys=True)
-        out[key] = hashlib.sha256(pickle.dumps(res)).hexdigest()
+
+def golden() -> int:
+    from high_performance_docling_spark.testing.regression import (
+        kernel_golden_hashes,
+    )
+
+    out = kernel_golden_hashes()
     print(json.dumps(out))
+    with open(GOLDEN_FILE) as f:
+        frozen = json.load(f)
+    bad = sorted(k for k in frozen.keys() | out.keys()
+                 if frozen.get(k) != out.get(k))
+    for k in bad:
+        print(f"MISMATCH {k}: frozen {frozen.get(k)} got {out.get(k)}",
+              file=sys.stderr)
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
@@ -73,6 +72,6 @@ if __name__ == "__main__":
         kernel(int(sys.argv[2]) if len(sys.argv) > 2 else 200,
                int(sys.argv[3]) if len(sys.argv) > 3 else 5)
     elif cmd == "golden":
-        golden()
+        sys.exit(golden())
     else:
         raise SystemExit(f"unknown subcommand {cmd!r}")

@@ -16,7 +16,6 @@ __all__ = [
     "intersection_area",
     "iou_matrix",
     "ios_matrix",
-    "pairwise_overlap_mask",
     "envelope",
     "union_find_groups",
     "cxcywh_to_xyxy",
@@ -60,45 +59,6 @@ def ios_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     with np.errstate(divide="ignore", invalid="ignore"):
         out = np.where(aa > 0.0, inter / np.maximum(aa, 1e-300), 0.0)
     return out
-
-
-def pairwise_overlap_mask(
-    boxes: np.ndarray,
-    overlap_threshold: float = 0.8,
-    containment_threshold: float = 0.8,
-    epsilon: float = 0.0,
-) -> np.ndarray:
-    """Symmetric (N,N) bool mask: True where boxes i, j "overlap enough".
-
-    Matches the reference's check (layout_postprocessor.py:98-122, 685-697):
-    IoU >= overlap_threshold - eps, or either-way containment
-    (intersection-over-self) >= containment_threshold - eps. Zero-area
-    boxes never overlap; the diagonal is False.
-    """
-    boxes = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
-    l, t, r, b = boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3]
-    # fused intersection_area(boxes, boxes): reuse iw as the inter buffer
-    iw = np.minimum(r[:, None], r[None, :]) - np.maximum(l[:, None], l[None, :])
-    ih = np.minimum(b[:, None], b[None, :]) - np.maximum(t[:, None], t[None, :])
-    np.clip(iw, 0.0, None, out=iw)
-    np.clip(ih, 0.0, None, out=ih)
-    inter = iw
-    inter *= ih
-    ar = np.clip(r - l, 0.0, None) * np.clip(b - t, 0.0, None)
-    ovlp_thr = overlap_threshold - epsilon
-    cont_thr = containment_threshold - epsilon
-    # Denominators are clamped to >= 1e-300, so the divisions are exact
-    # where area > 0 and never raise; zero-area lanes compute garbage-free
-    # zeros (inter is 0 there) and are masked out below anyway — identical
-    # results to the guarded np.where form, without the errstate overhead.
-    cont_a = inter / np.maximum(ar[:, None], 1e-300)
-    cont_b = inter / np.maximum(ar[None, :], 1e-300)
-    iou = inter / np.maximum(ar[:, None] + ar[None, :] - inter, 1e-300)
-    mask = (iou >= ovlp_thr) | (cont_a >= cont_thr) | (cont_b >= cont_thr)
-    pos = ar > 0.0
-    mask &= pos[:, None] & pos[None, :]
-    np.fill_diagonal(mask, False)
-    return mask
 
 
 def envelope(boxes: np.ndarray) -> tuple[float, float, float, float]:

@@ -15,7 +15,7 @@ Reference parity targets:
     (layout_predictor_gpu.py FIXED_H/W = 640)
 
 The page "render" is a deterministic occupancy bitmap (cells → white
-boxes on black), standing in for a PDF rasterizer the way the synthetic
+boxes on black, pictures → a position-dependent gray pattern), standing in for a PDF rasterizer the way the synthetic
 detector stands in for RT-DETR: the bytes are fake, every shape,
 coordinate transform, batch layout and dtype is real.
 """
@@ -27,21 +27,36 @@ import numpy as np
 RENDER_SCALE = 0.25  # bitmap pixels per pt (keeps pages ~150x200 px)
 
 
+def _pixel_box(
+    box: list[float], scale: float, w: int, h: int
+) -> tuple[int, int, int, int]:
+    l, t, r, b = box
+    return (max(0, int(np.floor(l * scale))), max(0, int(np.floor(t * scale))),
+            min(w, int(np.ceil(r * scale))), min(h, int(np.ceil(b * scale))))
+
+
 def render_page_bitmap(
-    width: float, height: float, boxes: list[list[float]], scale: float = RENDER_SCALE
+    width: float, height: float, boxes: list[list[float]],
+    scale: float = RENDER_SCALE, pictures: list[list[float]] = (),
 ) -> np.ndarray:
     """Deterministic grayscale page raster: uint8 [H, W], 255 where any
-    box covers, 0 elsewhere. ``boxes`` are (l, t, r, b) in page pts."""
+    box covers, 0 elsewhere; each picture box is then painted with the
+    gray pattern (3·x + 5·y) mod 256 of its pixel coordinates, so a
+    figure crop has content that depends on where the picture sits.
+    ``boxes`` and ``pictures`` are (l, t, r, b) in page pts."""
     w = max(1, int(round(width * scale)))
     h = max(1, int(round(height * scale)))
     img = np.zeros((h, w), dtype=np.uint8)
-    for l, t, r, b in boxes:
-        x1 = max(0, int(np.floor(l * scale)))
-        y1 = max(0, int(np.floor(t * scale)))
-        x2 = min(w, int(np.ceil(r * scale)))
-        y2 = min(h, int(np.ceil(b * scale)))
+    for box in boxes:
+        x1, y1, x2, y2 = _pixel_box(box, scale, w, h)
         if x2 > x1 and y2 > y1:
             img[y1:y2, x1:x2] = 255
+    for box in pictures:
+        x1, y1, x2, y2 = _pixel_box(box, scale, w, h)
+        if x2 > x1 and y2 > y1:
+            ys = np.arange(y1, y2, dtype=np.int64)[:, None]
+            xs = np.arange(x1, x2, dtype=np.int64)[None, :]
+            img[y1:y2, x1:x2] = (3 * xs + 5 * ys) % 256
     return img
 
 

@@ -57,7 +57,7 @@ from ..labels import (
     TEXT,
     WRAPPER_LABELS,
 )
-from ..geometry import pairwise_overlap_mask, union_find_groups
+from ..geometry import union_find_groups
 from .spatial_index import GRID_CUTOVER as _GRID_CUTOVER
 
 _MAXIDX = sys.maxsize
@@ -203,39 +203,44 @@ def _should_prefer(candidate: dict, other: dict, params: dict) -> bool:
 
 
 _BIG_GROUP = 64
-_DENSE_NUMPY_CUTOVER = 96  # below this, the pure-Python pair loop wins
 
 
 def _overlap_edges_py(
     clusters: list[dict], ovlp_thr: float, cont_thr: float
 ) -> list[tuple[int, int]]:
-    """i<j overlap edges by direct pair scan — semantically identical to
-    ``argwhere(triu(pairwise_overlap_mask(...), 1))``: same float
-    divisions (denominators only used when > 0), same >= comparisons,
-    zero-area boxes excluded, ascending (i, j) order."""
-    n = len(clusters)
+    """i<j overlap edges, in ascending (i, j) order, by a top-edge sweep:
+    positive-area boxes sorted by (t, index), each paired only with the
+    boxes whose top lies above its bottom — any later box has zero
+    vertical overlap, so the scan stops there. The predicate is the
+    reference's: the same float divisions (denominators only used when
+    > 0) and >= comparisons, all symmetric in the pair; zero-area boxes
+    never overlap. Same edge set as the grid index of spatial_index.py
+    (pinned by the parity tests)."""
     geom = []
-    for c in clusters:
+    for i, c in enumerate(clusters):
         l = c["l"]
         t = c["t"]
         r = c["r"]
         b = c["b"]
         w = r - l
         h = b - t
-        geom.append((l, t, r, b, (w if w > 0.0 else 0.0) * (h if h > 0.0 else 0.0)))
+        a = (w if w > 0.0 else 0.0) * (h if h > 0.0 else 0.0)
+        if a > 0.0:
+            geom.append((t, i, l, r, b, a))
+    geom.sort()
+    m = len(geom)
     edges: list[tuple[int, int]] = []
-    for i in range(n - 1):
-        li, ti, ri, bi, ai = geom[i]
-        if ai <= 0.0:
-            continue
-        for j in range(i + 1, n):
-            lj, tj, rj, bj, aj = geom[j]
-            if aj <= 0.0:
-                continue
+    for k in range(m - 1):
+        _ti, i, li, ri, bi, ai = geom[k]
+        for kj in range(k + 1, m):
+            tj, j, lj, rj, bj, aj = geom[kj]
+            if tj >= bi:
+                break
             iw = (ri if ri < rj else rj) - (li if li > lj else lj)
             if iw <= 0.0:
                 continue
-            ih = (bi if bi < bj else bj) - (ti if ti > tj else tj)
+            # tj >= ti (sorted), so the top of the intersection is tj
+            ih = (bi if bi < bj else bj) - tj
             if ih <= 0.0:
                 continue
             inter = iw * ih
@@ -244,7 +249,8 @@ def _overlap_edges_py(
                 or inter / aj >= cont_thr
                 or inter / (ai + aj - inter) >= ovlp_thr
             ):
-                edges.append((i, j))
+                edges.append((i, j) if i < j else (j, i))
+    edges.sort()
     return edges
 
 
@@ -296,29 +302,21 @@ def _remove_overlaps(
     """Merge sufficiently-overlapping clusters, keep the rule-based best
     (:654-844). Group membership is order-independent (connected
     components); group and member ordering follow input order."""
-    if not clusters:
-        return [], False
+    if len(clusters) < 2:  # nothing to merge
+        return list(clusters), False
     params = OVERLAP_PARAMS[family]
     n = len(clusters)
     if n > _GRID_CUTOVER:
-        # pathological pages (scanned books, 10^4+ clusters): the dense
-        # (N,N) mask is O(n²) memory, so switch to grid candidate
-        # pruning — same edge set (spatial_index.py parity contract),
-        # the role of the reference's R-tree/interval-tree index
+        # pathological pages (scanned books, 10^4+ clusters): grid
+        # candidate pruning bounds the work whatever the boxes' vertical
+        # spread — same edge set (spatial_index.py parity contract), the
+        # role of the reference's R-tree/interval-tree index
         # (layout_postprocessor.py:55-221)
         from .spatial_index import overlap_edges_grid
 
         boxes = np.array([_box(c) for c in clusters], dtype=np.float64)
         edges = overlap_edges_grid(boxes, 0.8, 0.8, epsilon)
-    elif n > _DENSE_NUMPY_CUTOVER:
-        boxes = np.array([_box(c) for c in clusters], dtype=np.float64)
-        mask = pairwise_overlap_mask(boxes, 0.8, 0.8, epsilon)
-        edges = np.argwhere(np.triu(mask, k=1))
     else:
-        # typical pages (tens of clusters): the i<j pair loop beats the
-        # dense numpy mask's per-call overhead. Same IEEE-double ops and
-        # comparisons as pairwise_overlap_mask, so the edge set is
-        # identical (pinned by the grid-parity test).
         edges = _overlap_edges_py(clusters, 0.8 - epsilon, 0.8 - epsilon)
         if not edges:  # nothing overlaps: all-singleton groups, unchanged
             return list(clusters), False
@@ -358,7 +356,11 @@ def _assign_cells(
         # typical pages: direct argmax loop (identical semantics — first
         # cluster with IoS >= 0.95 wins, else first strict argmax above
         # the floor) without the numpy call overhead. Same IEEE ops.
-        cgeom = [(c["l"], c["t"], c["r"], c["b"]) for c in clusters]
+        # (index, t, b, l, r): the vertical test runs first — on a page
+        # of stacked blocks it rejects most clusters on its own
+        cgeom = [(ci, c["t"], c["b"], c["l"], c["r"])
+                 for ci, c in enumerate(clusters)]
+        n_placed = 0
         for cell in valid_cells:
             vl = cell["l"]
             vt = cell["t"]
@@ -372,12 +374,14 @@ def _assign_cells(
             best_val = 0.0
             best_ix = 0
             hit95 = False
-            for ci, (cl, ct, cr, cb) in enumerate(cgeom):
-                iw = (vr if vr < cr else cr) - (vl if vl > cl else cl)
-                if iw <= 0.0:
+            for ci, ct, cb, cl, cr in cgeom:
+                if ct >= vb or cb <= vt:  # ih <= 0 without computing it
                     continue
                 ih = (vb if vb < cb else cb) - (vt if vt > ct else ct)
                 if ih <= 0.0:
+                    continue
+                iw = (vr if vr < cr else cr) - (vl if vl > cl else cl)
+                if iw <= 0.0:
                     continue
                 ios_v = (iw * ih) / area
                 if ios_v >= 0.95:
@@ -393,8 +397,10 @@ def _assign_cells(
                 if cell["index"] < best_cluster["first_cell_index"]:
                     best_cluster["first_cell_index"] = cell["index"]
                 assigned.add(cell["index"])
-        for c in clusters:
-            c["cells"] = _dedup_cells(c["cells"])
+                n_placed += 1
+        if n_placed != len(assigned):  # some index came twice
+            for c in clusters:
+                c["cells"] = _dedup_cells(c["cells"])
         return assigned
 
     cboxes = np.array([_box(c) for c in clusters], dtype=np.float64)
@@ -606,8 +612,31 @@ def postprocess_page(
             if not (c["label"] == PICTURE and _area(c) / page_area > 0.90)
         ]
 
+    # _ios(r, sp) > 0.8 per (special, regular) pair, with each regular
+    # cluster's extent and area computed once
+    rgeom = []
+    for r in reg if spec else ():  # (no special cluster: nothing contains)
+        il = r["l"]
+        it = r["t"]
+        ir = r["r"]
+        ib = r["b"]
+        w = ir - il
+        h = ib - it
+        if w > 0.0 and h > 0.0:
+            rgeom.append((r, il, it, ir, ib, w * h))
     for sp in spec:
-        contained = [r for r in reg if _ios(r, sp) > 0.8]
+        ol = sp["l"]
+        ot = sp["t"]
+        orr = sp["r"]
+        ob = sp["b"]
+        contained = []
+        for r, il, it, ir, ib, ra in rgeom:
+            iw = (orr if orr < ir else ir) - (ol if ol > il else il)
+            if iw <= 0.0:
+                continue
+            ih = (ob if ob < ib else ib) - (ot if ot > it else it)
+            if ih > 0.0 and (iw * ih) / ra > 0.8:
+                contained.append(r)
         if contained:
             sp["children"] = _sort_clusters_id(contained)
             if sp["label"] in (FORM, KEY_VALUE_REGION):

@@ -23,6 +23,7 @@ from __future__ import annotations
 from itertools import groupby
 
 EMITTING_TAGS = ("fcel", "ecel", "xcel", "ched", "rhed", "srow")
+_EMITTING = frozenset(EMITTING_TAGS)
 
 
 class OtslCorrector:
@@ -88,9 +89,9 @@ def otsl_spans(otsl_seq: list[str]) -> dict[int, tuple[int, int]]:
             row = []
             continue
         r, c = len(grid), len(row)
-        if tag in ("lcel",):
+        if tag == "lcel":
             owner = row[c - 1] if c > 0 else -1
-        elif tag in ("ucel",):
+        elif tag == "ucel":
             owner = grid[r - 1][c] if r > 0 and c < len(grid[r - 1]) else -1
         elif tag == "xcel":
             # interior of a 2D span: same origin as the cell above (== left);
@@ -110,14 +111,22 @@ def otsl_spans(otsl_seq: list[str]) -> dict[int, tuple[int, int]]:
         grid.append(row)
 
     # Extent of each origin's owned region.
+    # rows are walked in ascending order, so an origin's min row is its
+    # first row and its max row the current one
     extent: dict[int, list[int]] = {}  # origin -> [min_r, max_r, min_c, max_c]
     for r, grow in enumerate(grid):
         for c, owner in enumerate(grow):
             if owner < 0:
                 continue
-            e = extent.setdefault(owner, [r, r, c, c])
-            e[0], e[1] = min(e[0], r), max(e[1], r)
-            e[2], e[3] = min(e[2], c), max(e[3], c)
+            e = extent.get(owner)
+            if e is None:
+                extent[owner] = [r, r, c, c]
+                continue
+            e[1] = r
+            if c < e[2]:
+                e[2] = c
+            elif c > e[3]:
+                e[3] = c
 
     spans: dict[int, tuple[int, int]] = {}
     for owner, (r0, r1, c0, c1) in extent.items():
@@ -147,7 +156,7 @@ def build_table_cells(
             row_id += 1
             column_id = 0
             continue
-        if tag in EMITTING_TAGS:
+        if tag in _EMITTING:
             bbox = list(bboxes_page[cell_id]) if cell_id < len(bboxes_page) else [0.0] * 4
             cell_class = classes[cell_id] if cell_id < len(classes) else 2
             cell = {
@@ -180,7 +189,7 @@ def check_bbox_sync(
     residual excess truncates from the tail. Under-emission pads zeros
     (downstream cells beyond the list already default to a zero bbox in
     build_table_cells)."""
-    expected = sum(1 for t in otsl_seq if t in EMITTING_TAGS)
+    expected = sum(1 for t in otsl_seq if t in _EMITTING)
     if len(bboxes) == expected:
         return True, list(bboxes)
     out = list(bboxes)

@@ -76,10 +76,21 @@ def _xy_cut(boxes: list[tuple[float, float, float, float]], ids: list[int]) -> l
     else:
         order = sorted(range(len(ids)), key=lambda i: (boxes[i][1], boxes[i][0]))
         return [ids[i] for i in order]
-    first = [i for i in range(len(ids)) if boxes[i][axis] < cut]
-    second = [i for i in range(len(ids)) if boxes[i][axis] >= cut]
-    return _xy_cut([boxes[i] for i in first], [ids[i] for i in first]) + _xy_cut(
-        [boxes[i] for i in second], [ids[i] for i in second]
+    first_b: list = []
+    first_i: list = []
+    second_b: list = []
+    second_i: list = []
+    for b, i in zip(boxes, ids):
+        if b[axis] < cut:
+            first_b.append(b)
+            first_i.append(i)
+        elif b[axis] >= cut:
+            second_b.append(b)
+            second_i.append(i)
+    # a part of one box is already in order (no recursive call needed)
+    return (
+        (_xy_cut(first_b, first_i) if len(first_i) > 1 else first_i)
+        + (_xy_cut(second_b, second_i) if len(second_i) > 1 else second_i)
     )
 
 
@@ -126,29 +137,18 @@ def _rb_order(
     r = [b[2] for b in boxes]
     btm = [b[3] for b in boxes]
 
-    def x_overlap(i: int, j: int) -> bool:
-        return min(r[i], r[j]) - max(l[i], l[j]) > _RB_EPS
-
-    def y_overlap_frac(i: int, j: int) -> float:
-        ov = min(btm[i], btm[j]) - max(t[i], t[j])
-        mh = min(btm[i] - t[i], btm[j] - t[j])
-        return ov / mh if mh > 0 else 0.0
-
-    def above(i: int, j: int) -> bool:
-        return btm[i] < t[j] + _RB_EPS
-
-    def left_of(i: int, j: int) -> bool:
-        return r[i] < l[j] + _RB_EPS
-
     # candidates for j all satisfy btm[i] < t[j] + eps: scanning a
     # btm-ascending prefix (bisect) visits only them. cand ORDER is
     # irrelevant downstream — it feeds a max scan and up/dn sets (dn is
     # re-sorted, up is membership-only) — so the permuted order is safe.
     by_btm = sorted(range(n), key=btm.__getitem__)
     btm_sorted = [btm[i] for i in by_btm]
+    lr_by_btm = [(i, l[i], r[i]) for i in by_btm]
     r2l: dict[int, int] = {}
-    up: dict[int, list[int]] = {i: [] for i in range(n)}
-    dn: dict[int, list[int]] = {i: [] for i in range(n)}
+    up: list[list[int]] = [[] for _ in range(n)]
+    dn: list[list[int]] = [[] for _ in range(n)]
+    # Predicates inlined (closure calls measured ~10% of serial ms/doc);
+    # min/max are spelled as the builtins evaluate them.
     for i in range(n - 1):
         j = i + 1  # follows_maintext_order: consecutive cids only
         if labels is not None and not (
@@ -158,12 +158,18 @@ def _rb_order(
         # Same-line segments share a baseline and sit a character apart;
         # a column gutter (or any block-level gap) is far wider, so these
         # bounds keep cross-column neighbors out of the chain.
-        if (
-            left_of(i, j)
-            and l[j] - r[i] <= _L2R_MAX_GAP
-            and abs(t[j] - t[i]) <= _L2R_TOP_ALIGN
-            and y_overlap_frac(i, j) >= _L2R_Y_OVERLAP
+        ri, lj, ti, tj = r[i], l[j], t[i], t[j]
+        if not (
+            ri < lj + _RB_EPS                      # i left of j
+            and lj - ri <= _L2R_MAX_GAP
+            and abs(tj - ti) <= _L2R_TOP_ALIGN
         ):
+            continue
+        bi, bj = btm[i], btm[j]
+        ov = (bj if bj < bi else bi) - (tj if tj > ti else ti)
+        hi, hj = bi - ti, bj - tj
+        mh = hj if hj < hi else hi
+        if (ov / mh if mh > 0 else 0.0) >= _L2R_Y_OVERLAP:
             r2l[j] = i
     for j in range(n):
         if j in r2l:  # a right line-segment follows only its left part
@@ -175,16 +181,13 @@ def _rb_order(
         # sits strictly below i (above(i, w) ⟺ btm[i] < t[w] + eps), so
         # the check reduces to the max candidate top excluding i —
         # O(|C|) per j instead of the naive O(n) per (i, j) pair.
-        # Predicates inlined: this scan is the kernel's hottest loop and
-        # the closure-call overhead measured ~10% of serial ms/doc.
         lj, tj, rj = l[j], t[j], r[j]
         thr = tj + _RB_EPS
         k = _bisect_left(btm_sorted, thr)
         cand = [
-            i for i in by_btm[:k]
+            i for i, li, ri in lr_by_btm[:k]
             if i != j
-            and (r[i] if r[i] < rj else rj) - (l[i] if l[i] > lj else lj)
-            > _RB_EPS
+            and (ri if ri < rj else rj) - (li if li > lj else lj) > _RB_EPS
         ]
         if not cand:
             continue
@@ -198,6 +201,7 @@ def _rb_order(
                 top1, top2 = key, top1
             elif top2 is None or key > top2:
                 top2 = key
+        up_j = up[j]
         for i in cand:
             if top1[1] != i:
                 tmax = top1[0]
@@ -206,32 +210,35 @@ def _rb_order(
             else:
                 tmax = None
             if tmax is None or btm[i] >= tmax + _RB_EPS:
-                up[j].append(i)
+                up_j.append(i)
                 dn[i].append(j)
 
-    key = lambda i: (t[i], l[i])  # noqa: E731
-    for i in range(n):
-        dn[i].sort(key=key)
+    tl = list(zip(t, l))  # the (t, l) reading key of every element
+    key = tl.__getitem__
+    for d in dn:
+        if len(d) > 1:
+            d.sort(key=key)
     visited: set[int] = set()
     order: list[int] = []
 
     def dfs(i: int) -> None:
         for j in dn[i]:
-            if j not in visited and all(k in visited for k in up[j]):
+            if j not in visited and visited.issuperset(up[j]):
                 visited.add(j)
                 order.append(j)
                 dfs(j)
 
-    for h in sorted((i for i in range(n) if not up[i]), key=key):
+    for h in sorted([i for i in range(n) if not up[i]], key=key):
         if h not in visited:
             visited.add(h)
             order.append(h)
             dfs(h)
-    for i in sorted(range(n), key=key):  # acyclicity guard (never expected)
-        if i not in visited:
-            visited.add(i)
-            order.append(i)
-            dfs(i)
+    if len(order) < n:
+        for i in sorted(range(n), key=key):  # acyclicity guard (never expected)
+            if i not in visited:
+                visited.add(i)
+                order.append(i)
+                dfs(i)
     return [ids[i] for i in order]
 
 

@@ -19,7 +19,6 @@ _NORMALIZATION = {
     "”": '"',   # right double quote
     "•": "·",  # bullet → middle dot
 }
-_NORMALIZATION_TRANS = str.maketrans(_NORMALIZATION)
 
 
 def sanitize_text(lines: list[str]) -> str:
@@ -27,16 +26,17 @@ def sanitize_text(lines: list[str]) -> str:
     alphanumeric words, otherwise join with a space; then normalize
     unicode punctuation and strip.
 
-    Matches page_assemble_model.py:36-67 exactly, including the in-place
-    list mutation semantics (each line looks at the PREVIOUS line as
-    already rewritten).
+    Matches page_assemble_model.py:36-67 exactly. The reference rewrites
+    its list in place while iterating a copy of it, so each line's
+    rewrite depends on the ORIGINAL text of that line and the next one;
+    building the parts left to right gives the same join.
     """
-    lines = list(lines)
     if len(lines) <= 1:
         return " ".join(lines)
 
-    for ix, line in enumerate(lines[1:]):
-        prev_line = lines[ix]
+    parts = []
+    prev_line = lines[0]
+    for line in lines[1:]:
         if prev_line.endswith("-"):
             prev_words = _WORD_RE.findall(prev_line)
             line_words = _WORD_RE.findall(line)
@@ -46,17 +46,20 @@ def sanitize_text(lines: list[str]) -> str:
                 and prev_words[-1].isalnum()
                 and line_words[0].isalnum()
             ):
-                lines[ix] = prev_line[:-1]
+                prev_line = prev_line[:-1]
         else:
-            lines[ix] += " "
+            prev_line += " "
+        parts.append(prev_line)
+        prev_line = line
+    parts.append(prev_line)
 
-    joined = "".join(lines)
-    # translate() walks every char through the table dict; the six
-    # normalization chars are rare, so probe with C-level substring
-    # scans first — identical output either way
-    for ch in _NORMALIZATION:
+    joined = "".join(parts)
+    # No replacement char is itself a source char, so per-char replace()
+    # of the few chars present equals translate(), which walks every char
+    # of the string through the table dict.
+    for ch, to in _NORMALIZATION.items():
         if ch in joined:
-            return joined.translate(_NORMALIZATION_TRANS).strip()
+            joined = joined.replace(ch, to)
     return joined.strip()
 
 
@@ -69,7 +72,7 @@ def clean_cell_text(text: str) -> str:
 def cluster_text(cell_texts: list[str]) -> str:
     """Full text for a cluster: clean each cell, drop blanks, sanitize-join
     (page_assemble_model.py:88-94)."""
-    lines = [t for t in (clean_cell_text(raw) for raw in cell_texts) if t]
+    lines = [t for t in map(clean_cell_text, cell_texts) if t]
     return sanitize_text(lines)
 
 
@@ -77,4 +80,4 @@ def child_text(cell_texts: list[str]) -> str:
     """Text for a wrapper's child cluster: plain space-join of cleaned
     cells WITHOUT de-hyphenation or unicode normalization — the reference
     treats children differently (readingorder_model.py:86-91)."""
-    return " ".join(t for t in (clean_cell_text(raw) for raw in cell_texts) if t)
+    return " ".join([t for t in map(clean_cell_text, cell_texts) if t])

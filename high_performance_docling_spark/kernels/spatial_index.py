@@ -2,23 +2,24 @@
 
 The reference accelerates its overlap dedup with an R-tree + interval
 trees (fork/layout/layout_postprocessor.py:55-221, rtree/intervaltree
-libraries). This engine's default is a vectorized dense pairwise mask —
-measured FASTER up to a few thousand boxes because one NumPy matrix beats
-per-box tree walks at page cardinality. The dense mask is O(n²) memory
-though, so beyond ``GRID_CUTOVER`` boxes (scanned books, table-heavy
-mega-pages) ``layout_postprocess`` switches to this index: a uniform
-grid of buckets keyed by box extent, O(n) build, candidates = boxes
-sharing a bucket. Any pair passing the overlap criterion geometrically
-intersects (IoU/containment thresholds are > 0), and intersecting boxes
-always share a bucket, so the pruned edge set is EXACTLY the dense
-mask's edge set (parity-asserted in tests/test_layout_postprocess.py).
+libraries). This engine's default is a pure-Python top-edge sweep
+(``layout_postprocess._overlap_edges_py``), measured faster than both a
+dense NumPy pairwise mask and this index up to a few thousand boxes. The
+sweep's work grows with how many boxes share a vertical band, though, so
+beyond ``GRID_CUTOVER`` boxes (scanned books, table-heavy mega-pages)
+``layout_postprocess`` switches to this index: a uniform grid of buckets
+keyed by box extent, O(n) build, candidates = boxes sharing a bucket.
+Any pair passing the overlap criterion geometrically intersects
+(IoU/containment thresholds are > 0), and intersecting boxes always
+share a bucket, so the pruned edge set is EXACTLY the sweep's edge set
+(parity-asserted in tests/test_layout_postprocess.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-# dense pairwise masks win below this; grid pruning wins above
+# the top-edge sweep runs up to this many boxes; grid pruning above
 GRID_CUTOVER = 2048
 
 
@@ -71,10 +72,11 @@ def overlap_edges_grid(
     containment_threshold: float,
     epsilon: float = 0.0,
 ) -> np.ndarray:
-    """(K,2) i<j edge array equal to
-    ``argwhere(triu(pairwise_overlap_mask(boxes, ...), 1))`` but built
-    through grid candidate pruning — O(n + edges) memory instead of the
-    dense O(n²) mask."""
+    """(K,2) i<j edge array, ascending: every pair whose IoU reaches
+    ``overlap_threshold - epsilon`` or whose intersection covers at least
+    ``containment_threshold - epsilon`` of either box (zero-area boxes
+    never overlap), found through grid candidate pruning — O(n + edges)
+    memory."""
     global GRID_CALLS
     GRID_CALLS += 1
     boxes = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)

@@ -19,7 +19,9 @@ items per call, mirroring the reference's dynamic chunking
 
 from __future__ import annotations
 
+from bisect import bisect_left as _bisect_left
 from bisect import bisect_right as _bisect_right
+from operator import itemgetter as _itemgetter
 from typing import Any
 
 from .otsl import OtslCorrector, build_table_cells, check_bbox_sync, translate_bboxes
@@ -34,6 +36,8 @@ from .table_match import (
 
 MAX_TABLE_BATCH = 128  # reference: tablemodel04_rs.py:187
 _BAND_TOL = 3.0  # pt tolerance when clustering token edges into bands
+_CELL_ID_KEY = _itemgetter("cell_id")
+_ROW_COL_KEY = _itemgetter("start_row_offset_idx", "start_col_offset_idx")
 
 
 def _bands(values: list[float], tol: float) -> list[float]:
@@ -58,38 +62,38 @@ def geometric_table_decode(
     if not tokens:
         return [], [], []
 
-    row_pos = _bands([t["bbox"][1] for t in tokens], _BAND_TOL)
-    col_pos = _bands([t["bbox"][0] for t in tokens], _BAND_TOL)
-
-    # band positions are sorted, so "largest i with pos[i] <= v + tol" is
-    # bisect_right - 1 — same float comparisons, same index as the
-    # reference's linear max() scan
-    def row_of(t):
-        return _bisect_right(row_pos, t["bbox"][1] + _BAND_TOL) - 1
-
-    def col_of(x):
-        return _bisect_right(col_pos, x + _BAND_TOL) - 1
+    boxes = [t["bbox"] for t in tokens]
+    row_pos = _bands([b[1] for b in boxes], _BAND_TOL)
+    col_pos = _bands([b[0] for b in boxes], _BAND_TOL)
+    # band edges + tol, ascending like the bands (rounding is monotone)
+    row_hi = [v + _BAND_TOL for v in row_pos]
+    col_hi = [v + _BAND_TOL for v in col_pos]
 
     n_rows, n_cols = len(row_pos), len(col_pos)
     grid: list[list[dict | None]] = [[None] * n_cols for _ in range(n_rows)]
-    for t in tokens:
-        r = row_of(t)
-        c0 = col_of(t["bbox"][0])
-        # how many column / row bands does this token cover?
-        c1 = c0
-        for c in range(c0 + 1, n_cols):
-            if t["bbox"][2] > col_pos[c] + _BAND_TOL:
-                c1 = c
-        r1 = r
-        for rr in range(r + 1, n_rows):
-            if t["bbox"][3] > row_pos[rr] + _BAND_TOL:
-                r1 = rr
-        if grid[r][c0] is None:
+    for t, (x1, y1, x2, y2) in zip(tokens, boxes):
+        # band positions are sorted, so "largest i with pos[i] <= v + tol"
+        # is bisect_right - 1 — same float comparisons, same index as the
+        # reference's linear max() scan
+        r = _bisect_right(row_pos, y1 + _BAND_TOL) - 1
+        c0 = _bisect_right(col_pos, x1 + _BAND_TOL) - 1
+        # how many column / row bands does this token cover? "x2 > pos[c]
+        # + tol" holds on a prefix of the bands, so the last band that
+        # satisfies it is bisect_left - 1 (only bands past the token's own
+        # count)
+        c1 = _bisect_left(col_hi, x2) - 1
+        if c1 < c0:
+            c1 = c0
+        r1 = _bisect_left(row_hi, y2) - 1
+        if r1 < r:
+            r1 = r
+        slot = grid[r][c0]
+        if slot is None:
             grid[r][c0] = {"token": t, "c1": c1, "r1": r1}
         else:
             # multiple tokens in one slot: widen the slot's extent
-            grid[r][c0]["c1"] = max(grid[r][c0]["c1"], c1)
-            grid[r][c0]["r1"] = max(grid[r][c0]["r1"], r1)
+            slot["c1"] = max(slot["c1"], c1)
+            slot["r1"] = max(slot["r1"], r1)
 
     # derive span ownership AFTER all tokens placed, so widened slots emit
     # lcel/ucel/xcel continuations rather than phantom ecels
@@ -113,7 +117,7 @@ def geometric_table_decode(
     # where the reference applies them (batched_decoder.py:158-166): the
     # corrected tag decides bbox emission. Identity on this decoder's
     # legal streams; load-bearing once a neural AR decoder slots in.
-    corrector = OtslCorrector()
+    step = OtslCorrector().step
 
     def norm(b):
         return [
@@ -124,9 +128,10 @@ def geometric_table_decode(
         ]
 
     for r in range(n_rows):
+        origins = span_origin[r]
         for c in range(n_cols):
-            origin = span_origin[r][c]
-            if origin is not None and origin != (r, c):
+            origin = origins[c]
+            if origin is not None and (origin[0] != r or origin[1] != c):
                 orow, ocol = origin
                 if orow == r:
                     tag = "lcel"  # left-merge continuation
@@ -134,7 +139,7 @@ def geometric_table_decode(
                     tag = "ucel"  # up-merge continuation
                 else:
                     tag = "xcel"
-                tag = corrector.step(tag)
+                tag = step(tag)
                 otsl.append(tag)
                 if tag in ("xcel", "fcel"):
                     # xcel is an emitting tag (tf_cell_matcher.py:381): it
@@ -145,7 +150,7 @@ def geometric_table_decode(
                 continue
             slot = grid[r][c]
             if slot is None:
-                otsl.append(corrector.step("ecel"))
+                otsl.append(step("ecel"))
                 # empty slot bbox: the grid cell extent
                 x1 = col_pos[c]
                 x2 = col_pos[c + 1] if c + 1 < n_cols else tr
@@ -155,10 +160,10 @@ def geometric_table_decode(
                 classes.append(0)
             else:
                 tag = "ched" if r == 0 and n_rows > 1 else "fcel"
-                otsl.append(corrector.step(tag))
+                otsl.append(step(tag))
                 bboxes.append(norm(slot["token"]["bbox"]))
                 classes.append(2)
-        otsl.append(corrector.step("nl"))
+        otsl.append(step("nl"))
     return otsl, bboxes, classes
 
 
@@ -187,7 +192,7 @@ def table_structure_for_tokens(
         matches = iopdf_match(table_cells, tokens)
     cells_out, final_matches = matching_post_process(table_cells, tokens, matches)
     responses = generate_tf_response(cells_out, final_matches)
-    responses.sort(key=lambda item: item["cell_id"])  # tf_predictor.py:845
+    responses.sort(key=_CELL_ID_KEY)  # tf_predictor.py:845
     tf_cells = merge_tf_output(responses, tokens)
     num_rows, num_cols = compact_row_col_indexes(tf_cells)
     text = serialize_table_text(tf_cells)
@@ -204,9 +209,7 @@ def serialize_table_text(tf_cells: list[dict]) -> str:
     """Row-major text serialization of the merged grid: cells ordered by
     (start_row, start_col), each cell's matched tokens in match order."""
     parts: list[str] = []
-    for cell in sorted(
-        tf_cells, key=lambda c: (c["start_row_offset_idx"], c["start_col_offset_idx"])
-    ):
+    for cell in sorted(tf_cells, key=_ROW_COL_KEY):
         toks = [t["token"] for t in cell["text_cell_bboxes"] if t["token"]]
         if toks:
             parts.append(" ".join(toks))
@@ -235,11 +238,13 @@ def gather_table_tokens(
         t = c["t"]
         r = c["r"]
         b = c["b"]
-        iw = (r if r < qr else qr) - (l if l > ql else ql)
-        if iw <= 0:
-            continue
+        # vertical test first: most of a page's words lie above or below
+        # a table, while a one-column page puts every word beside it
         ih = (b if b < qb else qb) - (t if t > qt else qt)
         if ih <= 0:
+            continue
+        iw = (r if r < qr else qr) - (l if l > ql else ql)
+        if iw <= 0:
             continue
         if iw * ih / ((r - l) * (b - t) + 1e-6) < ios:
             continue

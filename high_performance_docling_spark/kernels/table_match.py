@@ -23,6 +23,7 @@ from operator import itemgetter as _itemgetter
 import numpy as np
 
 _CELL_ID_KEY = _itemgetter("cell_id")
+_IOPDF_KEY = _itemgetter("iopdf")
 
 
 # --------------------------------------------------------------------------
@@ -38,11 +39,10 @@ def iopdf_match(table_cells: list[dict], pdf_cells: list[dict]) -> dict[str, lis
         # typical tables: direct per-pdf-cell argmax loop — same IEEE
         # ops (clip ≡ skip-on-nonpositive with threshold > 0), same
         # first-strict-max tie-break as np.argmax, no numpy call overhead
-        tgeom = [
-            (t["bbox"][0], t["bbox"][1], t["bbox"][2], t["bbox"][3],
-             t["cell_id"])
-            for t in table_cells
-        ]
+        tgeom = []
+        for t in table_cells:
+            b = t["bbox"]
+            tgeom.append((b[0], b[1], b[2], b[3], t["cell_id"]))
         matches: dict[str, list[dict]] = {}
         for p in pdf_cells:
             pl, pt, pr, pb_ = p["bbox"]
@@ -62,6 +62,11 @@ def iopdf_match(table_cells: list[dict], pdf_cells: list[dict]) -> dict[str, lis
                 if score > best_score:
                     best_score = score
                     best_cid = cid
+                    # iw <= pr - pl and ih <= pb_ - pt in IEEE doubles
+                    # (rounding is monotone), so no score exceeds 1.0:
+                    # the first cell to reach it is the argmax
+                    if score >= 1.0:
+                        break
             if best_score > 0.01:
                 matches[str(p["id"])] = [
                     {"table_cell_id": int(best_cid), "iopdf": best_score}
@@ -146,36 +151,46 @@ def _table_dimension(table_cells: list[dict]) -> tuple[int, int, int]:
     columns = rows = 1
     max_cell_id = 0
     for c in table_cells:
-        columns = max(columns, c["column_id"])
-        rows = max(rows, c["row_id"])
-        max_cell_id = max(max_cell_id, c["cell_id"])
+        v = c["column_id"]
+        if v > columns:
+            columns = v
+        v = c["row_id"]
+        if v > rows:
+            rows = v
+        v = c["cell_id"]
+        if v > max_cell_id:
+            max_cell_id = v
     return columns + 1, rows + 1, max_cell_id
 
 
-def _good_bad_in_column(table_cells, column, matches):
-    """Split a column's cells into matched (good, repeated once per match
-    occurrence — the reference appends per match, :84-114) and unmatched.
+def _good_bad_by_column(table_cells, tab_columns, matches):
+    """Split each column's cells (columns 0..tab_columns-1) into matched
+    (good, repeated once per match occurrence — the reference appends
+    per match, :84-114) and unmatched; returns (goods, bads), one list
+    per column.
 
-    The reference's inner scan over every match per cell is O(cells ×
-    matches); counting match occurrences per table_cell_id once gives the
-    identical good/bad lists (all appends for one cell are the same
-    object, so ``[cell] * count`` preserves order exactly) in O(matches +
-    cells)."""
+    The reference rescans every match for every cell of every column;
+    counting match occurrences per table_cell_id once and bucketing the
+    cells in one pass gives the identical per-column good/bad lists (all
+    appends for one cell are the same object, so ``[cell] * count``
+    preserves order exactly) in O(matches + cells)."""
     counts: dict[int, int] = {}
     for match_list in matches.values():
         for m in match_list:
             tcid = m["table_cell_id"]
             counts[tcid] = counts.get(tcid, 0) + 1
-    good, bad = [], []
+    goods: list[list] = [[] for _ in range(tab_columns)]
+    bads: list[list] = [[] for _ in range(tab_columns)]
     for cell in table_cells:
-        if cell["column_id"] != column:
+        column = cell["column_id"]
+        if not 0 <= column < tab_columns:
             continue
         n = counts.get(cell["cell_id"], 0) if cell.get("cell_class", 2) > 1 else 0
         if n:
-            good.extend([cell] * n)
+            goods[column].extend([cell] * n)
         else:
-            bad.append(cell)
-    return good, bad
+            bads[column].append(cell)
+    return goods, bads
 
 
 def _find_alignment(cells: list[dict]) -> str:
@@ -259,7 +274,9 @@ def _align_cells_to_pdf(table_cells, pdf_cells, matches):
     matched pdf cells' bboxes — :474-539."""
     pdf_bbox = {p["id"]: p["bbox"] for p in pdf_cells}
     by_id = {c["cell_id"]: c for c in table_cells}
-    new_cells = []
+    # first copy per cell_id, in match order, plus every copy's bbox
+    out: list[dict] = []
+    groups: dict[int, list] = {}
     for pdf_id, match_list in matches.items():
         # single-match lists (the step-8 final assignment) skip the set
         # build; identical iteration for the general case
@@ -274,24 +291,21 @@ def _align_cells_to_pdf(table_cells, pdf_cells, matches):
             tc = by_id.get(cid)
             if not tc:
                 continue
+            key = tc["cell_id"]
+            bbs = groups.get(key)
+            if bbs is not None:
+                bbs.append(list(bbox))
+                continue
             nc = dict(tc)
             nc["bbox"] = list(bbox)
             nc.setdefault("cell_class", 2)
-            new_cells.append(nc)
-    groups: dict[int, list] = {}
-    for c in new_cells:
-        groups.setdefault(c["cell_id"], []).append(c["bbox"])
-    out, seen = [], set()
-    for c in new_cells:
-        cid = c["cell_id"]
-        if cid in seen:
-            continue
-        bbs = groups[cid]
+            groups[key] = [nc["bbox"]]
+            out.append(nc)
+    for c in out:
+        bbs = groups[c["cell_id"]]
         if len(bbs) > 1:
             c["bbox"] = [min(b[0] for b in bbs), min(b[1] for b in bbs),
                          max(b[2] for b in bbs), max(b[3] for b in bbs)]
-        out.append(c)
-        seen.add(cid)
     return out
 
 
@@ -305,42 +319,44 @@ def _deduplicate_columns(tab_columns, table_cells, iou_matches, ioc_matches):
     # may repeat here (steps 1-4 list a good cell once per PDF cell that
     # matched it), but every repeat is the same cell, so the map is exact
     # as long as each cell_id has a single column_id.
-    col_of = {c["cell_id"]: c["column_id"] for c in table_cells}
-    assert len({(c["cell_id"], c["column_id"]) for c in table_cells}) == len(
-        col_of
-    ), "one cell_id in two columns"
-    pdf_iou_by_col: list[list] = [[] for _ in range(tab_columns)]
-    pdf_ioc_by_col: list[list] = [[] for _ in range(tab_columns)]
+    col_of: dict = {}
+    for c in table_cells:
+        col = c["column_id"]
+        prev = col_of.setdefault(c["cell_id"], col)
+        assert prev == col, "one cell_id in two columns"
+    # per column: the pdf ids (as ints) of its iou and ioc matches — the
+    # reference's iou-list-plus-new-ioc-keys, which only ever feeds a
+    # set intersection and a size
+    pdf_in_col: list[set] = [set() for _ in range(tab_columns)]
     score_in_col = [0.0] * tab_columns
     for key, mlist in iou_matches.items():
         for m in mlist:
             col = col_of.get(m["table_cell_id"])
             if col is not None and 0 <= col < tab_columns:
-                score_in_col[col] += m.get("iou", m.get("iopdf", 0.0))
-                pdf_iou_by_col[col].append(key)
+                score_in_col[col] += m["iou"] if "iou" in m else m.get("iopdf", 0.0)
+                pdf_in_col[col].add(int(key))
     for key, mlist in ioc_matches.items():
         for m in mlist:
             col = col_of.get(m["table_cell_id"])
             if col is not None and 0 <= col < tab_columns:
                 score_in_col[col] += m["iopdf"]
-                pdf_ioc_by_col[col].append(key)
-    pdf_in_col = []
-    for col in range(tab_columns):
-        pdf_iou, pdf_ioc = pdf_iou_by_col[col], pdf_ioc_by_col[col]
-        col_pdf = pdf_iou + list(set(pdf_ioc) - set(pdf_iou))
-        pdf_in_col.append(list(set(int(x) for x in col_pdf)))
+                pdf_in_col[col].add(int(key))
 
     cols_to_drop = []
     for cl in range(tab_columns - 1):
-        a, b = pdf_in_col[cl], pdf_in_col[cl + 1]
-        inter = set(a) & set(b)
-        frac = len(inter) / len(a) if a else 0.0
+        a = pdf_in_col[cl]
+        frac = len(a & pdf_in_col[cl + 1]) / len(a) if a else 0.0
         if frac > 0.6:
             if score_in_col[cl] >= score_in_col[cl + 1]:
                 cols_to_drop.append(cl + 1)
             else:
                 cols_to_drop.append(cl)
 
+    if not cols_to_drop:
+        return (list(table_cells),
+                {pdf_id: list(mlist) for pdf_id, mlist in ioc_matches.items()
+                 if mlist},
+                tab_columns)
     removed_ids = set()
     new_cells = []
     for c in table_cells:
@@ -359,7 +375,7 @@ def _deduplicate_columns(tab_columns, table_cells, iou_matches, ioc_matches):
 def _final_assignment(ioc_matches):
     """Each pdf cell keeps only its single best iopdf match — :682-717."""
     return {
-        pdf_id: [max(mlist, key=lambda m: m["iopdf"])]
+        pdf_id: [mlist[0] if len(mlist) == 1 else max(mlist, key=_IOPDF_KEY)]
         for pdf_id, mlist in ioc_matches.items()
     }
 
@@ -376,6 +392,9 @@ def _pick_orphans(tab_rows, tab_cols, max_cell_id, table_cells, pdf_cells, match
     earlier bands)."""
     new_matches = matches
     new_cells = table_cells
+    if all(str(p["id"]) in matches for p in pdf_cells):
+        # no orphans: both band scans come back empty, nothing changes
+        return new_matches, new_cells, max_cell_id
 
     def band_scan(n_bands, axis_is_row):
         bands: list[list[str]] = []
@@ -559,13 +578,15 @@ def matching_post_process(
     tab_columns, tab_rows, max_cell_id = _table_dimension(table_cells)
 
     fixed = []
-    for col in range(tab_columns):  # steps 1-4
-        good, bad = _good_bad_in_column(table_cells, col, matches)
-        alignment = _find_alignment(good)
-        median_x, _my, median_w, median_h = _median_pos_size(good, alignment)
-        moved = _move_cells(bad, median_x, False, median_w, median_h, alignment)
+    goods, bads = _good_bad_by_column(table_cells, tab_columns, matches)
+    for good, bad in zip(goods, bads):  # steps 1-4
         fixed.extend(good)
-        fixed.extend(moved)
+        if bad:  # the alignment vote and medians only place bad cells
+            alignment = _find_alignment(good)
+            median_x, _my, median_w, median_h = _median_pos_size(good, alignment)
+            fixed.extend(
+                _move_cells(bad, median_x, False, median_w, median_h, alignment)
+            )
 
     fixed_sorted = sorted(fixed, key=_CELL_ID_KEY)
     ioc_matches = iopdf_match(fixed_sorted, pdf_cells)  # step 5
@@ -601,43 +622,50 @@ def generate_tf_response(table_cells: list[dict], matches: dict[str, list[dict]]
     by_id = {c["cell_id"]: c for c in table_cells}
     out = []
     for pdf_cell_id, mlist in matches.items():
-        tf = {
-            "cell_id": int(pdf_cell_id),
-            "bbox": {},
-            "row_span": 1,
-            "col_span": 1,
-            "start_row_offset_idx": -1,
-            "end_row_offset_idx": -1,
-            "start_col_offset_idx": -1,
-            "end_col_offset_idx": -1,
-            "column_header": False,
-            "row_header": False,
-            "row_section": False,
-        }
+        # header flags OR over every matched cell; grid slot and bbox come
+        # from the last one, each span from the last cell that has one
+        ched = rhed = srow = False
+        row_span = col_span = 1
+        last = None
         for m in mlist:
             tc = by_id.get(m["table_cell_id"])
             if tc is None:
                 continue
             label = tc.get("label")
             if label == "ched":
-                tf["column_header"] = True
-            if label == "rhed":
-                tf["row_header"] = True
-            if label == "srow":
-                tf["row_section"] = True
-            tf["start_col_offset_idx"] = tc["column_id"]
-            tf["end_col_offset_idx"] = tc["column_id"] + 1
-            tf["start_row_offset_idx"] = tc["row_id"]
-            tf["end_row_offset_idx"] = tc["row_id"] + 1
+                ched = True
+            elif label == "rhed":
+                rhed = True
+            elif label == "srow":
+                srow = True
             if "colspan_val" in tc:
-                tf["col_span"] = tc["colspan_val"]
-                tf["end_col_offset_idx"] = tc["column_id"] + tc["colspan_val"]
+                col_span = tc["colspan_val"]
             if "rowspan_val" in tc:
-                tf["row_span"] = tc["rowspan_val"]
-                tf["end_row_offset_idx"] = tc["row_id"] + tc["rowspan_val"]
-            b = tc["bbox"]
-            tf["bbox"] = {"l": b[0], "t": b[1], "r": b[2], "b": b[3]}
-        out.append(tf)
+                row_span = tc["rowspan_val"]
+            last = tc
+        if last is None:
+            bbox: dict = {}
+            sr = er = sc = ec = -1
+        else:
+            b = last["bbox"]
+            bbox = {"l": b[0], "t": b[1], "r": b[2], "b": b[3]}
+            sc = last["column_id"]
+            ec = sc + last["colspan_val"] if "colspan_val" in last else sc + 1
+            sr = last["row_id"]
+            er = sr + last["rowspan_val"] if "rowspan_val" in last else sr + 1
+        out.append({
+            "cell_id": int(pdf_cell_id),
+            "bbox": bbox,
+            "row_span": row_span,
+            "col_span": col_span,
+            "start_row_offset_idx": sr,
+            "end_row_offset_idx": er,
+            "start_col_offset_idx": sc,
+            "end_col_offset_idx": ec,
+            "column_header": ched,
+            "row_header": rhed,
+            "row_section": srow,
+        })
     return out
 
 
@@ -651,8 +679,9 @@ def merge_tf_output(docling_output: list[dict], pdf_cells: list[dict]) -> list[d
     slots: dict[tuple, dict] = {}
     for item in docling_output:
         key = (item["start_col_offset_idx"], item["start_row_offset_idx"])
-        if key not in slots:
-            slots[key] = {
+        slot = slots.get(key)
+        if slot is None:
+            slot = slots[key] = {
                 "bbox": item["bbox"],
                 "row_span": item["row_span"],
                 "col_span": item["col_span"],
@@ -667,9 +696,9 @@ def merge_tf_output(docling_output: list[dict], pdf_cells: list[dict]) -> list[d
             }
         p = pdf_by_id.get(item["cell_id"])
         if p is not None:
-            slots[key]["text_cell_bboxes"].append(
-                {"l": p["bbox"][0], "t": p["bbox"][1], "r": p["bbox"][2],
-                 "b": p["bbox"][3], "token": p["text"]}
+            b = p["bbox"]
+            slot["text_cell_bboxes"].append(
+                {"l": b[0], "t": b[1], "r": b[2], "b": b[3], "token": p["text"]}
             )
     return list(slots.values())
 

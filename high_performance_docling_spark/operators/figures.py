@@ -63,8 +63,8 @@ def extract_figures(docs_df: DataFrame, cfg: GenConfig) -> DataFrame:
                         continue
                     img = render_page_bitmap(
                         page.width, page.height,
-                        [[c["l"], c["t"], c["r"], c["b"]] for c in page.cells]
-                        + [[e.l, e.t, e.r, e.b] for e in pics],
+                        [[c["l"], c["t"], c["r"], c["b"]] for c in page.cells],
+                        pictures=[[e.l, e.t, e.r, e.b] for e in pics],
                     )
                     for e in pics:
                         crop = crop_bitmap(img, [e.l, e.t, e.r, e.b], RENDER_SCALE)

@@ -112,7 +112,9 @@ def _checkpoint_stage(
     out = stage_fn(input_df)
     read = spark.read.schema(out.schema)
     if _checkpoint_committed(path):
-        done_keys = read.parquet(path).select(*input_keys).distinct()
+        # no distinct(): a left-anti join ignores duplicate right-side
+        # keys, and deduplicating them costs a job per stage
+        done_keys = read.parquet(path).select(*input_keys)
         todo = input_df.join(done_keys, input_keys, "left_anti")
         stage_fn(todo).write.mode("append").parquet(path)
     else:

@@ -123,3 +123,37 @@ def table_hash(tf_cells: list[dict[str, Any]]) -> str:
         canonical_table_cells(tf_cells), sort_keys=True, separators=(",", ":")
     )
     return hashlib.sha256(blob.encode("utf-8")).hexdigest()
+
+
+# Corpora whose serial oracle outputs (spans + confidence, pickled) are
+# frozen in tests/goldens/kernel_hashes.json: the default corpus, a
+# mega-page one, and one with checkpointed_skew's generator settings
+# (OCR crops, kept empty clusters). Any kernel edit must leave all three
+# hashes unchanged.
+KERNEL_GOLDEN_CORPORA: tuple[dict[str, Any], ...] = (
+    dict(seed=42, n_docs=300),
+    dict(seed=7, n_docs=120, mega_frac=0.04, mega_pages=32),
+    dict(seed=1, n_docs=150, mega_frac=0.04, mega_pages=32, ocr_frac=0.2,
+         keep_empty_clusters=True),
+)
+
+
+def kernel_golden_hashes() -> dict[str, str]:
+    """sha256 of the pickled oracle results per KERNEL_GOLDEN_CORPORA
+    entry, keyed by the entry's sorted-key JSON."""
+    import pickle
+
+    from ..corpus import GenConfig, generate_corpus
+    from ..oracle import extract_doc_result
+
+    out = {}
+    for kwargs in KERNEL_GOLDEN_CORPORA:
+        cfg = GenConfig(**kwargs)
+        res = [
+            extract_doc_result(d["doc_id"], d["spans"], cfg,
+                               with_confidence=True)
+            for d in generate_corpus(cfg)
+        ]
+        key = json.dumps(kwargs, sort_keys=True)
+        out[key] = hashlib.sha256(pickle.dumps(res)).hexdigest()
+    return out

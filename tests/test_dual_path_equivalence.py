@@ -5,7 +5,8 @@ including degenerate zero-extent boxes and threshold epsilons.
 
 The large-N path is exercised by padding the input past the cutover
 with far-away boxes that can never match/overlap; the shared prefix of
-the result must be unchanged.
+the result must be unchanged. Overlap edges compare the pure-Python
+sweep with the grid index that takes over past GRID_CUTOVER directly.
 """
 
 from __future__ import annotations
@@ -15,9 +16,9 @@ import random
 
 import numpy as np
 
-from high_performance_docling_spark.geometry import pairwise_overlap_mask
 from high_performance_docling_spark.kernels import layout_postprocess as LP
 from high_performance_docling_spark.kernels import table_match as TM
+from high_performance_docling_spark.kernels.spatial_index import overlap_edges_grid
 
 _MAXIDX = 2**63 - 1
 
@@ -32,23 +33,20 @@ def _rand_box(rng: random.Random, degenerate_ok: bool = True):
     return l, t, l + w, t + h
 
 
-def test_overlap_edges_py_matches_numpy_mask():
+def test_overlap_edges_py_matches_grid_index():
+    """The top-edge sweep (pages up to GRID_CUTOVER clusters) and the
+    grid index (beyond it) give the same ascending edge list."""
     rng = random.Random(123)
     for _ in range(200):
         n = rng.randint(0, 40)
         clusters = [dict(zip("ltrb", _rand_box(rng))) for _ in range(n)]
         eps = rng.choice([0.0, 1e-4])
-        edges_py = [tuple(e) for e in
-                    LP._overlap_edges_py(clusters, 0.8 - eps, 0.8 - eps)]
-        if n:
-            boxes = np.array([(c["l"], c["t"], c["r"], c["b"])
-                              for c in clusters])
-            mask = pairwise_overlap_mask(boxes, 0.8, 0.8, eps)
-            edges_np = [tuple(e) for e in
-                        np.argwhere(np.triu(mask, k=1)).tolist()]
-        else:
-            edges_np = []
-        assert edges_py == edges_np
+        edges_py = LP._overlap_edges_py(clusters, 0.8 - eps, 0.8 - eps)
+        boxes = np.array([(c["l"], c["t"], c["r"], c["b"])
+                          for c in clusters]).reshape(-1, 4)
+        edges_grid = [tuple(e) for e in
+                      overlap_edges_grid(boxes, 0.8, 0.8, eps).tolist()]
+        assert edges_py == edges_grid
 
 
 def test_assign_cells_python_path_matches_numpy_path():

@@ -325,12 +325,15 @@ def test_select_best_big_group_vectorized_parity():
             )
 
 
-def test_grid_index_edges_match_dense_mask():
-    """Grid candidate pruning must yield EXACTLY the dense pairwise
-    mask's edge set (same thresholds/epsilon), on dense random boxes."""
+def test_grid_index_edges_match_sweep():
+    """Grid candidate pruning (pages past GRID_CUTOVER) must yield
+    EXACTLY the top-edge sweep's edge set (every smaller page), same
+    thresholds/epsilon, on dense random boxes."""
     import numpy as np
 
-    from high_performance_docling_spark.geometry import pairwise_overlap_mask
+    from high_performance_docling_spark.kernels.layout_postprocess import (
+        _overlap_edges_py,
+    )
     from high_performance_docling_spark.kernels.spatial_index import (
         overlap_edges_grid,
     )
@@ -341,17 +344,15 @@ def test_grid_index_edges_match_dense_mask():
         wh = rng.uniform(0.0, 40.0, (n, 2))
         boxes = np.concatenate([xy, xy + wh], axis=1)
         boxes[:7, 2] = boxes[:7, 0]  # degenerate zero-area boxes
+        clusters = [dict(zip("ltrb", b)) for b in boxes.tolist()]
         for eps in (0.0, 0.01):
-            dense = np.argwhere(
-                np.triu(pairwise_overlap_mask(boxes, 0.8, 0.8, eps), k=1)
-            )
+            sweep = _overlap_edges_py(clusters, 0.8 - eps, 0.8 - eps)
             grid = overlap_edges_grid(boxes, 0.8, 0.8, eps)
-            assert sorted(map(tuple, dense)) == sorted(map(tuple, grid)), (
-                trial, eps)
+            assert sweep == sorted(map(tuple, grid.tolist())), (trial, eps)
 
 
 def test_grid_path_handles_pathological_page():
-    """>10^4 clusters: the dense mask would be a 10^8-element matrix;
+    """>10^4 clusters: a dense pairwise matrix would hold 10^8 elements;
     the grid path must produce correct groups in reasonable time."""
     import time
 

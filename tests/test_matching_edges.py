@@ -5,7 +5,7 @@ banding with duplicate resolution, >300-cell bypass)."""
 from high_performance_docling_spark.kernels.table_match import (
     _deduplicate_columns,
     _find_alignment,
-    _good_bad_in_column,
+    _good_bad_by_column,
     _move_cells,
     _pick_orphans,
     matching_post_process,
@@ -29,7 +29,8 @@ def test_good_bad_repeats_per_match_occurrence():
         "5": [{"table_cell_id": 0, "iopdf": 1.0}],
         "6": [{"table_cell_id": 0, "iopdf": 0.9}],
     }
-    good, bad = _good_bad_in_column(cells, 0, matches)
+    goods, bads = _good_bad_by_column(cells, 1, matches)
+    good, bad = goods[0], bads[0]
     # cell 0 matched twice → appears twice (reference :84-114 semantics)
     assert [c["cell_id"] for c in good] == [0, 0]
     assert [c["cell_id"] for c in bad] == [1]
@@ -38,7 +39,8 @@ def test_good_bad_repeats_per_match_occurrence():
 def test_good_bad_empty_class_never_good():
     cells = [tcell(0, 0, 0, [0, 0, 10, 10], cls=0)]
     matches = {"5": [{"table_cell_id": 0, "iopdf": 1.0}]}
-    good, bad = _good_bad_in_column(cells, 0, matches)
+    goods, bads = _good_bad_by_column(cells, 1, matches)
+    good, bad = goods[0], bads[0]
     assert good == [] and [c["cell_id"] for c in bad] == [0]
 
 

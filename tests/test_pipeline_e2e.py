@@ -324,3 +324,28 @@ def test_checkpointed_build_runs_one_job_per_stage(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("checkpointed-build")) == 3
+
+
+def test_resumed_checkpointed_build_runs_two_jobs_per_stage(spark, tmp_path):
+    """Resuming over committed checkpoints runs two jobs per stage (the
+    done-keys read feeding the anti-join, and the append), with no job
+    to deduplicate the done keys, and still equals the oracle."""
+    cfg = GenConfig(seed=3, n_docs=8)
+    src = str(tmp_path / "docs")
+    docs_dataframe(spark, cfg, num_partitions=8).write.parquet(src)
+    docs = spark.read.parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+    extract_spans(spark, docs, cfg, checkpoint_dir=ckpt)
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpointed-resume", "resumed checkpointed build")
+    try:
+        out = extract_spans(spark, docs, cfg, checkpoint_dir=ckpt)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("checkpointed-resume")) == 6
+    got = _spans(out.collect())
+    inputs = _spans(docs.collect())
+    assert len(got) == cfg.n_docs
+    for doc_id, in_spans in inputs.items():
+        assert got[doc_id] == extract_doc_spans(doc_id, in_spans, cfg), doc_id
+

@@ -8,8 +8,10 @@ import os
 from high_performance_docling_spark.corpus import GenConfig, generate_doc
 from high_performance_docling_spark.oracle import extract_doc_spans
 from high_performance_docling_spark.testing.regression import (
+    KERNEL_GOLDEN_CORPORA,
     canonical_layout,
     canonical_table_cells,
+    kernel_golden_hashes,
     layout_matches,
     spans_hash,
 )
@@ -32,6 +34,18 @@ def test_spans_match_frozen_goldens():
              "media_ref": s["media_ref"], "order": s["order"]}
             for s in out
         ] == g["spans"], d["doc_id"]
+
+
+def test_kernel_outputs_match_frozen_hashes():
+    """Bit-exactness gate for kernel edits: the pickled oracle results
+    (spans + confidence) over the three KERNEL_GOLDEN_CORPORA hash to the
+    values frozen in goldens/kernel_hashes.json. `python bench_extra.py
+    golden` checks the same file."""
+    with open(os.path.join(os.path.dirname(__file__), "goldens",
+                           "kernel_hashes.json")) as f:
+        frozen = json.load(f)
+    assert len(frozen) == len(KERNEL_GOLDEN_CORPORA) == 3
+    assert kernel_golden_hashes() == frozen
 
 
 def test_enriched_profile_spans_match_goldens_all_modes(spark, tmp_path):

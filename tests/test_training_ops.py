@@ -154,7 +154,8 @@ def test_figure_crops_decode_to_the_rendered_bitmap(spark):
             pics = [e for e in page.elements if e.label == PICTURE]
             boxes = [[c["l"], c["t"], c["r"], c["b"]] for c in page.cells]
             img = render_page_bitmap(
-                page.width, page.height, boxes + [[e.l, e.t, e.r, e.b] for e in pics]
+                page.width, page.height, boxes,
+                pictures=[[e.l, e.t, e.r, e.b] for e in pics],
             )
             for e in pics:
                 key = (doc["doc_id"], page.page_no, e.l, e.t, e.r, e.b)
@@ -169,6 +170,9 @@ def test_figure_crops_decode_to_the_rendered_bitmap(spark):
         assert px.dtype == np.uint8 and np.array_equal(px, want[key]), key
         assert (f["crop_h"], f["crop_w"]) == want[key].shape
         assert f["crop_sha"] == hashlib.sha256(data).hexdigest()
+    # picture crops carry content, so the comparison above sees pixels
+    assert all(px.min() < px.max() for px in map(want.get, got)
+               if px.size > 1)
 
 
 def test_simhash_band_pairs_equals_all_pairs(spark, docs):
@@ -223,6 +227,14 @@ def test_image_ops_kernels():
 
     crop = crop_bitmap(img, [100, 100, 300, 200], RENDER_SCALE)
     assert crop.shape == (25, 50) and crop.min() == 255  # fully covered box
+
+    # a picture box is painted with its position's gray pattern
+    pic = render_page_bitmap(612.0, 792.0, [[100, 100, 300, 200]],
+                             pictures=[[100, 100, 300, 200]])
+    pcrop = crop_bitmap(pic, [100, 100, 300, 200], RENDER_SCALE)
+    ys, xs = np.mgrid[25:50, 25:75]
+    assert np.array_equal(pcrop, ((3 * xs + 5 * ys) % 256).astype(np.uint8))
+    assert pcrop.min() < pcrop.max()
 
     rois = crop_table_rois(img, 792.0, [[100, 100, 300, 200], [5, 5, 5, 5]])
     assert len(rois) == 1  # degenerate box skipped
