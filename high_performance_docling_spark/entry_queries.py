@@ -20,7 +20,6 @@ from pyspark.sql import Window as W
 
 from .operators import dedup as DD
 from .operators import text_analysis as TA
-from .operators.classifier import lr_iter_sql as _lr_iter_sql
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -72,50 +71,6 @@ def q_extract_spans_ocr_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s.media_ref").alias("media_ref"),
         F.col("s.order").alias("ord"),
     )
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payload column → batched feature
-    extraction (byte stats + frame sampling; codec decode stubbed behind
-    a NotImplementedError seam). The payload is sha256-hex bytes of the
-    text, so every feature is md5/sha-expressible in the DuckDB oracle."""
-    from .operators import multimodal as MM
-
-    docs = _t(spark, sf_dir, "documents")
-    return MM.decode_media_batch(MM.synth_media(docs)).orderBy("media_id")
-
-
-# Reproduces decode_media_batch byte-for-byte: payload = utf8 bytes of the
-# sha256 hex string (64 ascii chars); entropy folds distinct byte values in
-# ascending order on BOTH sides.
-ORACLE_MEDIA_FEATURES = """
-WITH m AS (
-  SELECT doc_id AS media_id,
-         CASE WHEN doc_id % 3 = 0 THEN 'image'
-              WHEN doc_id % 3 = 1 THEN 'audio'
-              ELSE 'video' END AS media_type,
-         sha256(text) AS hex,
-         CASE WHEN doc_id % 3 = 2 THEN (doc_id % 90 + 10)::INT ELSE 0 END AS n_frames
-  FROM documents
-),
-c AS (
-  SELECT media_id, media_type, n_frames,
-         list_transform(generate_series(1, 64),
-                        i -> ascii(substr(hex, i::INT, 1))) AS codes
-  FROM m
-)
-SELECT media_id, media_type,
-       64 AS n_bytes,
-       round(list_sum(codes) / 64.0, 6) AS byte_mean,
-       round(-list_sum(list_transform(list_sort(list_distinct(codes)),
-             u -> len(list_filter(codes, x -> x = u)) / 64.0
-                  * log2(len(list_filter(codes, x -> x = u)) / 64.0))), 6)
-         AS byte_entropy,
-       CASE WHEN media_type = 'video'
-            THEN array_to_string(generate_series(0, n_frames - 1, 10), ',')
-            ELSE '' END AS frame_indexes
-FROM c ORDER BY media_id
-"""
 
 
 # --------------------------------------------------------------------------
@@ -2104,135 +2059,6 @@ FROM keyed ORDER BY k_raw DESC, doc_id LIMIT 64
 """
 
 
-def q_logistic_quality(spark, sf_dir):
-    """Trained quality classifier (the fasttext-filter shape): logistic
-    regression fit by 8 full-batch GD iterations over exact centered
-    text features, served as a literal-weight zero-shuffle projection.
-    Each fit iteration is ONE 4-double aggregation; model state = 4
-    floats. The oracle replays the entire fit in unrolled SQL (the
-    kmeans/BPE replay pattern), so the hash match certifies every
-    gradient step, not just the serving pass. Labels are the
-    deterministic looks-like-prose heuristic the model distills
-    (accuracy 0.83 vs 0.62 majority floor at sf0.01)."""
-    from .operators import classifier as C
-
-    docs = _t(spark, sf_dir, "documents")
-    feats = C.lr_features(docs)
-    w = C.lr_fit(feats, n_iter=8)
-    return C.lr_score(feats, w).orderBy("doc_id")
-
-
-ORACLE_LOGISTIC_QUALITY = f"""
-WITH raw AS (
-  SELECT doc_id, text,
-         regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents
-),
-f AS (
-  SELECT doc_id,
-         1.0 AS x0,
-         (least(length(toks), 500) / 500.0 - 0.1) * 5.0 AS x1,
-         (length(list_filter(toks,
-                 x -> x IN ('the','and','of','to','a','in'))) / length(toks)
-          - 0.05) * 20.0 AS x2,
-         (length(text) / length(toks)) / 10.0 - 0.6 AS x3,
-         CASE WHEN length(list_filter(toks,
-                     x -> x IN ('the','and','of','to','a','in')))
-                   / length(toks) >= 0.05
-               AND length(toks) >= 50
-              THEN 1.0 ELSE 0.0 END AS y
-  FROM raw
-),
-{_lr_iter_sql(8)}
-SELECT doc_id,
-       y::INT AS label,
-       CASE WHEN round(w.a0*x0 + w.a1*x1 + w.a2*x2 + w.a3*x3, 9) >= 0
-            THEN 1 ELSE 0 END AS pred,
-       round(1.0/(1.0 + exp(-round(w.a0*x0 + w.a1*x1 + w.a2*x2 + w.a3*x3,
-                                   9))), 6) + 0.0 AS score
-FROM f CROSS JOIN w8 w
-ORDER BY doc_id
-"""
-
-
-BM25_TERMS = ["spark", "vector", "stream", "window", "merge"]
-
-
-def q_bm25_search(spark, sf_dir):
-    """BM25 ranked keyword retrieval (Okapi, Lucene's +1-floor idf):
-    top-25 documents for a 5-term query. The corpus-side work is one
-    explode+groupBy whose shuffle carries ONLY tokens matching the
-    query terms (filter fused into the scan stage); df and the corpus
-    stats (N, avgdl) are broadcast scalars; the top-25 is an
-    orderBy().limit() TakeOrderedAndProject, with the rank assigned by
-    the sort_array/posexplode idiom over the 25-row result (no
-    partition-less WindowExec). Per-term contributions are rounded to
-    9 before the <= 5-addend per-doc sum so summation order cannot
-    move the 6-decimal score."""
-    from .operators import retrieval as RETR
-
-    docs = _t(spark, sf_dir, "documents")
-    scored = RETR.bm25_scores(docs, BM25_TERMS)
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(25)
-    return (
-        top.groupBy()
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        (-F.col("score")).alias("neg"),
-                        F.col("doc_id"),
-                        F.col("n_terms_matched"),
-                    )
-                )
-            ).alias("arr")
-        )
-        .select(F.posexplode("arr").alias("pos", "r"))
-        .select(
-            (F.col("pos") + 1).alias("rk"),
-            F.col("r.doc_id").alias("doc_id"),
-            F.col("r.n_terms_matched").alias("n_terms_matched"),
-            (-F.col("r.neg") + F.lit(0.0)).alias("score"),
-        )
-        .orderBy("rk")
-    )
-
-
-ORACLE_BM25_SEARCH = r"""
-WITH d AS (
-  SELECT doc_id,
-         regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-  FROM documents
-),
-base AS (SELECT doc_id, unnest(toks) AS tok, len(toks) AS dl FROM d),
-stats AS (SELECT count(*) AS n_docs, avg(len(toks)) AS avgdl FROM d),
-tf AS (
-  SELECT doc_id, tok, count(*) AS tf, min(dl) AS dl
-  FROM base
-  WHERE tok IN ('spark', 'vector', 'stream', 'window', 'merge')
-  GROUP BY doc_id, tok
-),
-dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok),
-contrib AS (
-  SELECT doc_id,
-         round(
-           ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-           * tf * 2.2
-           / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)),
-         9) AS w
-  FROM tf JOIN dfreq USING (tok) CROSS JOIN stats
-)
-SELECT rk, doc_id, n_terms_matched, score FROM (
-  SELECT doc_id,
-         count(*) AS n_terms_matched,
-         round(sum(w), 6) + 0.0 AS score,
-         row_number() OVER (ORDER BY round(sum(w), 6) + 0.0 DESC,
-                            doc_id ASC) AS rk
-  FROM contrib GROUP BY doc_id
-) WHERE rk <= 25 ORDER BY rk
-"""
-
-
 _PROFILE_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
 
@@ -2633,7 +2459,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "url_domain_psl": q_url_domain_psl,
     "extract_spans_e2e": q_extract_spans_e2e,
     "extract_spans_ocr_e2e": q_extract_spans_ocr_e2e,
-    "media_features": q_media_features,
     "dedup_exact": q_dedup_exact,
     "token_count": q_token_count,
     "quality_score": q_quality_score,
@@ -2663,8 +2488,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "domain_balanced_sample": q_domain_balanced_sample,
     "bpe_train_merges": q_bpe_train_merges,
     "dedup_incremental": q_dedup_incremental,
-    "logistic_quality": q_logistic_quality,
-    "bm25_search": q_bm25_search,
     "profile_documents": q_profile_documents,
     "quality_tiers": q_quality_tiers,
     "pmi_collocations": q_pmi_collocations,
@@ -2674,7 +2497,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 ORACLES: dict[str, str] = {
-    "media_features": ORACLE_MEDIA_FEATURES,
     "export_markdown": ORACLE_EXPORT_MARKDOWN,
     "dedup_exact": ORACLE_DEDUP_EXACT,
     "token_count": ORACLE_TOKEN_COUNT,
@@ -2714,8 +2536,6 @@ ORACLES: dict[str, str] = {
     "dedup_incremental": ORACLE_DEDUP_INCREMENTAL,
     "segment_dedup": ORACLE_SEGMENT_DEDUP,
     "url_domain_stats": ORACLE_URL_DOMAIN_STATS,
-    "logistic_quality": ORACLE_LOGISTIC_QUALITY,
-    "bm25_search": ORACLE_BM25_SEARCH,
     "profile_documents": ORACLE_PROFILE_DOCUMENTS,
     "quality_tiers": ORACLE_QUALITY_TIERS,
     "pmi_collocations": ORACLE_PMI_COLLOCATIONS,

@@ -2,7 +2,7 @@
 sandbox).
 
 Implements the PNG subset the engine needs for real image bytes in the
-multimodal/figure paths: 8-bit greyscale (color type 0) and 8-bit RGB
+figure-crop sink (operators/figures.py): 8-bit greyscale (color type 0) and 8-bit RGB
 (color type 2), non-interlaced. The ENCODER emits filter 0 (None) per
 scanline with a fixed zlib level so output bytes are deterministic across
 runs and hosts; the DECODER implements all five PNG filter types

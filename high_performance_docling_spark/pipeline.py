@@ -30,6 +30,20 @@ from .operators.stages import (
 from .schemas import DOCS_SCHEMA
 
 
+def split_conf() -> dict[str, str]:
+    """Sandbox-scale file split sizing, applied by ``get_spark`` and by
+    jobs/extract_job.py. Corpora here are tens of MB, and the Python
+    stages are CPU-bound per row — the default 128m would read
+    everything as 1-2 splits and serialize the pipeline. A real 100 TB
+    table has thousands of row groups and keeps Spark's default, given
+    to the job with spark-submit ``--conf``."""
+    return {
+        "spark.sql.files.maxPartitionBytes":
+            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"),
+        "spark.sql.files.openCostInBytes": "262144",
+    }
+
+
 def get_spark(
     app: str = "hpd-spark",
     master: str | None = None,
@@ -45,15 +59,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # sandbox-scale split size: corpora here are tens of MB, and the
-        # Python stages are CPU-bound per row — default 128m would read
-        # everything as 1-2 splits and serialize the pipeline. A real
-        # 100 TB table has thousands of row groups and uses the default.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"),
-        )
-        .config("spark.sql.files.openCostInBytes", "262144")
+        .config(map=split_conf())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
     )
@@ -150,7 +156,7 @@ def extract_spans(
     # Parallelism guard: if the input still arrives with fewer splits than
     # cores (tiny corpus or in-memory DF), fan out once. The shuffle is
     # not free (the spans payload moves), so the primary lever is the
-    # small files.maxPartitionBytes set in get_spark; this is the backstop.
+    # small files.maxPartitionBytes of split_conf; this is the backstop.
     # Partition count comes from (in order): the caller's hint, the file
     # split count, and only as a last resort the RDD-conversion probe
     # (df.rdd builds a conversion plan per call — avoid it when possible).

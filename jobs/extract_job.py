@@ -56,11 +56,20 @@ def main() -> None:
     from high_performance_docling_spark.pipeline import (
         docs_dataframe,
         extract_spans,
+        split_conf,
     )
 
     # On a cluster, master/memory come from spark-submit; locally default.
     spark = SparkSession.builder.appName("hpd-extract").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # the split sizing get_spark uses, unless spark-submit --conf set it
+    submitted = spark.sparkContext.getConf()
+    splits = split_conf()
+    for key, value in splits.items():
+        if not submitted.contains(key):
+            spark.conf.set(key, value)
+    print("split sizing: " + " ".join(
+        f"{key}={spark.conf.get(key)}" for key in splits))
 
     cfg = GenConfig(seed=args.seed, n_docs=max(args.synthesize, 1))
     if args.synthesize:

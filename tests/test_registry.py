@@ -2,10 +2,12 @@
 only the `documents` table, every oracle parses in DuckDB against that
 table's schema, the rows-only set is exactly the documented pair of
 e2e extraction entries (whose gate is the pytest span-equality suite,
-not SQL), and every package module is imported from a non-test entry
-point."""
+not SQL), every package module is imported from a non-test entry
+point, and the extraction path imports none of the curation code."""
 
 import ast
+import subprocess
+import sys
 from pathlib import Path
 
 import duckdb
@@ -36,12 +38,11 @@ def test_all_oracles_parse_in_duckdb():
 
 
 # Queries whose construction legitimately runs Spark jobs: model fitting
-# (lr_fit, the BPE merge rounds) and driver-side iterative fixpoints
+# (the BPE merge rounds) and driver-side iterative fixpoints
 # (connected components). Everything else must build lazily — no
 # .first()/.collect() hidden in plan construction (VERDICT r2 #7).
 CONSTRUCTION_RUNS_JOBS = {"dedup_components", "dedup_components_star",
-                          "dedup_representatives", "bpe_train_merges",
-                          "logistic_quality"}
+                          "dedup_representatives", "bpe_train_merges"}
 
 
 def test_registry_construction_runs_no_jobs(spark):
@@ -124,3 +125,27 @@ def test_every_package_module_is_reachable_from_a_non_test_root():
                     seen.add(m)
                     todo.append((mods[m], m))
     assert sorted(set(mods) - seen) == []
+
+
+CURATION_MODULES = ["entry_queries"] + [
+    f"operators.{m}" for m in ("dedup", "text_analysis", "lm_score",
+                               "pretrain", "chunking", "cleaning",
+                               "url_ops", "profiling", "winnow")
+]
+
+
+def test_extraction_path_imports_no_curation_module():
+    """What a Python worker loads for extraction (pipeline, oracle and
+    the stage functions) stays clear of the registry and its curation
+    operators, checked in a fresh interpreter."""
+    probe = (
+        "import sys\n"
+        f"import {PKG}.pipeline, {PKG}.oracle, {PKG}.operators.stages\n"
+        f"print(' '.join(m for m in sys.modules if m.startswith('{PKG}')))"
+    )
+    r = subprocess.run([sys.executable, "-c", probe], cwd=REPO,
+                       capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr[-2000:]
+    loaded = set(r.stdout.split())
+    assert f"{PKG}.operators.stages" in loaded
+    assert sorted(loaded & {f"{PKG}.{m}" for m in CURATION_MODULES}) == []

@@ -1,13 +1,11 @@
 """Training-data pipeline operators: dedup, text analysis, cleaning and
-chunking; multimodal plumbing, the image kernels and the figure-crop
-sink."""
+chunking; the image kernels and the figure-crop sink."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from high_performance_docling_spark.operators import (
     dedup as DD,
-    multimodal as MM,
     text_analysis as TA,
 )
 
@@ -78,55 +76,13 @@ def test_fingerprints_order_sensitive(spark):
     assert out[1] != out[2]
 
 
-def test_multimodal_plumbing(spark, docs):
-    media = MM.synth_media(docs.limit(30))
-    feats = MM.decode_media_batch(media).collect()
-    assert len(feats) == 30
-    for r in feats:
-        assert r["n_bytes"] == 64  # sha256 hex → 64 bytes
-        assert 0.0 <= r["byte_entropy"] <= 8.0
-        if r["media_type"] == "video":
-            assert r["frame_indexes"].startswith("0")  # comma-joined string
-        else:
-            assert r["frame_indexes"] == ""
-    refs = MM.content_address(media).collect()
-    assert all(r["media_ref"].startswith("img:") for r in refs)
-    # deterministic across runs
-    feats2 = MM.decode_media_batch(MM.synth_media(docs.limit(30))).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, feats2))
-
-
-def test_multimodal_real_codecs_decode_png_and_guard_the_rest(spark, docs):
-    """real_codecs=True decodes an ACTUAL PNG payload and computes pixel
-    statistics (expectations recomputed in NumPy); audio and video
-    payloads surface the NotImplementedError seam executor-side."""
-    import numpy as np
-
-    from high_performance_docling_spark.kernels.png_codec import encode_png
-
-    yy, xx = np.mgrid[0:21, 0:34]
-    img = ((xx * 3 + yy * 7 + 5) % 251).astype(np.uint8)
-    payload = encode_png(img)
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(payload), {"n_frames": 0})],
-        "media_id long, media_type string, payload binary, meta map<string,int>",
-    )
-    row = MM.decode_media_batch(df, real_codecs=True).collect()[0]
-    # features are over decoded PIXELS, not compressed bytes
-    assert row["n_bytes"] == 21 * 34 != len(payload)
-    assert abs(row["byte_mean"] - round(float(img.mean()), 6)) < 1e-9
-    for mtype in ("audio", "video"):
-        media = MM.synth_media(docs.limit(30)).filter(f"media_type = '{mtype}'")
-        with pytest.raises(Exception, match="NotImplementedError"):
-            MM.decode_media_batch(media, real_codecs=True).collect()
-
-
 def test_figure_crops_decode_to_the_rendered_bitmap(spark):
     """Every figure crop decodes to exactly the pixels of its box in the
     rendered page, recomputed on the driver from ``typeset``: the PNG
     bytes the sink stores lose nothing between the executor's bitmap and
-    the output row. (The bitmap stand-in paints each picture box solid,
-    so this pins geometry and the codec round trip, not image content.)"""
+    the output row. The bitmap stand-in paints each picture box with a
+    position-dependent gray gradient, so the comparison sees image
+    content as well as geometry and the codec round trip."""
     import hashlib
 
     import numpy as np
