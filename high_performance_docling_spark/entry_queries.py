@@ -562,91 +562,6 @@ ORDER BY g.doc_id
 """
 
 
-def q_chunk_documents(spark, sf_dir):
-    """LLM pretraining chunking: 128-token windows, 32-token overlap —
-    pure array ops, one narrow pass (operators/chunking.py)."""
-    from .operators.chunking import chunk_documents
-
-    return chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_size=128, overlap=32
-    ).orderBy("doc_id", "chunk_id")
-
-
-ORACLE_CHUNK_DOCUMENTS = r"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n
-  FROM documents
-),
-e AS (
-  SELECT doc_id, toks,
-         unnest(generate_series(0,
-           ceil(greatest(n - 32, 1) / 96.0)::INT - 1)) AS chunk_id
-  FROM t WHERE n > 0
-)
-SELECT doc_id, chunk_id,
-       array_to_string(toks[chunk_id * 96 + 1 : chunk_id * 96 + 128], ' ')
-         AS chunk_text,
-       len(toks[chunk_id * 96 + 1 : chunk_id * 96 + 128]) AS n_tokens
-FROM e ORDER BY doc_id, chunk_id
-"""
-
-
-def q_pack_chunks(spark, sf_dir):
-    """Sample packing: chunks → 256-token bins by running-cumsum shelf
-    packing; per-bin stats (fill ratio shows the waste bound)."""
-    from .operators.chunking import chunk_documents, pack_chunks
-
-    chunks = chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_size=128, overlap=32
-    )
-    packed = pack_chunks(chunks, capacity=256)
-    return (
-        packed.groupBy("bin_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.round(F.sum("n_tokens") / 256.0, 4).alias("fill_ratio"),
-        )
-        .orderBy("bin_id")
-    )
-
-
-ORACLE_PACK_CHUNKS = r"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n
-  FROM documents
-),
-e AS (
-  SELECT doc_id, toks,
-         unnest(generate_series(0,
-           ceil(greatest(n - 32, 1) / 96.0)::INT - 1)) AS chunk_id
-  FROM t WHERE n > 0
-),
-c AS (
-  SELECT doc_id, chunk_id,
-         ('0x' || substr(md5(doc_id::VARCHAR), 1, 4))::BIGINT % 32 AS bucket,
-         len(toks[chunk_id * 96 + 1 : chunk_id * 96 + 128]) AS n_tokens
-  FROM e
-),
-b AS (
-  -- one global window in the (bucket, doc_id, chunk_id) order is
-  -- value-identical to the Spark side's two-phase distributed prefix
-  -- sum (per-bucket local cumsum + broadcast bucket offsets)
-  SELECT *,
-         (floor((sum(n_tokens) OVER (ORDER BY bucket, doc_id, chunk_id
-             ROWS UNBOUNDED PRECEDING) - n_tokens) / 256.0))::BIGINT AS bin_id
-  FROM c
-)
-SELECT bin_id, count(*) AS n_chunks, sum(n_tokens)::BIGINT AS total_tokens,
-       round(sum(n_tokens) / 256.0, 4) AS fill_ratio
-FROM b GROUP BY bin_id ORDER BY bin_id
-"""
-
-
 def q_token_profile(spark, sf_dir):
     return TA.token_counts(_t(spark, sf_dir, "documents")).orderBy("doc_id")
 
@@ -872,142 +787,6 @@ ORDER BY doc_id, ord
 """
 
 
-def q_scrub_pii(spark, sf_dir):
-    """PII redaction (pretraining corpus hygiene): plant a deterministic
-    email / IPv4 / phone-style digit run per document JVM-side, then
-    scrub with the shared Java∩RE2 regex chain; the oracle replays the
-    same plant + regexp_replace(…, 'g') in DuckDB. Pure projection —
-    zero shuffle at any scale."""
-    from .operators.cleaning import scrub_pii
-
-    docs = _t(spark, sf_dir, "documents")
-    sid = F.col("doc_id").cast("string")
-    planted = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"), sid, F.lit("@example.com via 10.0."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".5 tel 415-555-0"), F.lpad((F.col("doc_id") % 100).cast("string"), 3, "0"),
-        ).alias("text"),
-    )
-    return (
-        scrub_pii(planted)
-        .select("doc_id", F.col("clean_text"))
-        .orderBy("doc_id")
-    )
-
-
-ORACLE_SCRUB_PII = r"""
-WITH planted AS (
-  SELECT doc_id,
-         text || ' contact user' || doc_id || '@example.com via 10.0.'
-              || (doc_id % 256) || '.5 tel 415-555-0'
-              || lpad((doc_id % 100)::VARCHAR, 3, '0') AS text
-  FROM documents
-)
-SELECT doc_id,
-       regexp_replace(
-         regexp_replace(
-           regexp_replace(text,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-           '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-         '\b\d[\d().-]{7,}\d\b', '<PHONE>', 'g') AS clean_text
-FROM planted ORDER BY doc_id
-"""
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sampling — the data-mixing primitive a
-    pretraining pipeline uses to hit per-source token budgets. Each doc
-    draws a portable uniform u ∈ [0,1) from md5(doc_id) (exact: a 32-bit
-    integer over 2^32 is exactly representable, so the keep decision is
-    byte-identical across engines and stable under appends); the keep
-    rate depends on the source stratum (even sources kept at 0.8, odd at
-    0.25 — a stand-in for a quality-tiered mixing table). Scale shape:
-    pure projection + one hash aggregation; no shuffle of the corpus."""
-    docs = _t(spark, sf_dir, "documents")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("double")
-        / F.lit(float(1 << 32))
-    )
-    src_num = F.regexp_replace("source", "[^0-9]", "").cast("int")
-    rate = F.when(src_num % 2 == 0, F.lit(0.8)).otherwise(F.lit(0.25))
-    per_doc = docs.select(
-        "source",
-        (u < rate).cast("int").alias("kept"),
-    )
-    return (
-        per_doc.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum("kept").alias("kept"),
-        )
-        .withColumn(
-            "rate",
-            F.when(
-                F.regexp_replace("source", "[^0-9]", "").cast("int") % 2 == 0,
-                F.lit(0.8),
-            ).otherwise(F.lit(0.25)),
-        )
-        .orderBy("source")
-    )
-
-
-def q_length_quantiles(spark, sf_dir):
-    """Per-language document-length distribution (the profiling pass a
-    corpus-curation pipeline runs before setting length filters): exact
-    p50/p90/p99 of n_chars plus counts. Exact `percentile` (interpolated,
-    matching DuckDB quantile_cont bit-for-bit after rounding) keeps the
-    query oracle-able; the 100 TB path swaps in percentile_approx
-    (t-digest sketch, single pass, mergeable) at the cost of the exact
-    gate — grouping stays one hash aggregation either way."""
-    docs = _t(spark, sf_dir, "documents")
-    q = F.expr("percentile(n_chars, array(0.5, 0.9, 0.99))")
-    return (
-        docs.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(q[0], 4).alias("p50"),
-            F.round(q[1], 4).alias("p90"),
-            F.round(q[2], 4).alias("p99"),
-        )
-        .orderBy("lang")
-    )
-
-
-ORACLE_LENGTH_QUANTILES = """
-SELECT lang, count(*) AS n_docs,
-       round(quantile_cont(n_chars, 0.5), 4) AS p50,
-       round(quantile_cont(n_chars, 0.9), 4) AS p90,
-       round(quantile_cont(n_chars, 0.99), 4) AS p99
-FROM documents GROUP BY lang ORDER BY lang
-"""
-
-
-ORACLE_STRATIFIED_SAMPLE = """
-WITH per_doc AS (
-  SELECT source,
-         CASE WHEN ('0x' || substr(md5('strat:' || doc_id), 1, 8))::BIGINT
-                   / 4294967296.0
-              < CASE WHEN regexp_replace(source, '[^0-9]', '', 'g')::INT % 2 = 0
-                     THEN 0.8 ELSE 0.25 END
-              THEN 1 ELSE 0 END AS kept
-  FROM documents
-)
-SELECT source, count(*) AS total, sum(kept)::BIGINT AS kept,
-       CASE WHEN regexp_replace(source, '[^0-9]', '', 'g')::INT % 2 = 0
-            THEN 0.8 ELSE 0.25 END AS rate
-FROM per_doc GROUP BY source ORDER BY source
-"""
-
-
 def q_latexize_formulas(spark, sf_dir):
     """Formula enrichment through the REAL batched enrichment stage
     (kernels/enrichment.py): per document, a math-ish formula string is
@@ -1075,59 +854,6 @@ f AS (
 )
 SELECT doc_id, formula, {_latex_chain_sql('formula')} AS latex
 FROM f ORDER BY doc_id
-"""
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark n-gram decontamination (the public GPT-3/FLAN recipe: a
-    document sharing ANY 13-gram with the eval set is dropped). The
-    'benchmark' is the 20-token prefix of every 50th document, so
-    contamination exists by construction. Scale shape: the benchmark
-    shingle set is tiny → broadcast hash join against the corpus shingle
-    explode; the corpus side never shuffles."""
-    from .operators.cleaning import decontaminate
-
-    docs = _t(spark, sf_dir, "documents")
-    ltoks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    bench = docs.filter(F.col("doc_id") % 50 == 0).select(
-        "doc_id", F.concat_ws(" ", F.slice(ltoks, 1, 20)).alias("text")
-    )
-    return decontaminate(docs, bench, n=13).orderBy("doc_id")
-
-
-ORACLE_DECONTAMINATE = r"""
-WITH toks_t AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-  FROM documents
-),
-dsh AS (
-  SELECT DISTINCT doc_id, sh FROM (
-    SELECT doc_id,
-           unnest(CASE WHEN len(toks) >= 13
-                  THEN list_transform(range(1, len(toks) - 11),
-                         i -> array_to_string(toks[i:i+12], ' '))
-                  ELSE [array_to_string(toks, ' ')] END) AS sh
-    FROM toks_t)
-),
-bt AS (
-  SELECT doc_id, toks[1:20] AS toks FROM toks_t WHERE doc_id % 50 = 0
-),
-bsh AS (
-  SELECT DISTINCT sh FROM (
-    SELECT unnest(CASE WHEN len(toks) >= 13
-                  THEN list_transform(range(1, len(toks) - 11),
-                         i -> array_to_string(toks[i:i+12], ' '))
-                  ELSE [array_to_string(toks, ' ')] END) AS sh
-    FROM bt)
-),
-hits AS (
-  SELECT doc_id, count(*) AS n_hits FROM dsh JOIN bsh USING (sh)
-  GROUP BY doc_id
-)
-SELECT t.doc_id, coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-       (coalesce(h.n_hits, 0) > 0)::INT AS contaminated
-FROM toks_t t LEFT JOIN hits h USING (doc_id)
-ORDER BY t.doc_id
 """
 
 
@@ -1265,39 +991,6 @@ SELECT component, keep_id, n_members, keep_quality FROM (
 ) WHERE rk = 1 ORDER BY component
 """
 )
-
-
-def q_train_val_split(spark, sf_dir):
-    """Deterministic corpus split (the train/val/test assignment every
-    pretraining run needs, reproducible across engines and reruns):
-    bucket = portable md5(doc_id) % 100 → 98/1/1 split. Pure projection,
-    zero shuffle; the split is a FUNCTION of the id, so adding data
-    never reshuffles old assignments."""
-    from .operators.chunking import bucket_of
-
-    docs = _t(spark, sf_dir, "documents")
-    b = bucket_of(F.col("doc_id"), 100)
-    split = (
-        F.when(b < 98, "train").when(b < 99, "val").otherwise("test")
-    )
-    return docs.select(
-        "doc_id",
-        b.cast("long").alias("bucket"),  # BIGINT like the oracle's %
-        split.alias("split"),
-    ).orderBy("doc_id")
-
-
-ORACLE_TRAIN_VAL_SPLIT = """
-WITH b AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(doc_id::VARCHAR), 1, 4))::BIGINT % 100 AS bucket
-  FROM documents
-)
-SELECT doc_id, bucket,
-       CASE WHEN bucket < 98 THEN 'train'
-            WHEN bucket < 99 THEN 'val' ELSE 'test' END AS split
-FROM b ORDER BY doc_id
-"""
 
 
 def q_dedup_substring_spans(spark, sf_dir):
@@ -1633,140 +1326,6 @@ SELECT u.host, d.public_suffix, d.domain, count(*)::BIGINT AS n_docs
 FROM u JOIN dom d USING (host)
 GROUP BY u.host, d.public_suffix, d.domain
 ORDER BY u.host
-"""
-
-
-def q_decontaminate_bloom(spark, sf_dir):
-    """Bloom-prefiltered decontamination — the memory-bounded scale path
-    for `decontaminate` (same GPT-3/FLAN 13-gram rule, same synthesized
-    benchmark). The broadcast is the filter's occupied bit positions
-    (longs, ≤ n_bits rows) instead of shingle strings; corpus shingles
-    pass n_hashes chained broadcast joins (Bloom membership as
-    relational algebra — no false negatives), survivors are
-    exact-confirmed, and per-doc false-positive counts make the
-    (n_bits, n_hashes) trade-off measurable. n_bits is set SMALL (4096)
-    here so false positives actually occur at test scale and the
-    accounting is exercised; a production filter sizes n_bits to the
-    eval-suite shingle count. Deterministic md5 positions → the oracle
-    replays the identical filter."""
-    from .operators.cleaning import decontaminate_bloom
-
-    docs = _t(spark, sf_dir, "documents")
-    ltoks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    bench = docs.filter(F.col("doc_id") % 50 == 0).select(
-        "doc_id", F.concat_ws(" ", F.slice(ltoks, 1, 20)).alias("text")
-    )
-    return decontaminate_bloom(
-        docs, bench, n=13, n_hashes=3, n_bits=4096
-    ).orderBy("doc_id")
-
-
-ORACLE_DECONTAMINATE_BLOOM = r"""
-WITH toks_t AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-  FROM documents
-),
-dsh AS (
-  SELECT DISTINCT doc_id, sh FROM (
-    SELECT doc_id,
-           unnest(CASE WHEN len(toks) >= 13
-                  THEN list_transform(range(1, len(toks) - 11),
-                         i -> array_to_string(toks[i:i+12], ' '))
-                  ELSE [array_to_string(toks, ' ')] END) AS sh
-    FROM toks_t)
-),
-bt AS (
-  SELECT doc_id, toks[1:20] AS toks FROM toks_t WHERE doc_id % 50 = 0
-),
-bsh AS (
-  SELECT DISTINCT sh FROM (
-    SELECT unnest(CASE WHEN len(toks) >= 13
-                  THEN list_transform(range(1, len(toks) - 11),
-                         i -> array_to_string(toks[i:i+12], ' '))
-                  ELSE [array_to_string(toks, ' ')] END) AS sh
-    FROM bt)
-),
-seeds AS (SELECT unnest(range(0, 3)) AS i),
-pos AS (
-  SELECT DISTINCT
-         ('0x' || substr(md5(i::VARCHAR || ':' || sh), 1, 14))::BIGINT
-           % 4096 AS p
-  FROM bsh CROSS JOIN seeds
-),
-cand AS (
-  SELECT doc_id, sh,
-         sum(CASE WHEN ('0x' || substr(md5(i::VARCHAR || ':' || sh), 1, 14))
-                       ::BIGINT % 4096 IN (SELECT p FROM pos)
-                  THEN 1 ELSE 0 END) AS nin
-  FROM dsh CROSS JOIN seeds GROUP BY doc_id, sh
-),
-surv AS (SELECT doc_id, sh FROM cand WHERE nin = 3),
-bl AS (SELECT doc_id, count(*) AS nb FROM surv GROUP BY doc_id),
-ex AS (
-  SELECT doc_id, count(*) AS ne FROM surv JOIN bsh USING (sh)
-  GROUP BY doc_id
-)
-SELECT t.doc_id,
-       coalesce(nb, 0)::BIGINT AS n_bloom_hits,
-       coalesce(ne, 0)::BIGINT AS n_exact_hits,
-       (coalesce(nb, 0) - coalesce(ne, 0))::BIGINT AS n_false_pos,
-       (coalesce(ne, 0) > 0)::INT AS contaminated
-FROM toks_t t LEFT JOIN bl USING (doc_id) LEFT JOIN ex USING (doc_id)
-ORDER BY t.doc_id
-"""
-
-
-def q_sample_weighted(spark, sf_dir):
-    """Weighted sampling without replacement via Efraimidis–Spirakis
-    (IPL 2006): each row draws u ~ U(0,1] and the k rows with the
-    largest u^(1/w) win — equivalently (log-space, monotone) the
-    largest ln(u)/w. The canonical training-data mixture sampler:
-    upweight long/high-quality docs without a global shuffle or a
-    driver-side pass. u derives from a 52-bit md5 hash (exact in
-    double), so the sample — not just its distribution — is
-    deterministic and byte-identical across engines and re-runs
-    (append-stable, like the md5 train/val/test split).
-
-    Scale shape: one pure projection + orderBy(limit k) →
-    TakeOrderedAndProject (per-partition top-k heaps, k rows to the
-    driver — no global sort materialization; pinned in test_plans)."""
-    k = 100
-    docs = _t(spark, sf_dir, "documents")
-    w = F.greatest(F.length("text"), F.lit(1)).cast("double")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ws:"), F.col("doc_id").cast("string"))), 1, 13
-        ),
-        16, 10,
-    ).cast("double")
-    u = (h + F.lit(1.0)) / F.lit(float(1 << 52))
-    out = docs.select(
-        "doc_id",
-        w.cast("bigint").alias("weight"),
-        (F.log(u) / w).alias("k_raw"),
-    )
-    return (
-        out.orderBy(F.col("k_raw").desc(), "doc_id").limit(k)
-        # + 0.0 normalizes IEEE -0.0 (keys this close to 0 round to it)
-        .select(
-            "doc_id", "weight",
-            (F.round("k_raw", 6) + F.lit(0.0)).alias("es_key"),
-        )
-        .orderBy(F.col("es_key").desc(), "doc_id")
-    )
-
-
-ORACLE_SAMPLE_WEIGHTED = """
-WITH s AS (
-  SELECT doc_id,
-         greatest(length(text), 1)::BIGINT AS weight,
-         ln((('0x' || substr(md5('ws:' || doc_id), 1, 13))::BIGINT + 1)
-            / 4503599627370496.0)
-           / greatest(length(text), 1)::DOUBLE AS k_raw
-  FROM documents
-)
-SELECT doc_id, weight, round(k_raw, 6) + 0.0 AS es_key
-FROM s ORDER BY k_raw DESC, doc_id LIMIT 100
 """
 
 
@@ -2326,69 +1885,6 @@ GROUP BY doc_id ORDER BY doc_id
 """
 
 
-def q_snapshot_diff(spark, sf_dir):
-    """Corpus snapshot diff (the CDC view an incremental pipeline
-    consumes): two deterministic snapshots derived from the documents
-    table (old = ids not % 10, new = ids not % 7, with every % 5 doc
-    revised), diffed by a full-outer join on the key with md5 content
-    comparison -> added / removed / changed. Content hashes, not
-    timestamps, decide 'changed' — the replay-safe convention."""
-    docs = _t(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") % 10 != 0).select(
-        "doc_id", F.md5(F.col("text")).alias("old_md5")
-    )
-    new = docs.filter(F.col("doc_id") % 7 != 0).select(
-        "doc_id",
-        F.md5(
-            F.when(
-                F.col("doc_id") % 5 == 0,
-                F.concat(F.col("text"), F.lit(" [rev2]")),
-            ).otherwise(F.col("text"))
-        ).alias("new_md5"),
-    )
-    j = old.join(new, "doc_id", "full_outer")
-    status = (
-        F.when(F.col("old_md5").isNull(), F.lit("added"))
-        .when(F.col("new_md5").isNull(), F.lit("removed"))
-        .when(F.col("old_md5") != F.col("new_md5"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return (
-        j.withColumn("status", status)
-        .filter(F.col("status") != "unchanged")
-        .select("doc_id", "status")
-        .orderBy("doc_id")
-    )
-
-
-ORACLE_SNAPSHOT_DIFF = """
-WITH old AS (
-  SELECT doc_id, md5(text) AS old_md5 FROM documents WHERE doc_id % 10 != 0
-),
-new AS (
-  SELECT doc_id,
-         md5(CASE WHEN doc_id % 5 = 0 THEN text || ' [rev2]'
-                  ELSE text END) AS new_md5
-  FROM documents WHERE doc_id % 7 != 0
-),
-j AS (
-  SELECT coalesce(old.doc_id, new.doc_id) AS doc_id, old_md5, new_md5
-  FROM old FULL OUTER JOIN new ON old.doc_id = new.doc_id
-)
-SELECT doc_id,
-       CASE WHEN old_md5 IS NULL THEN 'added'
-            WHEN new_md5 IS NULL THEN 'removed'
-            WHEN old_md5 != new_md5 THEN 'changed'
-            ELSE 'unchanged' END AS status
-FROM j
-WHERE (CASE WHEN old_md5 IS NULL THEN 'added'
-            WHEN new_md5 IS NULL THEN 'removed'
-            WHEN old_md5 != new_md5 THEN 'changed'
-            ELSE 'unchanged' END) != 'unchanged'
-ORDER BY doc_id
-"""
-
-
 def q_winnow_pairs(spark, sf_dir):
     """Winnowing fingerprint dedup (Schleimer et al. 2003, the MOSS
     scheme — the guaranteed-detection member of the dedup family):
@@ -2447,15 +1943,11 @@ ORDER BY a, b
 # Dict order is the iteration order of queries(): a correctness harness
 # that checks only the first 50 entries still sees the two e2e entries.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "train_val_split": q_train_val_split,
     "dedup_substring_spans": q_dedup_substring_spans,
     "latexize_formulas": q_latexize_formulas,
-    "stratified_sample": q_stratified_sample,
-    "length_quantiles": q_length_quantiles,
     "perplexity_score": q_perplexity_score,
     "segment_dedup": q_segment_dedup,
     "url_domain_stats": q_url_domain_stats,
-    "decontaminate_bloom": q_decontaminate_bloom,
     "url_domain_psl": q_url_domain_psl,
     "extract_spans_e2e": q_extract_spans_e2e,
     "extract_spans_ocr_e2e": q_extract_spans_ocr_e2e,
@@ -2473,18 +1965,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bpe_token_profile": q_bpe_token_profile,
     "gopher_quality": q_gopher_quality,
     "repetition_scores": q_repetition_scores,
-    "chunk_documents": q_chunk_documents,
-    "pack_chunks": q_pack_chunks,
     "export_markdown": q_export_markdown,
     "detect_format": q_detect_format,
     "extract_html_spans": q_extract_html_spans,
-    "scrub_pii": q_scrub_pii,
-    "decontaminate": q_decontaminate,
     "dedup_components": q_dedup_components,
     "dedup_components_star": q_dedup_components_star,
     "dedup_representatives": q_dedup_representatives,
     "tfidf_keywords": q_tfidf_keywords,
-    "sample_weighted": q_sample_weighted,
     "domain_balanced_sample": q_domain_balanced_sample,
     "bpe_train_merges": q_bpe_train_merges,
     "dedup_incremental": q_dedup_incremental,
@@ -2492,7 +1979,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "quality_tiers": q_quality_tiers,
     "pmi_collocations": q_pmi_collocations,
     "char_entropy": q_char_entropy,
-    "snapshot_diff": q_snapshot_diff,
     "winnow_pairs": q_winnow_pairs,
 }
 
@@ -2512,25 +1998,16 @@ ORACLES: dict[str, str] = {
     "bpe_token_profile": ORACLE_BPE_TOKEN_PROFILE,
     "gopher_quality": ORACLE_GOPHER_QUALITY,
     "repetition_scores": ORACLE_REPETITION_SCORES,
-    "chunk_documents": ORACLE_CHUNK_DOCUMENTS,
-    "pack_chunks": ORACLE_PACK_CHUNKS,
     "detect_format": ORACLE_DETECT_FORMAT,
     "extract_html_spans": ORACLE_EXTRACT_HTML_SPANS,
-    "scrub_pii": ORACLE_SCRUB_PII,
-    "decontaminate": ORACLE_DECONTAMINATE,
     "dedup_components": ORACLE_DEDUP_COMPONENTS,
     "dedup_components_star": ORACLE_DEDUP_COMPONENTS,
     "dedup_representatives": ORACLE_DEDUP_REPRESENTATIVES,
     "tfidf_keywords": ORACLE_TFIDF_KEYWORDS,
-    "train_val_split": ORACLE_TRAIN_VAL_SPLIT,
     "dedup_substring_spans": ORACLE_DEDUP_SUBSTRING_SPANS,
     "latexize_formulas": ORACLE_LATEXIZE_FORMULAS,
-    "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
-    "length_quantiles": ORACLE_LENGTH_QUANTILES,
     "perplexity_score": ORACLE_PERPLEXITY_SCORE,
-    "decontaminate_bloom": ORACLE_DECONTAMINATE_BLOOM,
     "url_domain_psl": ORACLE_URL_DOMAIN_PSL,
-    "sample_weighted": ORACLE_SAMPLE_WEIGHTED,
     "domain_balanced_sample": ORACLE_DOMAIN_BALANCED_SAMPLE,
     "bpe_train_merges": ORACLE_BPE_TRAIN_MERGES,
     "dedup_incremental": ORACLE_DEDUP_INCREMENTAL,
@@ -2540,7 +2017,6 @@ ORACLES: dict[str, str] = {
     "quality_tiers": ORACLE_QUALITY_TIERS,
     "pmi_collocations": ORACLE_PMI_COLLOCATIONS,
     "char_entropy": ORACLE_CHAR_ENTROPY,
-    "snapshot_diff": ORACLE_SNAPSHOT_DIFF,
     "winnow_pairs": ORACLE_WINNOW_PAIRS,
 }
 

@@ -6,7 +6,6 @@ every hash is computed from md5 (portable across engines so DuckDB can
 oracle the exact values).
 
 Operators:
-  - exact_duplicates: hash-groupBy on normalized text.
   - shingle / minhash_signatures / lsh_candidate_pairs: MinHash+LSH
     near-dup (shingle → k hash functions → min per function → band →
     bucket join).
@@ -37,15 +36,6 @@ def _h56(col, seed: int):
 
 def tokens(df: DataFrame, text_col: str = "text"):
     return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-
-
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    norm = F.md5(F.lower(F.trim(F.col(text_col))))
-    return (
-        df.select(norm.alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
 
 
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:

@@ -23,8 +23,8 @@ one avg aggregation. Nothing is collected to the driver.
 
 Reference role: the reference pipeline has no LM filter (it is an
 extraction engine); this operator extends the engine toward the
-training-data-curation surface the task brief names, alongside
-operators/cleaning.py (Gopher rules, PII, decontamination).
+training-data-curation surface, alongside the Gopher rules in
+operators/text_analysis.py.
 
 Float discipline: log-probabilities are summed as doubles and ROUNDed
 (6 dp) before leaving the operator, and the perplexity is derived from
@@ -145,20 +145,3 @@ def score_documents(
         .withColumn("ppl", F.round(F.exp(-F.col("avg_logp")), 4))
     )
 
-
-def perplexity_filter(
-    df: DataFrame,
-    max_ppl: float,
-    lm: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """CCNet head-selection: keep documents whose perplexity under the LM
-    is at most ``max_ppl``. Returns ``df``'s full rows plus the score
-    columns (join on id — one shuffle, or none when ``df`` is already
-    hash-partitioned on the id)."""
-    scores = score_documents(df, lm, id_col, text_col)
-    return (
-        df.join(scores.withColumnRenamed("doc_id", id_col), id_col)
-        .filter(F.col("ppl") <= max_ppl)
-    )

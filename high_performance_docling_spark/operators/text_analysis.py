@@ -38,26 +38,6 @@ def language_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def quality_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Heuristic quality features: token count, mean token length,
-    stopword ratio, alpha ratio, plus a composite score."""
-    toks = _toks(text_col)
-    n_tok = F.size(toks)
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin("the", "and", "of", "to", "a", "in")))
-    n_alpha = F.length(F.regexp_replace(F.col(text_col), r"[^A-Za-z]", ""))
-    n_chars = F.length(text_col)
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        n_tok.alias("n_tokens"),
-        F.round(n_chars / n_tok, 4).alias("mean_tok_len"),
-        F.round(stop_hits / n_tok, 4).alias("stopword_ratio"),
-        F.round(n_alpha / n_chars, 4).alias("alpha_ratio"),
-        F.round(
-            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * (n_alpha / n_chars), 4
-        ).alias("quality"),
-    )
-
-
 def token_counts(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     toks = _toks(text_col)
     empty = F.length(F.trim(F.col(text_col))) == 0

@@ -4,8 +4,8 @@ Every large-scale crawl curation pipeline (CCNet, C4, RefinedWeb,
 Dolma) buckets documents by their source URL: per-registrable-domain
 counts drive blocklists, sampling weights and dedup scopes. This module
 provides that surface as pure JVM-side column expressions — a shared
-Java∩RE2 regex subset (same discipline as operators/cleaning.py's PII
-chain) so the DuckDB oracle evaluates the identical patterns.
+Java∩RE2 regex subset, so the DuckDB oracle evaluates the identical
+patterns.
 
 Functions return projections (no shuffle); the per-domain rollup is one
 hash aggregation on the registrable-domain key. Domain keys are

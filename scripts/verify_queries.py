@@ -6,9 +6,10 @@ __spark_entry__ query at a given sf and compare to its DuckDB oracle
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 TABLES = ["documents"]
 

@@ -83,23 +83,6 @@ def test_score_documents_foreign_model_unseen_floor(spark):
     assert row["ppl"] == pytest.approx(2.0, abs=1e-4)
 
 
-def test_perplexity_filter_keeps_low_ppl_head(spark):
-    # doc 2 repeats one bigram 4x -> high probability -> low perplexity
-    docs = [
-        (0, "p q r s t u"),
-        (1, "u t s r q p"),
-        (2, "m m m m m"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    scores = {
-        r["doc_id"]: r["ppl"] for r in LM.score_documents(df).collect()
-    }
-    assert scores[2] < scores[0] and scores[2] < scores[1]
-    kept = LM.perplexity_filter(df, max_ppl=scores[2]).collect()
-    assert [r["doc_id"] for r in kept] == [2]
-    assert set(kept[0].asDict()) >= {"doc_id", "text", "ppl", "avg_logp"}
-
-
 def test_train_min_count_prunes_to_laplace_floor(spark):
     # with min_count=2 the once-seen bigram (y,z) is pruned from the
     # model and scores as an unseen event: (0+1)/(c1+V), not (1+1)/(c1+V)
@@ -206,68 +189,6 @@ def test_segment_dedup_is_idempotent(spark):
     assert all(x["n_segs"] == x["n_kept"] for x in r.values())
 
 
-# ----------------------------------------------------- decontaminate_bloom
-
-BLOOM_DOCS = [
-    # 13-token doc duplicated verbatim into the benchmark
-    (0, "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"),
-    # shares no 13-gram with the benchmark
-    (1, "y0 y1 y2 y3 y4 y5 y6 y7 y8 y9 y10 y11 y12 y13"),
-    # sub-13-token doc: the whole text is its single shingle
-    (2, "short doc"),
-]
-BLOOM_BENCH = [(100, BLOOM_DOCS[0][1]), (101, "short doc")]
-
-
-def _bloom_frames(spark):
-    from high_performance_docling_spark.operators import cleaning as CL
-
-    docs = spark.createDataFrame(BLOOM_DOCS, ["doc_id", "text"])
-    bench = spark.createDataFrame(BLOOM_BENCH, ["doc_id", "text"])
-    return CL, docs, bench
-
-
-def test_bloom_no_false_negatives_matches_exact(spark):
-    # exact-hit counts must equal the exact path's n_hits for EVERY doc,
-    # at any filter size (Bloom has no false negatives by construction)
-    CL, docs, bench = _bloom_frames(spark)
-    exact = {
-        r["doc_id"]: r["n_hits"]
-        for r in CL.decontaminate(docs, bench, n=13).collect()
-    }
-    for n_bits in (64, 1 << 20):
-        out = {
-            r["doc_id"]: r
-            for r in CL.decontaminate_bloom(
-                docs, bench, n=13, n_bits=n_bits
-            ).collect()
-        }
-        assert set(out) == set(exact)
-        for d, n_hits in exact.items():
-            assert out[d]["n_exact_hits"] == n_hits, (n_bits, d)
-            assert out[d]["n_bloom_hits"] >= n_hits
-            assert out[d]["n_false_pos"] == (
-                out[d]["n_bloom_hits"] - out[d]["n_exact_hits"]
-            )
-            assert out[d]["contaminated"] == int(n_hits > 0)
-
-
-def test_bloom_large_filter_has_no_false_positives(spark):
-    # at 2^20 bits over a handful of shingles, FP probability ~ 1e-18:
-    # the screen IS the exact answer
-    CL, docs, bench = _bloom_frames(spark)
-    out = CL.decontaminate_bloom(docs, bench, n=13, n_bits=1 << 20)
-    assert out.filter(F.col("n_false_pos") != 0).count() == 0
-
-
-def test_bloom_positions_bounded_by_bits(spark):
-    CL, docs, bench = _bloom_frames(spark)
-    pos = CL.bloom_positions(bench, n=13, n_hashes=3, n_bits=16)
-    vals = [r["pos"] for r in pos.collect()]
-    assert len(vals) == len(set(vals)) <= 16
-    assert all(0 <= v < 16 for v in vals)
-
-
 # ------------------------------------------------------------ psl domains
 
 PSL_CASES = {
@@ -308,48 +229,7 @@ def test_registrable_domain_psl_no_row_duplication(spark):
     assert UO.registrable_domain_psl(df, spark).count() == 7
 
 
-# ------------------------------------------------- weighted sampling + hll
-
-def test_sample_weighted_matches_python_reference(spark):
-    """Top-k by u^(1/w) recomputed independently with hashlib/math."""
-    import hashlib
-
-    from high_performance_docling_spark.entry_queries import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    out = QUERIES["sample_weighted"](spark, sf).collect()
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select(
-        "doc_id", "text").collect()
-    keys = {}
-    for r in docs:
-        w = max(len(r["text"]), 1)
-        h = int(hashlib.md5(f"ws:{r['doc_id']}".encode()).hexdigest()[:13], 16)
-        keys[r["doc_id"]] = (math.log((h + 1) / float(1 << 52)) / w, w)
-    top = sorted(keys.items(), key=lambda kv: (-kv[1][0], kv[0]))[:100]
-    # selection is by RAW key; presentation re-sorts by the rounded key
-    top = sorted(top, key=lambda kv: (-round(kv[1][0], 6), kv[0]))
-    assert [r["doc_id"] for r in out] == [d for d, _ in top]
-    for r, (d, (k, w)) in zip(out, top):
-        assert r["weight"] == w
-        assert abs(r["es_key"] - round(k, 6)) < 1e-9
-
-
-def test_sample_weighted_prefers_heavy_docs(spark):
-    """E-S with 100x weight must dominate the sample (property, not
-    statistics: P(any specific light doc beating a 100x-heavier one) is
-    tiny, and the draw is deterministic — this pins the weighting is
-    actually applied, not just computed)."""
-    from high_performance_docling_spark.entry_queries import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    out = QUERIES["sample_weighted"](spark, sf).collect()
-    docs = spark.read.parquet(f"{sf}/documents.parquet").count()
-    ws = [r["weight"] for r in out]
-    # sampled mean weight exceeds the corpus mean weight
-    allw = spark.read.parquet(f"{sf}/documents.parquet").select(
-        F.avg(F.greatest(F.length("text"), F.lit(1)))).first()[0]
-    assert len(out) == min(100, docs)
-    assert sum(ws) / len(ws) > allw
+# --------------------------------------------------- domain-balanced sampling
 
 
 def test_domain_balanced_sample_caps_heavy_domains(spark):

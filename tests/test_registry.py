@@ -3,7 +3,8 @@ only the `documents` table, every oracle parses in DuckDB against that
 table's schema, the rows-only set is exactly the documented pair of
 e2e extraction entries (whose gate is the pytest span-equality suite,
 not SQL), every package module is imported from a non-test entry
-point, and the extraction path imports none of the curation code."""
+point, every public operator function is named by one, and the
+extraction path imports none of the curation code."""
 
 import ast
 import subprocess
@@ -127,9 +128,31 @@ def test_every_package_module_is_reachable_from_a_non_test_root():
     assert sorted(set(mods) - seen) == []
 
 
+def test_every_public_operator_function_has_a_non_test_caller():
+    """A public operator function that only tests name is dead weight,
+    like a test-only module: cutting a family must take its helpers."""
+    defined = [
+        (path.name, node.name)
+        for path in sorted((REPO / PKG / "operators").glob("*.py"))
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_")
+    ]
+    named = set()
+    for path in [*_package_modules().values(), REPO / "__spark_entry__.py",
+                 *(REPO / "jobs").glob("*.py"),
+                 *(REPO / "scripts").glob("*.py")]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                named.update(a.name for a in node.names)
+    assert [f"{mod}:{fn}" for mod, fn in defined if fn not in named] == []
+
+
 CURATION_MODULES = ["entry_queries"] + [
     f"operators.{m}" for m in ("dedup", "text_analysis", "lm_score",
-                               "pretrain", "chunking", "cleaning",
                                "url_ops", "profiling", "winnow")
 ]
 

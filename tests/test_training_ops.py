@@ -1,5 +1,5 @@
-"""Training-data pipeline operators: dedup, text analysis, cleaning and
-chunking; the image kernels and the figure-crop sink."""
+"""Training-data pipeline operators: dedup and text analysis; the image
+kernels and the figure-crop sink."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,14 +15,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
-
-
-def test_exact_duplicates_groups_identical_text(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "  A b C "), (3, "different")], ["doc_id", "text"]
-    )
-    out = {r["keep_id"]: r["n_copies"] for r in DD.exact_duplicates(df).collect()}
-    assert out == {1: 2, 3: 1}
 
 
 def test_shingles_and_jaccard_identical_docs(spark):
@@ -303,39 +295,6 @@ def test_repetition_scores(spark):
     assert out[3]["top_bigram_char_frac"] == 0.0  # no 2-grams
 
 
-def test_chunk_documents_windows(spark):
-    from high_performance_docling_spark.operators.chunking import (
-        chunk_documents,
-        pack_chunks,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, " ".join(f"w{i}" for i in range(200))),  # 200 toks → 2 chunks
-         (2, "tiny doc"),                              # 1 chunk
-         (3, " ".join(f"x{i}" for i in range(129)))],  # 129 → 2 chunks
-        ["doc_id", "text"],
-    )
-    out = {(r["doc_id"], r["chunk_id"]): r for r in
-           chunk_documents(docs, chunk_size=128, overlap=32).collect()}
-    assert {k[0] for k in out} == {1, 2, 3}
-    assert out[(1, 0)]["n_tokens"] == 128
-    assert out[(1, 1)]["n_tokens"] == 104  # tokens 96..199
-    # overlap: chunk 1 starts at token 96 (= 128 - 32)
-    assert out[(1, 1)]["chunk_text"].split()[0] == "w96"
-    assert out[(2, 0)]["n_tokens"] == 2
-    assert (3, 1) in out and out[(3, 1)]["n_tokens"] == 33
-    # every token covered exactly (first chunk + strides)
-    packed = pack_chunks(chunk_documents(docs, 128, 32), capacity=256).collect()
-    bins = {}
-    for r in packed:
-        bins.setdefault(r["bin_id"], 0)
-        bins[r["bin_id"]] += r["n_tokens"]
-    # waste bound: every bin except maybe the last holds >= capacity - max_chunk
-    for b, tot in bins.items():
-        if b != max(bins):
-            assert tot >= 256 - 128
-
-
 def test_bilinear_resize_parity_with_reference_formula():
     """verify_parity.py-style gate (max-abs <= 1e-3): resize_bilinear vs
     an INDEPENDENT scalar-loop implementation of torchvision's
@@ -467,39 +426,6 @@ def test_star_cc_converges_on_long_chain_where_propagation_cannot(spark):
     labels = {r["node"]: r["comp"]
               for r in DD.connected_components_star(path, max_iterations=15).collect()}
     assert set(labels.values()) == {0} and len(labels) == 301
-
-
-def test_scrub_pii_patterns(spark):
-    from high_performance_docling_spark.operators.cleaning import scrub_pii
-
-    df = spark.createDataFrame(
-        [(1, "mail a.b+c@sub.example.org and ip 192.168.1.200 now"),
-         (2, "tel 415-555-0142 ok but version 1.2.3 and year 2024 stay"),
-         (3, "no pii here at all")],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r["clean_text"] for r in scrub_pii(df).collect()}
-    assert got[1] == "mail <EMAIL> and ip <IP> now"
-    assert got[2] == "tel <PHONE> ok but version 1.2.3 and year 2024 stay"
-    assert got[3] == "no pii here at all"
-
-
-def test_decontaminate_flags_only_overlapping_docs(spark):
-    from high_performance_docling_spark.operators.cleaning import decontaminate
-
-    words = " ".join(f"w{i}" for i in range(30))
-    docs = spark.createDataFrame(
-        [(1, words),                                  # shares a 13-gram
-         (2, " ".join(f"x{i}" for i in range(30)))],  # disjoint vocab
-        ["doc_id", "text"],
-    )
-    bench = spark.createDataFrame(
-        [(99, " ".join(f"w{i}" for i in range(5, 25)))], ["doc_id", "text"]
-    )
-    got = {r["doc_id"]: (r["n_hits"], r["contaminated"])
-           for r in decontaminate(docs, bench, n=13).collect()}
-    assert got[1] == (8, 1)   # 20-token window: 8 13-grams
-    assert got[2] == (0, 0)
 
 
 def test_duplicate_substring_stats_island_merging(spark):
