@@ -18,7 +18,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import Window as W
 
-from .operators import dedup as DD
 from .operators import text_analysis as TA
 
 
@@ -74,32 +73,9 @@ def q_extract_spans_ocr_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# training-data pipeline: dedup / text analysis (task brief) on `documents`
+# training-data pipeline: text analysis (task brief) on `documents`
 # --------------------------------------------------------------------------
 
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: hash-groupBy on normalized text, keep smallest doc_id
-    (the at-scale shape: one shuffle on the hash key; skew-safe because
-    md5 keys are uniform)."""
-    docs = _t(spark, sf_dir, "documents")
-    norm = F.md5(F.lower(F.trim(F.col("text"))))
-    return (
-        docs.select(norm.alias("content_hash"), "doc_id")
-        .groupBy("content_hash")
-        .agg(F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("n_copies"))
-        .orderBy("content_hash")
-    )
-
-
-ORACLE_DEDUP_EXACT = """
-SELECT md5(lower(trim(text))) AS content_hash,
-       min(doc_id)            AS keep_doc_id,
-       count(*)               AS n_copies
-FROM documents
-GROUP BY 1
-ORDER BY content_hash
-"""
 # NOTE: q_token_count keeps raw-case tokens deliberately (the raw-text
 # profile); operators/text_analysis.token_counts (q_token_profile)
 # lowercases — two different metrics, each with its own oracle.
@@ -163,252 +139,8 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# dedup suite (documents)
-# --------------------------------------------------------------------------
-
-_SHINGLES_CTE = r"""
-WITH toks_t AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, sh FROM (
-    SELECT doc_id,
-           unnest(CASE WHEN len(toks) >= 3
-                  THEN list_filter(
-                         list_transform(toks, (x, i) ->
-                           CASE WHEN i <= len(toks) - 2
-                                THEN concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-                           END),
-                         s -> s IS NOT NULL)
-                  ELSE [array_to_string(toks, ' ')] END) AS sh
-    FROM toks_t
-  )
-)
-"""
-
-
-def q_dedup_ngram_jaccard(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    sh = DD.shingles(docs, n=3)
-    # max_shingle_df=50: stop-shingle skew guard — a shingle shared by
-    # >=50 docs would fan the equi-join out O(df²) on one key at scale
-    return DD.ngram_jaccard_pairs(sh, threshold=0.2, max_shingle_df=50).orderBy("a", "b")
-
-
-ORACLE_NGRAM_JACCARD = _SHINGLES_CTE + """
-, dfc AS (SELECT sh, count(*) AS c FROM sh GROUP BY sh),
-shf AS (SELECT s.doc_id, s.sh FROM sh s JOIN dfc USING (sh) WHERE c < 50),
-sizes AS (SELECT doc_id, count(*) AS n FROM shf GROUP BY doc_id),
-inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS nc
-  FROM shf x JOIN shf y USING (sh)
-  WHERE x.doc_id < y.doc_id
-  GROUP BY 1, 2
-)
-SELECT a, b, round(nc / (sa.n + sb.n - nc), 4) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = a
-JOIN sizes sb ON sb.doc_id = b
-WHERE round(nc / (sa.n + sb.n - nc), 4) >= 0.2
-ORDER BY a, b
-"""
-
-
-def _mh_sql(i: int) -> str:
-    return f"min(('0x' || substr(md5('{i}:' || sh), 1, 14))::BIGINT) AS mh{i}"
-
-
-def q_dedup_minhash_lsh(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    sig = DD.minhash_signatures(DD.shingles(docs, n=3), n_hashes=16)
-    return DD.lsh_candidate_pairs(sig, n_hashes=16, bands=4).orderBy("a", "b")
-
-
-ORACLE_MINHASH_LSH = (
-    _SHINGLES_CTE
-    + ", sig AS (SELECT doc_id, "
-    + ", ".join(_mh_sql(i) for i in range(16))
-    + " FROM sh GROUP BY doc_id),\nbanded AS (\n"
-    + "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(concat_ws('_', "
-        + ", ".join(f"mh{b * 4 + r}" for r in range(4))
-        + ")) AS sig FROM sig"
-        for b in range(4)
-    )
-    + """
-)
-SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-FROM banded l JOIN banded r
-  ON l.band = r.band AND l.sig = r.sig AND l.doc_id < r.doc_id
-ORDER BY a, b
-"""
-)
-
-
-def q_dedup_minhash_verified(spark, sf_dir):
-    """The full two-stage near-dup pipeline: MinHash+LSH candidate pairs
-    (cheap, banded equi-join) → exact n-gram Jaccard verify on ONLY the
-    candidates (the verify join is pair-keyed, so its cost scales with
-    candidates, not with N²) — the shape a 100 TB dedup actually runs."""
-    docs = _t(spark, sf_dir, "documents")
-    sh = DD.shingles(docs, n=3)
-    cands = DD.lsh_candidate_pairs(
-        DD.minhash_signatures(sh, n_hashes=16), n_hashes=16, bands=4
-    )
-    # exact Jaccard restricted to candidate pairs via a semi-join shape
-    jac = DD.ngram_jaccard_pairs(sh, threshold=0.0)
-    return (
-        cands.join(jac, ["a", "b"], "inner")
-        .filter(F.col("jaccard") >= 0.2)
-        .orderBy("a", "b")
-    )
-
-
-ORACLE_MINHASH_VERIFIED = (
-    _SHINGLES_CTE
-    + ", sig AS (SELECT doc_id, "
-    + ", ".join(_mh_sql(i) for i in range(16))
-    + " FROM sh GROUP BY doc_id),\nbanded AS (\n"
-    + "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(concat_ws('_', "
-        + ", ".join(f"mh{b * 4 + r}" for r in range(4))
-        + ")) AS sig FROM sig"
-        for b in range(4)
-    )
-    + """
-),
-cands AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-  FROM banded l JOIN banded r
-    ON l.band = r.band AND l.sig = r.sig AND l.doc_id < r.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS nc
-  FROM sh x JOIN sh y USING (sh)
-  WHERE x.doc_id < y.doc_id
-  GROUP BY 1, 2
-),
-jac AS (
-  SELECT a, b, round(nc / (sa.n + sb.n - nc), 4) AS jaccard
-  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-)
-SELECT cands.a, cands.b, jac.jaccard
-FROM cands JOIN jac USING (a, b)
-WHERE jac.jaccard >= 0.2
-ORDER BY a, b
-"""
-)
-
-
-def q_dedup_simhash(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return DD.simhash(docs, bits=16).orderBy("doc_id")
-
-
-ORACLE_SIMHASH = (
-    r"""
-WITH tk AS (
-  SELECT doc_id,
-         unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
-  FROM documents
-),
-h AS (
-  SELECT doc_id, ('0x' || substr(md5('99:' || tok), 1, 14))::BIGINT AS h
-  FROM tk
-),
-bits AS (SELECT doc_id, """
-    + ", ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(16)
-    )
-    + " FROM h GROUP BY doc_id)\nSELECT doc_id, ("
-    + " + ".join(f"CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(16))
-    + ")::BIGINT AS simhash FROM bits ORDER BY doc_id"
-)
-
-
-# --------------------------------------------------------------------------
 # text analysis (documents)
 # --------------------------------------------------------------------------
-
-def q_dedup_simhash_pairs(spark, sf_dir):
-    """Near-dup pairs by SimHash hamming distance <= 3 via pigeonhole
-    banding (4 bands x 4 bits: <=3 differing bits leave >=1 band exact),
-    so the plan is a hash equi-join on (band, bits) — never the O(N²)
-    BroadcastNestedLoopJoin — with EXACTLY the same result set."""
-    docs = _t(spark, sf_dir, "documents")
-    fp = DD.simhash(docs, bits=16)
-    return DD.simhash_band_pairs(fp, bits=16, bands=4, max_hamming=3).orderBy("x", "y")
-
-
-# build on the simhash oracle as a CTE
-ORACLE_SIMHASH_PAIRS = (
-    "WITH fp AS (" + ORACLE_SIMHASH.replace("ORDER BY doc_id", "") + """)
-SELECT a.doc_id AS x, b.doc_id AS y,
-       bit_count(xor(a.simhash, b.simhash)) AS hamming
-FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-ORDER BY x, y
-"""
-)
-
-
-def _components_query(spark, sf_dir, cc_fn):
-    docs = _t(spark, sf_dir, "documents")
-    pairs = DD.simhash_band_pairs(DD.simhash(docs, bits=16))
-    comps = cc_fn(pairs)
-    sizes = comps.groupBy("comp").agg(F.count(F.lit(1)).alias("n_members"))
-    return (
-        comps.join(sizes, "comp")
-        .select(F.col("node").alias("doc_id"), F.col("comp").alias("component"),
-                "n_members")
-        .orderBy("doc_id")
-    )
-
-
-def q_dedup_components(spark, sf_dir):
-    """Duplicate-cluster formation: connected components over the SimHash
-    near-dup pair graph (iterative min-label propagation with a flat
-    lineage; the oracle walks the same graph with a RECURSIVE CTE —
-    an independent implementation of the transitive closure)."""
-    return _components_query(spark, sf_dir, DD.connected_components)
-
-
-def q_dedup_components_star(spark, sf_dir):
-    """Same duplicate clusters via alternating large-star/small-star
-    (Kiveris et al., SoCC'14) — the web-scale long-chain path: O(log n)
-    alternations instead of diameter-many label rounds. Oracled against
-    the identical RECURSIVE-CTE transitive closure; a 300-hop-path test
-    shows it converging where label propagation cannot."""
-    return _components_query(spark, sf_dir, DD.connected_components_star)
-
-
-ORACLE_DEDUP_COMPONENTS = (
-    "WITH RECURSIVE fp AS ("
-    + ORACLE_SIMHASH.replace("ORDER BY doc_id", "")
-    + """),
-pairs AS (
-  SELECT a.doc_id AS x, b.doc_id AS y
-  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-),
-edges AS (SELECT x AS s, y AS d FROM pairs UNION ALL SELECT y, x FROM pairs),
-nodes AS (SELECT DISTINCT s AS node FROM edges),
-walk(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.d, w.comp FROM edges e JOIN walk w ON e.s = w.node
-),
-comp AS (SELECT node, min(comp) AS component FROM walk GROUP BY node),
-sizes AS (SELECT component, count(*) AS n_members FROM comp GROUP BY component)
-SELECT node AS doc_id, component, n_members
-FROM comp JOIN sizes USING (component)
-ORDER BY doc_id
-"""
-)
-
 
 def q_language_id(spark, sf_dir):
     return TA.language_id(_t(spark, sf_dir, "documents")).orderBy("doc_id")
@@ -435,24 +167,6 @@ SELECT doc_id,
        ELSE 'fr' END AS lang_pred,
   hits_en, hits_es, hits_de, hits_fr
 FROM s ORDER BY doc_id
-"""
-
-
-def q_fingerprints(spark, sf_dir):
-    return TA.fingerprints(_t(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-ORACLE_FINGERPRINTS = r"""
-WITH t AS (
-  SELECT doc_id, text,
-         regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-  FROM documents
-)
-SELECT doc_id, md5(text) AS content_md5,
-       (list_sum(list_transform(toks, (x, i) ->
-          (('0x' || substr(md5(x), 1, 12))::BIGINT * i) % 9007199254740881
-       )))::BIGINT % 9007199254740881 AS rolling_hash
-FROM t ORDER BY doc_id
 """
 
 
@@ -912,144 +626,6 @@ SELECT doc_id, rk, tok, tf, df, score FROM (
 """
 
 
-def q_dedup_representatives(spark, sf_dir):
-    """End-to-end dedup composition: SimHash pair graph → connected
-    components → ONE representative per duplicate cluster, chosen by
-    quality (highest mean token length, ties to the lowest doc id);
-    singleton docs represent themselves. This is the query a pretraining
-    pipeline actually runs — detect, cluster, keep-best — and the oracle
-    recomputes it with the RECURSIVE-CTE closure + the same argmax.
-    hamming <= 1 (vs the components queries' 3) keeps clusters tight so
-    the representative choice is meaningful, not one giant component."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = DD.simhash_band_pairs(DD.simhash(docs, bits=16), max_hamming=1)
-    # the O(log n) large-star/small-star variant is the default here so
-    # the flagship dedup composition's round count grows with log(n),
-    # not graph diameter (same min-id components, same oracle)
-    comps = DD.connected_components_star(pairs)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    q = docs.select(
-        F.col("doc_id").alias("node"),
-        F.round(F.length("text") / F.size(toks), 4).alias("mean_tok_len"),
-    )
-    full = (
-        q.join(comps, "node", "left")
-        .select(
-            "node", "mean_tok_len",
-            F.coalesce("comp", F.col("node")).alias("component"),
-        )
-    )
-    wc = W.partitionBy("component")
-    wr = wc.orderBy(F.desc("mean_tok_len"), F.asc("node"))
-    return (
-        full.withColumn("n_members", F.count(F.lit(1)).over(wc))
-        .withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") == 1)
-        .select(
-            "component",
-            F.col("node").alias("keep_id"),
-            "n_members",
-            F.col("mean_tok_len").alias("keep_quality"),
-        )
-        .orderBy("component")
-    )
-
-
-ORACLE_DEDUP_REPRESENTATIVES = (
-    "WITH RECURSIVE fp AS ("
-    + ORACLE_SIMHASH.replace("ORDER BY doc_id", "")
-    + """),
-pairs AS (
-  SELECT a.doc_id AS x, b.doc_id AS y
-  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= 1
-),
-edges AS (SELECT x AS s, y AS d FROM pairs UNION ALL SELECT y, x FROM pairs),
-nodes AS (SELECT DISTINCT s AS node FROM edges),
-walk(node, comp) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT e.d, w.comp FROM edges e JOIN walk w ON e.s = w.node
-),
-comp AS (SELECT node, min(comp) AS component FROM walk GROUP BY node),
-q AS (
-  SELECT doc_id AS node,
-         round(length(text) / len(regexp_split_to_array(trim(text), '\\s+')), 4)
-           AS mean_tok_len
-  FROM documents
-),
-allq AS (
-  SELECT q.node, q.mean_tok_len, coalesce(c.component, q.node) AS component
-  FROM q LEFT JOIN comp c USING (node)
-)
-SELECT component, keep_id, n_members, keep_quality FROM (
-  SELECT component, node AS keep_id, mean_tok_len AS keep_quality,
-         count(*) OVER (PARTITION BY component) AS n_members,
-         row_number() OVER (PARTITION BY component
-                            ORDER BY mean_tok_len DESC, node ASC) AS rk
-  FROM allq
-) WHERE rk = 1 ORDER BY component
-"""
-)
-
-
-def q_dedup_substring_spans(spark, sf_dir):
-    """Exact duplicated-substring statistics (Lee et al., ACL 2022 — the
-    suffix-array dedup unit re-expressed relationally): 20-token windows
-    whose md5 repeats anywhere in the corpus mark duplicated spans;
-    overlapping windows merge per document (gaps-and-islands) and the
-    stats report span count, duplicated tokens and the duplicated
-    fraction. The oracle recomputes the identical window hashes, HAVING
-    filter and island merge in SQL."""
-    return DD.duplicate_substring_stats(
-        _t(spark, sf_dir, "documents"), min_tokens=20
-    ).orderBy("doc_id")
-
-
-ORACLE_DEDUP_SUBSTRING_SPANS = r"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks,
-         len(regexp_split_to_array(lower(trim(text)), '\s+')) AS n
-  FROM documents
-),
-w AS (
-  SELECT doc_id, n, unnest(generate_series(0, n - 20)) AS pos0, toks
-  FROM t WHERE n >= 20
-),
-h AS (
-  SELECT doc_id, n, pos0,
-         md5(array_to_string(toks[pos0 + 1 : pos0 + 20], ' ')) AS h
-  FROM w
-),
-dups AS (SELECT h FROM h GROUP BY h HAVING count(*) > 1),
-m AS (SELECT doc_id, n, pos0 FROM h JOIN dups USING (h)),
-isl AS (
-  SELECT doc_id, n, pos0,
-         sum(CASE WHEN prev IS NULL OR pos0 - prev > 20 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY pos0
-                 ROWS UNBOUNDED PRECEDING) AS island
-  FROM (SELECT *, lag(pos0) OVER (PARTITION BY doc_id ORDER BY pos0) AS prev
-        FROM m)
-),
-sp AS (
-  SELECT doc_id, n, island, min(pos0) AS s, max(pos0) + 20 AS e
-  FROM isl GROUP BY doc_id, n, island
-),
-agg AS (
-  SELECT doc_id, count(*) AS n_dup_spans,
-         sum(e - s)::BIGINT AS dup_tokens,
-         round(sum(e - s) * 1.0 / max(n), 4) AS dup_frac
-  FROM sp GROUP BY doc_id
-)
-SELECT d.doc_id,
-       coalesce(a.n_dup_spans, 0)::BIGINT AS n_dup_spans,
-       coalesce(a.dup_tokens, 0)::BIGINT AS dup_tokens,
-       coalesce(a.dup_frac, 0.0) AS dup_frac
-FROM documents d LEFT JOIN agg a USING (doc_id)
-ORDER BY d.doc_id
-"""
-
-
 def q_perplexity_score(spark, sf_dir):
     """CCNet-style LM quality scoring (Wenzek et al., LREC 2020): train
     an add-one-smoothed bigram LM on the corpus (two hash aggregations),
@@ -1091,52 +667,6 @@ SELECT d.doc_id,
        coalesce(avg_logp, 0.0) AS avg_logp,
        round(exp(-coalesce(avg_logp, 0.0)), 4) AS ppl
 FROM documents d LEFT JOIN agg USING (doc_id)
-ORDER BY d.doc_id
-"""
-
-
-def q_segment_dedup(spark, sf_dir):
-    """C4-style duplicate-line removal WITH corpus reconstruction
-    (Raffel et al., JMLR 2020 §2.2): fixed 8-token segments, one global
-    survivor per duplicated segment (lowest doc_id then position),
-    documents reassembled from their surviving segments. Unlike
-    dedup_substring_spans (sliding-window STATS), this rewrites the
-    text. Scale shape: one explode, one row_number window on the md5
-    segment key (the only shuffle), one per-doc reassembly agg."""
-    return DD.segment_dedup(_t(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-ORACLE_SEGMENT_DEDUP = r"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-  FROM documents WHERE length(trim(text)) > 0
-),
-g AS (
-  SELECT doc_id, toks,
-         unnest(generate_series(0, CAST(ceil(len(toks) / 8.0) AS INT) - 1)) AS six
-  FROM t
-),
-s AS (
-  SELECT doc_id, six,
-         array_to_string(toks[six * 8 + 1 : six * 8 + 8], ' ') AS seg
-  FROM g
-),
-r AS (
-  SELECT doc_id, six, seg,
-         row_number() OVER (PARTITION BY md5(seg) ORDER BY doc_id, six) AS rk
-  FROM s
-),
-rec AS (
-  SELECT doc_id, count(*) AS n_kept,
-         string_agg(seg, ' ' ORDER BY six) AS text_dedup
-  FROM r WHERE rk = 1 GROUP BY doc_id
-),
-tot AS (SELECT doc_id, count(*) AS n_segs FROM s GROUP BY doc_id)
-SELECT d.doc_id,
-       coalesce(n_segs, 0)::BIGINT AS n_segs,
-       coalesce(n_kept, 0)::BIGINT AS n_kept,
-       coalesce(text_dedup, '') AS text_dedup
-FROM documents d LEFT JOIN tot USING (doc_id) LEFT JOIN rec USING (doc_id)
 ORDER BY d.doc_id
 """
 
@@ -1327,61 +857,6 @@ FROM u JOIN dom d USING (host)
 GROUP BY u.host, d.public_suffix, d.domain
 ORDER BY u.host
 """
-
-
-def q_dedup_incremental(spark, sf_dir):
-    """Incremental corpus update — dedup an INCOMING batch against the
-    EXISTING corpus without any existing↔existing work (the daily-crawl
-    pattern: the index is maintained, only the delta is screened).
-    Existing = doc_id % 10 != 0 (the indexed 90%), incoming = % 10 == 0
-    (today's batch). Exact: content-md5 equi-join incoming→existing.
-    Near: 16-bit SimHash, pigeonhole 4-band equi-join STRICTLY
-    incoming↔existing (cost ∝ batch size × band collision rate, never
-    corpus²), full-hamming verify ≤ 3 (includes hamming 0 — identical
-    text counts as near too; the two columns answer different
-    questions). keep = no exact and no near match.
-
-    Scale shape: two keyed equi-joins (content hash; band+bits) + two
-    per-incoming-doc aggs; the existing side shuffles once per screen,
-    the incoming side is the small delta — at 100 TB the existing
-    fingerprints would be a bucketed/sorted index table so only the
-    delta shuffles at all."""
-    docs = _t(spark, sf_dir, "documents")
-    is_inc = F.col("doc_id") % 10 == 0
-    return DD.screen_incoming(
-        docs.filter(~is_inc), docs.filter(is_inc)
-    ).orderBy("doc_id")
-
-
-ORACLE_DEDUP_INCREMENTAL = (
-    "WITH fp AS ("
-    + ORACLE_SIMHASH.replace("ORDER BY doc_id", "")
-    + """),
-hashed AS (
-  SELECT doc_id, md5(lower(trim(text))) AS ch FROM documents
-),
-exact AS (
-  SELECT i.doc_id, coalesce(e.n_ex, 0)::BIGINT AS n_exact
-  FROM (SELECT * FROM hashed WHERE doc_id % 10 = 0) i
-  LEFT JOIN (
-    SELECT ch, count(*) AS n_ex FROM hashed WHERE doc_id % 10 <> 0
-    GROUP BY ch
-  ) e USING (ch)
-),
-near AS (
-  SELECT i.doc_id, count(*)::BIGINT AS n_near
-  FROM fp i JOIN fp e
-    ON i.doc_id % 10 = 0 AND e.doc_id % 10 <> 0
-   AND bit_count(xor(i.simhash, e.simhash)) <= 3
-  GROUP BY i.doc_id
-)
-SELECT exact.doc_id, n_exact,
-       coalesce(near.n_near, 0)::BIGINT AS n_near,
-       (n_exact = 0 AND coalesce(near.n_near, 0) = 0)::INT AS keep
-FROM exact LEFT JOIN near USING (doc_id)
-ORDER BY exact.doc_id
-"""
-)
 
 
 def q_bpe_train_merges(spark, sf_dir):
@@ -1885,57 +1360,6 @@ GROUP BY doc_id ORDER BY doc_id
 """
 
 
-def q_winnow_pairs(spark, sf_dir):
-    """Winnowing fingerprint dedup (Schleimer et al. 2003, the MOSS
-    scheme — the guaranteed-detection member of the dedup family):
-    char-8-gram md5 hashes, sliding window-4 minima per doc, distinct
-    fingerprints, then a shared-fingerprint self-join with
-    stop-fingerprint capping (df > 25 docs dropped — the hot keys that
-    would otherwise blow the join up). Pairs sharing >= 5 fingerprints.
-    The oracle replays hashing, the sliding ROWS-frame min, capping and
-    the pair join."""
-    from .operators import winnow as WN
-
-    docs = _t(spark, sf_dir, "documents")
-    fps = WN.winnow_fingerprints(docs, k=8, w=4)
-    return WN.winnow_shared_pairs(fps, max_df=25, min_shared=5).orderBy(
-        "a", "b"
-    )
-
-
-ORACLE_WINNOW_PAIRS = """
-WITH d AS (
-  SELECT doc_id, lower(trim(text)) AS t,
-         length(lower(trim(text))) - 7 AS n_pos
-  FROM documents
-),
-grams AS (
-  SELECT doc_id, n_pos, i AS pos,
-         ('0x' || substr(md5(substring(t, i, 8)), 1, 14))::BIGINT AS h
-  FROM d, LATERAL (SELECT unnest(range(1, greatest(n_pos, 1) + 1)) AS i)
-),
-winnowed AS (
-  SELECT doc_id, pos, n_pos,
-         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-  FROM grams
-),
-fps AS (
-  SELECT DISTINCT doc_id, fp FROM winnowed WHERE pos <= n_pos - 3
-),
-df_counts AS (SELECT fp, count(*) AS df FROM fps GROUP BY fp),
-rare AS (
-  SELECT doc_id, fp FROM fps
-  WHERE fp IN (SELECT fp FROM df_counts WHERE df <= 25)
-)
-SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS n_shared
-FROM rare x JOIN rare y ON x.fp = y.fp AND x.doc_id < y.doc_id
-GROUP BY x.doc_id, y.doc_id
-HAVING count(*) >= 5
-ORDER BY a, b
-"""
-
-
 # --------------------------------------------------------------------------
 # registry
 # --------------------------------------------------------------------------
@@ -1943,24 +1367,15 @@ ORDER BY a, b
 # Dict order is the iteration order of queries(): a correctness harness
 # that checks only the first 50 entries still sees the two e2e entries.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dedup_substring_spans": q_dedup_substring_spans,
     "latexize_formulas": q_latexize_formulas,
     "perplexity_score": q_perplexity_score,
-    "segment_dedup": q_segment_dedup,
     "url_domain_stats": q_url_domain_stats,
     "url_domain_psl": q_url_domain_psl,
     "extract_spans_e2e": q_extract_spans_e2e,
     "extract_spans_ocr_e2e": q_extract_spans_ocr_e2e,
-    "dedup_exact": q_dedup_exact,
     "token_count": q_token_count,
     "quality_score": q_quality_score,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_minhash_verified": q_dedup_minhash_verified,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_simhash_pairs": q_dedup_simhash_pairs,
     "language_id": q_language_id,
-    "doc_fingerprints": q_fingerprints,
     "token_profile": q_token_profile,
     "bpe_token_profile": q_bpe_token_profile,
     "gopher_quality": q_gopher_quality,
@@ -1968,55 +1383,36 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "export_markdown": q_export_markdown,
     "detect_format": q_detect_format,
     "extract_html_spans": q_extract_html_spans,
-    "dedup_components": q_dedup_components,
-    "dedup_components_star": q_dedup_components_star,
-    "dedup_representatives": q_dedup_representatives,
     "tfidf_keywords": q_tfidf_keywords,
     "domain_balanced_sample": q_domain_balanced_sample,
     "bpe_train_merges": q_bpe_train_merges,
-    "dedup_incremental": q_dedup_incremental,
     "profile_documents": q_profile_documents,
     "quality_tiers": q_quality_tiers,
     "pmi_collocations": q_pmi_collocations,
     "char_entropy": q_char_entropy,
-    "winnow_pairs": q_winnow_pairs,
 }
 
 ORACLES: dict[str, str] = {
     "export_markdown": ORACLE_EXPORT_MARKDOWN,
-    "dedup_exact": ORACLE_DEDUP_EXACT,
     "token_count": ORACLE_TOKEN_COUNT,
     "quality_score": ORACLE_QUALITY_SCORE,
-    "dedup_ngram_jaccard": ORACLE_NGRAM_JACCARD,
-    "dedup_minhash_lsh": ORACLE_MINHASH_LSH,
-    "dedup_minhash_verified": ORACLE_MINHASH_VERIFIED,
-    "dedup_simhash": ORACLE_SIMHASH,
-    "dedup_simhash_pairs": ORACLE_SIMHASH_PAIRS,
     "language_id": ORACLE_LANGUAGE_ID,
-    "doc_fingerprints": ORACLE_FINGERPRINTS,
     "token_profile": ORACLE_TOKEN_PROFILE,
     "bpe_token_profile": ORACLE_BPE_TOKEN_PROFILE,
     "gopher_quality": ORACLE_GOPHER_QUALITY,
     "repetition_scores": ORACLE_REPETITION_SCORES,
     "detect_format": ORACLE_DETECT_FORMAT,
     "extract_html_spans": ORACLE_EXTRACT_HTML_SPANS,
-    "dedup_components": ORACLE_DEDUP_COMPONENTS,
-    "dedup_components_star": ORACLE_DEDUP_COMPONENTS,
-    "dedup_representatives": ORACLE_DEDUP_REPRESENTATIVES,
     "tfidf_keywords": ORACLE_TFIDF_KEYWORDS,
-    "dedup_substring_spans": ORACLE_DEDUP_SUBSTRING_SPANS,
     "latexize_formulas": ORACLE_LATEXIZE_FORMULAS,
     "perplexity_score": ORACLE_PERPLEXITY_SCORE,
     "url_domain_psl": ORACLE_URL_DOMAIN_PSL,
     "domain_balanced_sample": ORACLE_DOMAIN_BALANCED_SAMPLE,
     "bpe_train_merges": ORACLE_BPE_TRAIN_MERGES,
-    "dedup_incremental": ORACLE_DEDUP_INCREMENTAL,
-    "segment_dedup": ORACLE_SEGMENT_DEDUP,
     "url_domain_stats": ORACLE_URL_DOMAIN_STATS,
     "profile_documents": ORACLE_PROFILE_DOCUMENTS,
     "quality_tiers": ORACLE_QUALITY_TIERS,
     "pmi_collocations": ORACLE_PMI_COLLOCATIONS,
     "char_entropy": ORACLE_CHAR_ENTROPY,
-    "winnow_pairs": ORACLE_WINNOW_PAIRS,
 }
 

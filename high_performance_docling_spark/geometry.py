@@ -1,10 +1,11 @@
-"""Vectorized bounding-box geometry kernels (NumPy).
+"""Bounding-box geometry helpers (NumPy).
 
-Boxes are (l, t, r, b) in TOP-LEFT-origin page coordinates, stored as
-float64 arrays of shape (N, 4). These are the primitives behind every
-spatial "join" in the pipeline (reference kernels:
-fork/layout/layout_postprocessor.py:224-277, fork/table/tf_cell_matcher.py:56-81,
-page_word_index.py:80-126) rewritten as clean array ops.
+Boxes are (l, t, r, b) in TOP-LEFT-origin page coordinates.
+``union_find_groups`` groups overlapping layout clusters; the cxcywh ↔
+xyxy conversions and the batched merge follow the table model's box
+format (tablemodel04_rs.py:277-339). The pairwise overlap tests
+(intersection, IoU, IoS, bbox envelope) live beside their callers in
+kernels/layout_postprocess.py and kernels/table_match.py.
 """
 
 from __future__ import annotations
@@ -12,64 +13,11 @@ from __future__ import annotations
 import numpy as np
 
 __all__ = [
-    "area",
-    "intersection_area",
-    "iou_matrix",
-    "ios_matrix",
-    "envelope",
     "union_find_groups",
     "cxcywh_to_xyxy",
     "xyxy_to_cxcywh",
     "merge_bboxes_cxcywh",
 ]
-
-
-def area(boxes: np.ndarray) -> np.ndarray:
-    """Areas of an (N,4) box array; negative extents clip to 0."""
-    boxes = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
-    w = np.clip(boxes[:, 2] - boxes[:, 0], 0.0, None)
-    h = np.clip(boxes[:, 3] - boxes[:, 1], 0.0, None)
-    return w * h
-
-
-def intersection_area(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Pairwise intersection areas: (N,4) x (M,4) -> (N,M)."""
-    a = np.asarray(a, dtype=np.float64).reshape(-1, 4)
-    b = np.asarray(b, dtype=np.float64).reshape(-1, 4)
-    l = np.maximum(a[:, None, 0], b[None, :, 0])
-    t = np.maximum(a[:, None, 1], b[None, :, 1])
-    r = np.minimum(a[:, None, 2], b[None, :, 2])
-    bt = np.minimum(a[:, None, 3], b[None, :, 3])
-    return np.clip(r - l, 0.0, None) * np.clip(bt - t, 0.0, None)
-
-
-def iou_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(N,M) intersection-over-union; 0 where the union is empty."""
-    inter = intersection_area(a, b)
-    ua = area(a)[:, None] + area(b)[None, :] - inter
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out = np.where(ua > 0.0, inter / np.maximum(ua, 1e-300), 0.0)
-    return out
-
-
-def ios_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(N,M) intersection-over-self(a): inter(a_i, b_j) / area(a_i)."""
-    inter = intersection_area(a, b)
-    aa = area(a)[:, None]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out = np.where(aa > 0.0, inter / np.maximum(aa, 1e-300), 0.0)
-    return out
-
-
-def envelope(boxes: np.ndarray) -> tuple[float, float, float, float]:
-    """Bounding envelope (min l, min t, max r, max b) of an (N,4) array."""
-    boxes = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
-    return (
-        float(boxes[:, 0].min()),
-        float(boxes[:, 1].min()),
-        float(boxes[:, 2].max()),
-        float(boxes[:, 3].max()),
-    )
 
 
 def union_find_groups(n: int, edges: np.ndarray) -> list[list[int]]:

@@ -1,6 +1,6 @@
-"""Text-analysis operators: language-ID, quality scoring, token counting,
-document fingerprinting. All JVM-side column expressions (no UDFs) with
-exact DuckDB-expressible semantics so the driver can oracle them."""
+"""Text-analysis operators: language-ID, quality scoring, token counting.
+All JVM-side column expressions (no UDFs) with exact DuckDB-expressible
+semantics so the driver can oracle them."""
 
 from __future__ import annotations
 
@@ -50,30 +50,6 @@ def token_counts(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
         F.when(empty, F.lit(0))
         .otherwise(F.size(F.array_distinct(toks)))
         .alias("n_unique_tokens"),
-    )
-
-
-def fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Document fingerprints: content hash (md5) and a position-weighted
-    rolling token hash (order-sensitive, so reordered tokens differ)."""
-    toks = _toks(text_col)
-    pos_hash = F.aggregate(
-        F.zip_with(
-            toks,
-            F.sequence(F.lit(1), F.size(toks)),
-            lambda t, i: (
-                F.conv(F.substring(F.md5(t), 1, 12), 16, 10).cast("bigint")
-                * i.cast("bigint")
-            )
-            % F.lit(9007199254740881).cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: (acc + v) % F.lit(9007199254740881).cast("bigint"),
-    )
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.md5(F.col(text_col)).alias("content_md5"),
-        pos_hash.alias("rolling_hash"),
     )
 
 

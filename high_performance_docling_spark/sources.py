@@ -149,7 +149,7 @@ def read_jsonl_corpus(
     source_field: str | None = None,
 ) -> DataFrame:
     """JSONL(.gz) text corpus (the Pile/C4-style layout) → the
-    (doc_id, source, text) shape every text-analysis/dedup operator
+    (doc_id, source, text) shape every text-analysis operator
     consumes. Spark's json reader handles gzip transparently and splits
     uncompressed files; schema is inferred once then projected (column
     pruning pushes into the scan). Missing id falls back to a

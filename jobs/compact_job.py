@@ -2,8 +2,8 @@
 """spark-submit entry point for small-file compaction: rewrite a
 parquet directory into size-targeted files without changing a row.
 
-Streaming sinks and per-batch commits (incremental_update_job,
-iceberg partition fallback) accumulate small files; scan cost at
+Streaming sinks (ingest_job --streaming) and per-batch commits (the
+iceberg parquet fallback) accumulate small files; scan cost at
 100 TB is dominated by file COUNT long before bytes. This job reads a
 directory, computes the partition count from the actual input bytes /
 target file size, and rewrites atomically (write to <dir>.compact.tmp,

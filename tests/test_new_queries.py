@@ -1,17 +1,14 @@
-"""Round-6 curation operators: LM perplexity scoring (lm_score), URL /
-domain parsing (url_ops) and C4-style segment dedup with reconstruction
-(dedup.segment_dedup). Each is pinned against an independent pure-Python
-reference here; their registry entries are additionally cross-checked
-against DuckDB oracles by scripts/verify_queries.py."""
+"""Round-6 curation operators: LM perplexity scoring (lm_score) and URL /
+domain parsing (url_ops). Each is pinned against an independent
+pure-Python reference here; their registry entries are additionally
+cross-checked against DuckDB oracles by scripts/verify_queries.py."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
-from high_performance_docling_spark.operators import dedup as DD
 from high_performance_docling_spark.operators import lm_score as LM
 from high_performance_docling_spark.operators import url_ops as UO
 
@@ -144,49 +141,6 @@ def test_domain_stats_rollup(spark):
     assert ex["avg_path_depth"] == pytest.approx(1.5)
     assert ex["avg_n_chars"] == pytest.approx(20.0)
     assert out["other.net"]["n_docs"] == 1
-
-
-# ----------------------------------------------------------- segment_dedup
-
-def test_segment_dedup_reconstruction(spark):
-    docs = [
-        (0, "a b c d e f g h i j k l m n o p"),
-        (1, "a b c d e f g h x0 x1 x2 x3 x4 x5 x6 x7"),
-        (2, "i j k l m n o p"),
-        (3, "q r s"),
-        (4, ""),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    rows = {r["doc_id"]: r for r in DD.segment_dedup(df).collect()}
-    assert set(rows) == {0, 1, 2, 3, 4}
-    # doc 0 owns both of its segments (lowest doc_id wins)
-    assert (rows[0]["n_segs"], rows[0]["n_kept"]) == (2, 2)
-    assert rows[0]["text_dedup"] == docs[0][1]
-    # doc 1 loses its first segment to doc 0, keeps its unique tail
-    assert (rows[1]["n_segs"], rows[1]["n_kept"]) == (2, 1)
-    assert rows[1]["text_dedup"] == "x0 x1 x2 x3 x4 x5 x6 x7"
-    # doc 2 is entirely a duplicate of doc 0's second segment
-    assert (rows[2]["n_segs"], rows[2]["n_kept"]) == (1, 0)
-    assert rows[2]["text_dedup"] == ""
-    # short unique doc survives whole; empty doc yields zero segments
-    assert rows[3]["text_dedup"] == "q r s"
-    assert (rows[4]["n_segs"], rows[4]["n_kept"]) == (0, 0)
-
-
-def test_segment_dedup_is_idempotent(spark):
-    docs = [
-        (0, "a b c d e f g h i j k l m n o p"),
-        (1, "a b c d e f g h x0 x1 x2 x3 x4 x5 x6 x7"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    once = DD.segment_dedup(df)
-    again = DD.segment_dedup(
-        once.select("doc_id", F.col("text_dedup").alias("text"))
-    )
-    r = {x["doc_id"]: x for x in again.collect()}
-    assert r[0]["text_dedup"] == docs[0][1]
-    assert r[1]["text_dedup"] == "x0 x1 x2 x3 x4 x5 x6 x7"
-    assert all(x["n_segs"] == x["n_kept"] for x in r.values())
 
 
 # ------------------------------------------------------------ psl domains

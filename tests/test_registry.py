@@ -3,12 +3,14 @@ only the `documents` table, every oracle parses in DuckDB against that
 table's schema, the rows-only set is exactly the documented pair of
 e2e extraction entries (whose gate is the pytest span-equality suite,
 not SQL), every package module is imported from a non-test entry
-point, every public operator function is named by one, and the
-extraction path imports none of the curation code."""
+point, every public operator function is named by one, every package
+function and class is named somewhere, and the extraction and
+streaming-extraction paths import none of the curation code."""
 
 import ast
 import subprocess
 import sys
+from collections import Counter
 from pathlib import Path
 
 import duckdb
@@ -39,11 +41,9 @@ def test_all_oracles_parse_in_duckdb():
 
 
 # Queries whose construction legitimately runs Spark jobs: model fitting
-# (the BPE merge rounds) and driver-side iterative fixpoints
-# (connected components). Everything else must build lazily — no
+# (the BPE merge rounds). Everything else must build lazily — no
 # .first()/.collect() hidden in plan construction (VERDICT r2 #7).
-CONSTRUCTION_RUNS_JOBS = {"dedup_components", "dedup_components_star",
-                          "dedup_representatives", "bpe_train_merges"}
+CONSTRUCTION_RUNS_JOBS = {"bpe_train_merges"}
 
 
 def test_registry_construction_runs_no_jobs(spark):
@@ -128,6 +128,20 @@ def test_every_package_module_is_reachable_from_a_non_test_root():
     assert sorted(set(mods) - seen) == []
 
 
+def _names_used(tree: ast.AST) -> Counter:
+    """Every name ``tree`` uses: ``Name`` ids, ``Attribute`` attributes
+    and ``ImportFrom`` aliases."""
+    named = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            named[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            named[node.attr] += 1
+        elif isinstance(node, ast.ImportFrom):
+            named.update(a.name for a in node.names)
+    return named
+
+
 def test_every_public_operator_function_has_a_non_test_caller():
     """A public operator function that only tests name is dead weight,
     like a test-only module: cutting a family must take its helpers."""
@@ -137,38 +151,70 @@ def test_every_public_operator_function_has_a_non_test_caller():
         for node in ast.parse(path.read_text()).body
         if isinstance(node, ast.FunctionDef) and not node.name.startswith("_")
     ]
-    named = set()
+    named = Counter()
     for path in [*_package_modules().values(), REPO / "__spark_entry__.py",
                  *(REPO / "jobs").glob("*.py"),
                  *(REPO / "scripts").glob("*.py")]:
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Name):
-                named.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                named.add(node.attr)
-            elif isinstance(node, ast.ImportFrom):
-                named.update(a.name for a in node.names)
+        named += _names_used(ast.parse(path.read_text()))
     assert [f"{mod}:{fn}" for mod, fn in defined if fn not in named] == []
 
 
+def test_every_package_function_and_class_is_named_somewhere():
+    """A module-level function or class that nothing names, not even a
+    test, is dead code. A name used only inside its own definition (a
+    recursive call) does not count."""
+    trees = {
+        path: ast.parse(path.read_text())
+        for path in [*_package_modules().values(), *REPO.glob("*.py"),
+                     *(REPO / "jobs").glob("*.py"),
+                     *(REPO / "scripts").glob("*.py"),
+                     *(REPO / "tests").rglob("*.py"),
+                     *(REPO / "perfbench").rglob("*.py")]
+    }
+    named = Counter()
+    for tree in trees.values():
+        named += _names_used(tree)
+    unnamed = [
+        f"{path.relative_to(REPO / PKG)}:{node.name}"
+        for path in _package_modules().values()
+        for node in trees[path].body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef))
+        and named[node.name] == _names_used(node)[node.name]
+    ]
+    assert sorted(unnamed) == []
+
+
 CURATION_MODULES = ["entry_queries"] + [
-    f"operators.{m}" for m in ("dedup", "text_analysis", "lm_score",
-                               "url_ops", "profiling", "winnow")
+    f"operators.{m}" for m in ("text_analysis", "lm_score", "url_ops",
+                               "profiling")
 ]
 
 
-def test_extraction_path_imports_no_curation_module():
-    """What a Python worker loads for extraction (pipeline, oracle and
-    the stage functions) stays clear of the registry and its curation
-    operators, checked in a fresh interpreter."""
+def _loaded_package_modules(*modules: str) -> set[str]:
+    """The package modules a fresh interpreter holds after importing
+    ``modules``."""
     probe = (
         "import sys\n"
-        f"import {PKG}.pipeline, {PKG}.oracle, {PKG}.operators.stages\n"
+        f"import {', '.join(f'{PKG}.{m}' for m in modules)}\n"
         f"print(' '.join(m for m in sys.modules if m.startswith('{PKG}')))"
     )
     r = subprocess.run([sys.executable, "-c", probe], cwd=REPO,
                        capture_output=True, text=True, timeout=120)
     assert r.returncode == 0, r.stderr[-2000:]
-    loaded = set(r.stdout.split())
+    return set(r.stdout.split())
+
+
+def test_extraction_path_imports_no_curation_module():
+    """What a Python worker loads for extraction (pipeline, oracle and
+    the stage functions) stays clear of the registry and its curation
+    operators, and the streaming extraction that ``ingest_job
+    --streaming`` and ``warc_job`` load adds only its own two modules,
+    each checked in a fresh interpreter."""
+    loaded = _loaded_package_modules("pipeline", "oracle", "operators.stages")
     assert f"{PKG}.operators.stages" in loaded
     assert sorted(loaded & {f"{PKG}.{m}" for m in CURATION_MODULES}) == []
+    streaming = _loaded_package_modules("streaming.extract")
+    assert sorted(
+        streaming - loaded - {f"{PKG}.streaming", f"{PKG}.streaming.extract"}
+    ) == []

@@ -1,50 +1,7 @@
-"""Training-data pipeline operators: dedup and text analysis; the image
-kernels and the figure-crop sink."""
+"""Training-data pipeline operators: text analysis; the image kernels and
+the figure-crop sink."""
 
-import pytest
-from pyspark.sql import functions as F
-
-from high_performance_docling_spark.operators import (
-    dedup as DD,
-    text_analysis as TA,
-)
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet")
-
-
-def test_shingles_and_jaccard_identical_docs(spark):
-    df = spark.createDataFrame(
-        [(1, "w1 w2 w3 w4 w5"), (2, "w1 w2 w3 w4 w5"), (3, "x y z q r")],
-        ["doc_id", "text"],
-    )
-    sh = DD.shingles(df, n=3)
-    pairs = DD.ngram_jaccard_pairs(sh, threshold=0.9).collect()
-    assert [(r["a"], r["b"], r["jaccard"]) for r in pairs] == [(1, 2, 1.0)]
-
-
-def test_minhash_lsh_finds_identical_docs(spark):
-    df = spark.createDataFrame(
-        [(1, "w1 w2 w3 w4 w5 w6"), (2, "w1 w2 w3 w4 w5 w6"), (3, "a b c d e f")],
-        ["doc_id", "text"],
-    )
-    sig = DD.minhash_signatures(DD.shingles(df, n=3), n_hashes=16)
-    pairs = DD.lsh_candidate_pairs(sig, n_hashes=16, bands=4).collect()
-    assert [(r["a"], r["b"]) for r in pairs] == [(1, 2)]
-
-
-def test_simhash_identical_docs_equal_fp(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "zz yy xx")],
-        ["doc_id", "text"],
-    )
-    fps = {r["doc_id"]: r["simhash"] for r in DD.simhash(df).collect()}
-    assert fps[1] == fps[2]
-    assert fps[1] != fps[3]
+from high_performance_docling_spark.operators import text_analysis as TA
 
 
 def test_language_id_markers(spark):
@@ -58,14 +15,6 @@ def test_language_id_markers(spark):
     )
     out = {r["doc_id"]: r["lang_pred"] for r in TA.language_id(df).collect()}
     assert out == {1: "en", 2: "es", 3: "und"}
-
-
-def test_fingerprints_order_sensitive(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "c b a")], ["doc_id", "text"]
-    )
-    out = {r["doc_id"]: r["rolling_hash"] for r in TA.fingerprints(df).collect()}
-    assert out[1] != out[2]
 
 
 def test_figure_crops_decode_to_the_rendered_bitmap(spark):
@@ -121,35 +70,6 @@ def test_figure_crops_decode_to_the_rendered_bitmap(spark):
     # picture crops carry content, so the comparison above sees pixels
     assert all(px.min() < px.max() for px in map(want.get, got)
                if px.size > 1)
-
-
-def test_simhash_band_pairs_equals_all_pairs(spark, docs):
-    fp = DD.simhash(docs.limit(120), bits=16)
-    a, b = fp.alias("a"), fp.alias("b")
-    from pyspark.sql import functions as F
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    brute = sorted(
-        (r["x"], r["y"], r["hamming"])
-        for r in a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("x"), F.col("b.doc_id").alias("y"),
-                ham.alias("hamming"))
-        .filter(F.col("hamming") <= 3).collect()
-    )
-    banded = sorted(
-        (r["x"], r["y"], r["hamming"])
-        for r in DD.simhash_band_pairs(fp, bits=16, bands=4, max_hamming=3).collect()
-    )
-    assert banded == brute and len(brute) > 0
-
-
-def test_ngram_jaccard_stop_shingle_cap(spark):
-    # a shingle present in every doc is excluded from the universe when
-    # max_shingle_df caps it; jaccard is then over the filtered sets
-    rows = [(i, f"common one two unique{i} alpha beta gamma{i%2}") for i in range(6)]
-    sh = DD.shingles(spark.createDataFrame(rows, ["doc_id", "text"]), n=3)
-    uncapped = DD.ngram_jaccard_pairs(sh, threshold=0.01).collect()
-    capped = DD.ngram_jaccard_pairs(sh, threshold=0.01, max_shingle_df=6).collect()
-    assert len(uncapped) >= len(capped)
 
 
 def test_image_ops_kernels():
@@ -235,20 +155,6 @@ def test_extract_figures_joins_with_span_media_refs(spark):
     # determinism: same crop bytes on a second run
     figs2 = {f["media_ref"]: f["crop_sha"] for f in extract_figures(docs, cfg).collect()}
     assert {f["media_ref"]: f["crop_sha"] for f in figs} == figs2
-
-
-def test_connected_components_chain_and_islands(spark):
-    """Min-label propagation reaches the far end of a chain (needs
-    multiple iterations) and keeps islands separate."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5),      # chain → comp 1
-         (10, 11), (11, 12),                  # triangle-ish → comp 10
-         (20, 21)],                           # pair → comp 20
-        ["x", "y"],
-    )
-    out = {r["node"]: r["comp"] for r in DD.connected_components(pairs).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
-                   10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
 def test_gopher_quality_rules(spark):
@@ -350,21 +256,6 @@ def test_bilinear_resize_parity_with_reference_formula():
     assert np.allclose(resize_area(const, 7, 19), 77.0)
 
 
-def test_connected_components_raises_on_non_convergence(spark):
-    import pytest as _pytest
-
-    # a 6-hop path graph cannot reach the min-label fixpoint in 1 round
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)], ["x", "y"]
-    )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        DD.connected_components(pairs, max_iterations=1)
-    # and converges fine with headroom
-    labels = {r["node"]: r["comp"]
-              for r in DD.connected_components(pairs).collect()}
-    assert set(labels.values()) == {0}
-
-
 def test_with_confidence_on_staged_and_checkpointed_paths(spark, tmp_path):
     """The checkpointed path carries confidence as a per-page struct
     computed at the page grain (partial aggregation) through the elements
@@ -402,47 +293,3 @@ def test_with_confidence_on_staged_and_checkpointed_paths(spark, tmp_path):
     assert resumed == fused
 
 
-def test_star_cc_equals_label_propagation_on_pair_graph(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    fp = DD.simhash(docs, bits=16)
-    pairs = DD.simhash_band_pairs(fp, bits=16, bands=4, max_hamming=3)
-    a = {(r["node"], r["comp"])
-         for r in DD.connected_components(pairs).collect()}
-    b = {(r["node"], r["comp"])
-         for r in DD.connected_components_star(pairs).collect()}
-    assert a == b and len(a) > 100
-
-
-def test_star_cc_converges_on_long_chain_where_propagation_cannot(spark):
-    """A 300-hop path needs 299 min-label rounds (connected_components
-    raises at its 25-round budget) but O(log n) star alternations."""
-    import pytest as _pytest
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(300)], ["x", "y"]
-    )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        DD.connected_components(path)
-    labels = {r["node"]: r["comp"]
-              for r in DD.connected_components_star(path, max_iterations=15).collect()}
-    assert set(labels.values()) == {0} and len(labels) == 301
-
-
-def test_duplicate_substring_stats_island_merging(spark):
-    """Crafted docs: a 25-token block repeated in two docs yields SIX
-    duplicated 20-token windows each that must merge into ONE span of 25
-    tokens; a doc with no repeats reports zeros."""
-    block = " ".join(f"dup{i}" for i in range(25))
-    uniq1 = " ".join(f"u{i}" for i in range(30))
-    uniq2 = " ".join(f"v{i}" for i in range(30))
-    docs = spark.createDataFrame(
-        [(1, uniq1 + " " + block),
-         (2, block + " " + uniq2),
-         (3, " ".join(f"w{i}" for i in range(40)))],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: (r["n_dup_spans"], r["dup_tokens"], r["dup_frac"])
-           for r in DD.duplicate_substring_stats(docs, min_tokens=20).collect()}
-    assert got[1] == (1, 25, round(25 / 55, 4))
-    assert got[2] == (1, 25, round(25 / 55, 4))
-    assert got[3] == (0, 0, 0.0)
