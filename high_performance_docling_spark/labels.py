@@ -40,7 +40,6 @@ TEXT_ELEM_LABELS = {
     SECTION_HEADER, TEXT, CODE, CHECKBOX_SELECTED, CHECKBOX_UNSELECTED,
     TITLE,
 }
-PAGE_HEADER_LABELS = {PAGE_HEADER, PAGE_FOOTER}
 TABLE_LABELS = {TABLE, DOCUMENT_INDEX}
 FIGURE_LABEL = PICTURE
 CONTAINER_LABELS = {FORM, KEY_VALUE_REGION}

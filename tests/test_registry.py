@@ -1,11 +1,12 @@
-"""Registry consistency: every query callable is well-formed and reads
-only the `documents` table, every oracle parses in DuckDB against that
-table's schema, the rows-only set is exactly the documented pair of
+"""Registry consistency: the registry holds exactly the six extraction
+entries, every query callable builds its plan without running a job and
+reads only the `documents` table, every oracle parses in DuckDB against
+that table's schema, the rows-only set is exactly the documented pair of
 e2e extraction entries (whose gate is the pytest span-equality suite,
 not SQL), every package module is imported from a non-test entry
 point, every public operator function is named by one, every package
-function and class is named somewhere, and the extraction and
-streaming-extraction paths import none of the curation code."""
+function, class and constant is named somewhere, and the extraction
+and streaming-extraction paths do not import the registry."""
 
 import ast
 import subprocess
@@ -21,9 +22,14 @@ SF = "/root/testdata/sf0.001"
 TABLES = ["documents"]
 DOCS_PATH = f"{SF}/documents.parquet"
 ROWS_ONLY_ALLOWED = {"extract_spans_e2e", "extract_spans_ocr_e2e"}
+EXTRACTION_ENTRIES = ROWS_ONLY_ALLOWED | {
+    "latexize_formulas", "export_markdown", "detect_format",
+    "extract_html_spans",
+}
 
 
 def test_every_query_is_oracled_or_documented_rows_only():
+    assert set(QUERIES) == EXTRACTION_ENTRIES
     assert set(ORACLES) <= set(QUERIES)
     rows_only = set(QUERIES) - set(ORACLES)
     assert rows_only == ROWS_ONLY_ALLOWED
@@ -40,13 +46,9 @@ def test_all_oracles_parse_in_duckdb():
             raise AssertionError(f"oracle for {name!r} failed to plan: {e}")
 
 
-# Queries whose construction legitimately runs Spark jobs: model fitting
-# (the BPE merge rounds). Everything else must build lazily — no
-# .first()/.collect() hidden in plan construction (VERDICT r2 #7).
-CONSTRUCTION_RUNS_JOBS = {"bpe_train_merges"}
-
-
 def test_registry_construction_runs_no_jobs(spark):
+    """Every query builds lazily: no .first()/.collect() hidden in plan
+    construction."""
     sc = spark.sparkContext
     # warm the per-table parquet footer schema-inference job (memoized
     # in util.read_table) so it can't be mistaken for a query action
@@ -65,8 +67,6 @@ def test_registry_construction_runs_no_jobs(spark):
         # the registry reads the documents table and nothing else
         stray = [f for f in df.inputFiles() if DOCS_PATH not in f]
         assert not stray, f"{name} reads {stray}"
-        if name in CONSTRUCTION_RUNS_JOBS:
-            continue
         assert not jobs, (
             f"{name} ran {len(jobs)} Spark job(s) during plan construction"
         )
@@ -159,10 +159,23 @@ def test_every_public_operator_function_has_a_non_test_caller():
     assert [f"{mod}:{fn}" for mod, fn in defined if fn not in named] == []
 
 
+def _defined_names(node: ast.stmt) -> list[str]:
+    """The names a module-level statement defines: a function, a class,
+    or the plain-name targets of an assignment (dunders such as
+    ``__all__`` excepted)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    targets = (node.targets if isinstance(node, ast.Assign)
+               else [node.target] if isinstance(node, ast.AnnAssign) else [])
+    return [t.id for t in targets
+            if isinstance(t, ast.Name) and not t.id.startswith("__")]
+
+
 def test_every_package_function_and_class_is_named_somewhere():
-    """A module-level function or class that nothing names, not even a
-    test, is dead code. A name used only inside its own definition (a
-    recursive call) does not count."""
+    """A module-level function, class or constant that nothing names,
+    not even a test, is dead code. A name used only inside its own
+    definition (a recursive call, or the assignment itself) does not
+    count."""
     trees = {
         path: ast.parse(path.read_text())
         for path in [*_package_modules().values(), *REPO.glob("*.py"),
@@ -175,20 +188,16 @@ def test_every_package_function_and_class_is_named_somewhere():
     for tree in trees.values():
         named += _names_used(tree)
     unnamed = [
-        f"{path.relative_to(REPO / PKG)}:{node.name}"
+        f"{path.relative_to(REPO / PKG)}:{name}"
         for path in _package_modules().values()
         for node in trees[path].body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                             ast.ClassDef))
-        and named[node.name] == _names_used(node)[node.name]
+        for name in _defined_names(node)
+        if named[name] == _names_used(node)[name]
     ]
     assert sorted(unnamed) == []
 
 
-CURATION_MODULES = ["entry_queries"] + [
-    f"operators.{m}" for m in ("text_analysis", "lm_score", "url_ops",
-                               "profiling")
-]
+REGISTRY_MODULE = f"{PKG}.entry_queries"
 
 
 def _loaded_package_modules(*modules: str) -> set[str]:
@@ -207,13 +216,13 @@ def _loaded_package_modules(*modules: str) -> set[str]:
 
 def test_extraction_path_imports_no_curation_module():
     """What a Python worker loads for extraction (pipeline, oracle and
-    the stage functions) stays clear of the registry and its curation
-    operators, and the streaming extraction that ``ingest_job
+    the stage functions) stays clear of the query registry, and the
+    streaming extraction that ``ingest_job
     --streaming`` and ``warc_job`` load adds only its own two modules,
     each checked in a fresh interpreter."""
     loaded = _loaded_package_modules("pipeline", "oracle", "operators.stages")
     assert f"{PKG}.operators.stages" in loaded
-    assert sorted(loaded & {f"{PKG}.{m}" for m in CURATION_MODULES}) == []
+    assert REGISTRY_MODULE not in loaded
     streaming = _loaded_package_modules("streaming.extract")
     assert sorted(
         streaming - loaded - {f"{PKG}.streaming", f"{PKG}.streaming.extract"}

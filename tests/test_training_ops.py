@@ -1,20 +1,5 @@
-"""Training-data pipeline operators: text analysis; the image kernels and
-the figure-crop sink."""
-
-from high_performance_docling_spark.operators import text_analysis as TA
-
-
-def test_language_id_markers(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the cat and the dog of the house"),
-            (2, "el perro y la casa de que en"),
-            (3, "zzz qqq www"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r["lang_pred"] for r in TA.language_id(df).collect()}
-    assert out == {1: "en", 2: "es", 3: "und"}
+"""The image kernels, the figure-crop sink and per-page confidence on
+both extraction paths."""
 
 
 def test_figure_crops_decode_to_the_rendered_bitmap(spark):
@@ -155,50 +140,6 @@ def test_extract_figures_joins_with_span_media_refs(spark):
     # determinism: same crop bytes on a second run
     figs2 = {f["media_ref"]: f["crop_sha"] for f in extract_figures(docs, cfg).collect()}
     assert {f["media_ref"]: f["crop_sha"] for f in figs} == figs2
-
-
-def test_gopher_quality_rules(spark):
-    """Gopher filter edges: short doc fails word-count floor; a doc with
-    long gibberish tokens fails mean-word-length / stopword rules."""
-    df = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat with joy and it was made of felt "
-                "and the day went on and on with more words to say here "
-                "about the cat and the mat and the felt and the joy that "
-                "it brought to everyone involved in the story today ok"),
-            (2, "short doc"),
-            (3, " ".join(["zzzzzzzzzzzzzzzzzzzzzz"] * 60)),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r for r in TA.gopher_quality(df).collect()}
-    assert out[1]["gopher_pass"] is True
-    assert out[2]["gopher_pass"] is False  # < 50 words
-    assert out[3]["gopher_pass"] is False  # mean word len 22 > 10, no stopwords
-    assert out[3]["stopword_hits"] == 0
-
-
-def test_bpe_token_profile_counts(spark):
-    df = spark.createDataFrame([(1, "Hello, world! it's 42 pies")], ["doc_id", "text"])
-    r = TA.bpe_token_profile(df).collect()[0]
-    assert r["n_bpe_tokens"] == 8  # Hello , world ! it 's 42 pies
-    assert r["chars_per_token"] == round(26 / 8, 4)
-
-
-def test_repetition_scores(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "spam ham spam ham spam ham spam ham"),   # heavy repetition
-            (2, "all words are fully distinct here now"), # none
-            (3, "single"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r for r in TA.repetition_scores(df).collect()}
-    assert out[1]["dup_token_frac"] > 0.7
-    assert out[1]["top_bigram_char_frac"] > 0.5  # "spam ham" dominates
-    assert out[2]["dup_token_frac"] == 0.0
-    assert out[3]["top_bigram_char_frac"] == 0.0  # no 2-grams
 
 
 def test_bilinear_resize_parity_with_reference_formula():

@@ -256,14 +256,11 @@ def test_read_warc_records_equals_whole_file_path(spark, tmp_path):
 
 
 def test_jsonl_corpus_source(spark, tmp_path):
-    """Pile/C4-style JSONL(.gz) ingestion → (doc_id, source, text) that
-    the text-analysis operators consume directly."""
+    """Pile/C4-style JSONL(.gz) ingestion → (doc_id, source, text) rows,
+    with an md5 id for a record that has none."""
     import gzip
     import json
 
-    from high_performance_docling_spark.operators.text_analysis import (
-        token_counts,
-    )
     from high_performance_docling_spark.sources import read_jsonl_corpus
 
     rows = [
@@ -281,8 +278,6 @@ def test_jsonl_corpus_source(spark, tmp_path):
     assert got["a2"]["source"] == "books"
     anon = [k for k in got if k not in ("a1", "a2")]
     assert len(anon) == 1 and len(anon[0]) == 32  # md5 fallback id
-    toks = {r["doc_id"]: r["n_tokens"] for r in token_counts(docs).collect()}
-    assert toks["a1"] == 3 and toks["a2"] == 2
 
 
 def test_warc_to_spans_through_spark(spark, tmp_path):
